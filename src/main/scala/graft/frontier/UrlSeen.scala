@@ -1,8 +1,9 @@
 package graft.frontier
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SerializableHadoopConf, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** URL-seen dedup layer (north rule): broadcast bloom → partitioned
@@ -33,8 +34,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *     task deserializes exactly its bucket's filter once; blobs move
   *     executor→executor, never through the driver.
   *   - the EXACT seen table (per-round deltas, union-read) confirms the
-  *     residue via left-anti join — only rows both sketches call "maybe"
-  *     pay the join.
+  *     residue via one conditional left-anti join — only rows both
+  *     sketches call "maybe" can match it and be dropped.
   */
 object UrlSeen {
 
@@ -47,6 +48,15 @@ object UrlSeen {
 
   def cuckooBucket(urlHash: Long, buckets: Int = CuckooBuckets): Int =
     Math.floorMod(urlHash, buckets.toLong).toInt
+
+  /** The session's Hadoop conf (spark.hadoop.* — s3a creds, endpoints)
+    * for executor-side FS calls; a bare `new Configuration()` would
+    * silently drop them. Broadcast once per call: captured in a task
+    * closure, the full conf (~1 000 properties, ~110 KB) would be
+    * deserialized by every task.
+    */
+  private def broadcastHadoopConf(spark: SparkSession): Broadcast[SerializableHadoopConf] =
+    spark.sparkContext.broadcast(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
 
   // ---------------------------------------------------------------------
   // Bloom layer — driver-held, incrementally maintained.
@@ -166,6 +176,10 @@ object UrlSeen {
     Seq.empty[(Int, Array[Byte])].toDF("bucket", "filter_bytes")
   }
 
+  private val CuckooSchema = StructType(Seq(
+    StructField("bucket", IntegerType, nullable = false),
+    StructField("filter_bytes", BinaryType)))
+
   /** Fold a round's delta (`url_hash` column) into the cuckoo state.
     * Cogroup on the bucket key: each task loads at most one blob,
     * inserts only the NEW keys (sorted → deterministic filter bytes for
@@ -173,6 +187,12 @@ object UrlSeen {
     * no delta pass through untouched. `perBucketCapacity` only applies
     * when a bucket's filter is first created; an over-full bucket
     * saturates (degrades to all-maybe) instead of corrupting.
+    *
+    * The cogroup runs on the frames' internal-row RDDs, not as a typed
+    * Dataset `groupByKey`/`cogroup`: the typed plan generated ~24
+    * classes (key appenders, sorts, object (de)serializers) for two
+    * columns of opaque bytes and longs, a quarter of Spark's default
+    * codegen cache.
     */
   /** Sharded-bloom spec for [[updateCuckoo]]: maintain one bloom filter
     * PER CUCKOO BUCKET as a blob file (`bloom-<bucket>.bin`) next to
@@ -194,20 +214,17 @@ object UrlSeen {
       blobDir: Option[String] = None,
       bloomShards: Option[BloomShardSpec] = None
   ): DataFrame = {
-    import spark.implicits._
     require(bloomShards.isEmpty || blobDir.isDefined,
       "sharded blooms need a blobDir to live in")
-    // the session's hadoop conf (spark.hadoop.* — s3a creds, endpoints)
-    // must reach the executor-side FS calls; a bare `new Configuration()`
-    // would silently drop them
-    val hconf = blobDir.map(_ =>
-      new org.apache.spark.sql.SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-    val deltaKeyed = delta.select(col("url_hash").cast("long")).as[Long]
-      .groupByKey(cuckooBucket(_, buckets))
+    val hconf = blobDir.map(_ => broadcastHadoopConf(spark))
+    val deltaKeyed = delta.select(col("url_hash").cast("long")).queryExecution.toRdd
+      .map { r => val h = r.getLong(0); (cuckooBucket(h, buckets), h) }
     val prevKeyed = prev.select(col("bucket").cast("int"), col("filter_bytes"))
-      .as[(Int, Array[Byte])].groupByKey(_._1)
-    deltaKeyed.cogroup(prevKeyed) { (bucket, newKeys, prevRows) =>
-      val prevBytes = prevRows.toSeq.headOption.map(_._2)
+      .queryExecution.toRdd.map(r => (r.getInt(0), r.getBinary(1)))
+    val partitioner = new org.apache.spark.HashPartitioner(
+      spark.sessionState.conf.numShufflePartitions)
+    val updated = deltaKeyed.cogroup(prevKeyed, partitioner).map { case (bucket, (newKeys, prevRows)) =>
+      val prevBytes = prevRows.headOption
       val keys = newKeys.toArray
       java.util.Arrays.sort(keys) // deterministic filter bytes per delta set
       val bytes =
@@ -223,12 +240,12 @@ object UrlSeen {
       // writes its blob file (idempotent: deterministic bytes + tmp +
       // rename), so the cuckoo layer costs ONE job per round instead of
       // a persist + parquet write + foreachPartition triple
-      blobDir.foreach(dir => writeBlobFile(dir, bucket, bytes, hconf.get.value))
+      blobDir.foreach(dir => writeBlobFile(dir, bucket, bytes, hconf.get.value.value))
       // sharded bloom rides the same pass: fold the delta into the
       // bucket's previous shard (read from the previous round's dir)
       // and write the updated shard beside the cuckoo blob
       bloomShards.foreach { spec =>
-        val conf = hconf.get.value
+        val conf = hconf.get.value.value
         val bf = spec.prevDir
           .flatMap(d => readBloomFile(s"$d/bloom-$bucket.bin", conf))
           .getOrElse(org.apache.spark.util.sketch.BloomFilter.create(
@@ -238,8 +255,9 @@ object UrlSeen {
         bf.writeTo(bos)
         writeBlobFileNamed(blobDir.get, s"bloom-$bucket.bin", bos.toByteArray, conf)
       }
-      Iterator.single((bucket, bytes))
-    }.toDF("bucket", "filter_bytes")
+      Row(bucket, bytes)
+    }
+    spark.createDataFrame(updated, CuckooSchema)
   }
 
   /** One raw blob file per bucket — the Iceberg-puffin-style sketch
@@ -311,8 +329,7 @@ object UrlSeen {
                       capacityPerShard: Long, fpp: Double,
                       buckets: Int = CuckooBuckets): Unit = {
     import spark.implicits._
-    val hconf = new org.apache.spark.sql.SerializableHadoopConf(
-      spark.sessionState.newHadoopConf())
+    val hconf = broadcastHadoopConf(spark)
     val cap = math.max(1024L, capacityPerShard)
     seen.select(col("url_hash").cast("long")).as[Long]
       .groupByKey(cuckooBucket(_, buckets))
@@ -321,7 +338,7 @@ object UrlSeen {
         keys.foreach(bf.putLong)
         val bos = new java.io.ByteArrayOutputStream()
         bf.writeTo(bos)
-        writeBlobFileNamed(dir, s"bloom-$bucket.bin", bos.toByteArray, hconf.value)
+        writeBlobFileNamed(dir, s"bloom-$bucket.bin", bos.toByteArray, hconf.value.value)
         bucket
       }.write.format("noop").mode("overwrite").save() // action drives the writes
     finishCuckooDir(dir, driverHadoopConf)
@@ -331,12 +348,11 @@ object UrlSeen {
     * legacy path; the crawl hot path uses the fused [[updateCuckoo]]).
     */
   def writeCuckooFiles(cuckoo: DataFrame, dir: String): Unit = {
-    val hconf = new org.apache.spark.sql.SerializableHadoopConf(
-      cuckoo.sparkSession.sessionState.newHadoopConf())
+    val hconf = broadcastHadoopConf(cuckoo.sparkSession)
     cuckoo.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      rows.foreach(r => writeBlobFile(dir, r.getInt(0), r.getAs[Array[Byte]](1), hconf.value))
+      rows.foreach(r => writeBlobFile(dir, r.getInt(0), r.getAs[Array[Byte]](1), hconf.value.value))
     }
-    finishCuckooDir(dir, hconf.value)
+    finishCuckooDir(dir, hconf.value.value)
   }
 
   private def driverHadoopConf: org.apache.hadoop.conf.Configuration =
@@ -395,15 +411,15 @@ object UrlSeen {
       cuckooDir: Option[String],
       buckets: Int = CuckooBuckets
   ): DataFrame = {
+    lazy val hconf = broadcastHadoopConf(spark)
     val mightContain: Column => Column = bloom match {
       case BroadcastBloom(bc) =>
         val f = udf { (h: Long) => bc.value.mightContainLong(h) }
         c => f(c)
       case ShardedBloom(dir) =>
-        val hconf = new org.apache.spark.sql.SerializableHadoopConf(
-          spark.sessionState.newHadoopConf())
+        val conf = hconf
         val f = udf { (h: Long) =>
-          BloomShardCache.get(dir, cuckooBucket(h, buckets), hconf.value) match {
+          BloomShardCache.get(dir, cuckooBucket(h, buckets), conf.value.value) match {
             case Some(bf) => bf.mightContainLong(h)
             case None => true // missing shard → downstream layers decide
           }
@@ -412,41 +428,43 @@ object UrlSeen {
       case NoBloom => _ => lit(true)
     }
 
-    val flagged = candidates
-      .select(col("url_canon"), col("url_hash").cast("long"),
-        col("priority").cast("double"), col("seq").cast("long"))
-      .withColumn("maybe_seen", mightContain(col("url_hash")))
-    val definitelyNew = flagged.filter(!col("maybe_seen")).drop("maybe_seen")
-    val maybeSeen = flagged.filter(col("maybe_seen")).drop("maybe_seen")
-
-    val cleared = cuckooDir.filter(cuckooFilesReady) match {
-      case None => maybeSeen.withColumn("sketch_new", lit(false))
-      case Some(dir) =>
-        val hconf = new org.apache.spark.sql.SerializableHadoopConf(
-          spark.sessionState.newHadoopConf())
-        val cuckooMaybe = udf { (h: Long) =>
-          CuckooFileCache.get(dir, cuckooBucket(h, buckets), hconf.value) match {
-            case Some(cf) => cf.mightContain(h)
-            case None => true // missing blob → exact join decides
-          }
+    // no blob dir yet (cold start) → every row stays maybe-seen. Still
+    // the same UDF: a constant would give the cold-start round a plan
+    // (and generated classes) of its own.
+    val blobs = cuckooDir.filter(cuckooFilesReady).map(dir => (dir, hconf))
+    val cuckooMaybe = udf { (h: Long) =>
+      blobs.forall { case (dir, conf) =>
+        CuckooFileCache.get(dir, cuckooBucket(h, buckets), conf.value.value) match {
+          case Some(cf) => cf.mightContain(h)
+          case None => true // missing blob → exact join decides
         }
-        maybeSeen.withColumn("sketch_new", !cuckooMaybe(col("url_hash")))
+      }
     }
 
-    val sketchNew = cleared.filter(col("sketch_new")).drop("sketch_new")
-    val confirmed = cleared.filter(!col("sketch_new")).drop("sketch_new")
-      // exact confirm (left-anti) ONLY for double-maybe rows. The seen
-      // side is explicitly hinted away from a broadcast: Catalyst's size
-      // estimate would happily broadcast a small seen table — i.e.
-      // collect the WHOLE seen set through the driver every round, the
-      // exact funnel this layer exists to avoid (at 10^10 it's fatal;
-      // here it was measured as ~3-5 s/round of driver-serial time).
-      // shuffle_hash keeps both sides distributed, and the candidates'
-      // exchange from the upstream url_canon dedup is reused.
-      .join(seen.select(col("url_canon")).hint("shuffle_hash"),
-        Seq("url_canon"), "left_anti")
-
-    definitelyNew.unionByName(sketchNew).unionByName(confirmed)
+    // a row needs the exact check only when BOTH sketches say maybe
+    // (`&&` short-circuits: the cuckoo probes only the bloom's maybe
+    // residue). ONE conditional left-anti join then drops exactly the
+    // double-maybe rows the seen table holds: a row the sketches
+    // cleared fails the join's `maybe_seen` conjunct, so it never
+    // matches and passes. One plan instead of a three-way union of
+    // sketch tiers, each of which re-ran the upstream dedup (and, under
+    // AQE, the whole frontier lineage below it).
+    //
+    // The seen side is explicitly hinted away from a broadcast:
+    // Catalyst's size estimate would happily broadcast a small seen
+    // table — i.e. collect the WHOLE seen set through the driver every
+    // round, the exact funnel this layer exists to avoid (at 10^10 it's
+    // fatal; here it was measured as ~3-5 s/round of driver-serial
+    // time). shuffle_hash keeps both sides distributed, and the
+    // candidates' partitioning from the upstream url_canon dedup serves
+    // the join as is.
+    candidates
+      .select(col("url_canon"), col("url_hash").cast("long"),
+        col("priority").cast("double"), col("seq").cast("long"))
+      .withColumn("maybe_seen", mightContain(col("url_hash")) && cuckooMaybe(col("url_hash")))
+      .join(seen.select(col("url_canon").as("seen_url")).hint("shuffle_hash"),
+        col("url_canon") === col("seen_url") && col("maybe_seen"), "left_anti")
+      .drop("maybe_seen")
   }
 
   /** Broadcast-bloom convenience overload (the north-rule default). */

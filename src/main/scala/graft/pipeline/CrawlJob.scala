@@ -7,8 +7,12 @@ import graft.model._
 import graft.operators.SpanOps
 import graft.sources.{SnapshotStore, SyntheticWeb}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** The crawl archetype end-to-end (SURVEY.md §3.1 re-expressed):
   *
@@ -21,13 +25,32 @@ import org.apache.spark.sql.functions._
   *   snapshot so the job resumes from the last committed round.
   *
   * Physical-plan budget per round (scale discipline):
+  *   - A FIXED number of Spark jobs per round, the same at every round
+  *     ≥ 1 (CrawlJobSpec pins it). Without AQE that is ten: one per
+  *     table write, the robots broadcast, the metrics collect and the
+  *     bloom-delta collect. The state reload after a commit runs none:
+  *     snapshot tables carry their schema (SnapshotStore `_SCHEMA`), so
+  *     no read infers one from footers. Inference there cost one job
+  *     per snapshot read, so round r paid r+4 reload jobs and a crawl
+  *     O(r²) jobs over its life.
+  *   - Generated code shared by every round, and few enough classes to
+  *     fit Spark's default codegen cache (`spark.sql.codegen.cache.
+  *     maxEntries` = 100) with margin: ~70 entries for a 4-round crawl,
+  *     counting the driver-side and the task-side compile of each class
+  *     (CrawlJobSpec pins a repeated crawl's compiles). Hence no
+  *     per-round literals in plans (see [[roundValue]]), cold-start plans
+  *     shaped like the steady state's, one anti-join in the seen
+  *     layer, per-partition metrics without an aggregation plan, and the
+  *     cuckoo fold on RDDs. A crawl whose classes outgrow the cache
+  *     evicts them in LRU order and recompiles them all on the next
+  *     crawl in the same JVM: ~19% of steady-state executor CPU.
   *   - ONE full shuffle: the politeness repartition by salted host-hash.
   *     Admission, the sorted frontier write, the fetch and the
   *     output-span write all stay in those partitions — no re-shuffle
   *     of the heavy span payloads.
-  *   - The seen layer touches only the bloom's "maybe-seen" residue:
-  *     one cogroup shuffle against the partitioned cuckoo blobs, then a
-  *     left-anti join of the double-maybe rows against the exact table.
+  *   - The seen layer probes the bloom and the cuckoo blobs map-side,
+  *     then ONE conditional left-anti join against the exact table drops
+  *     the double-maybe rows it holds.
   *   - Robots rules and host map are broadcast; the bloom is ONE
   *     driver-held filter maintained by O(delta) inserts per round (the
   *     north star mandates a broadcast bloom); cuckoo blobs live in a
@@ -55,6 +78,67 @@ object CrawlJob {
 
   final case class CrawlSummary(rounds: Seq[RoundStats], seenTotal: Long, wallMs: Long)
 
+  /** One row of the per-round `metrics` table (`outlinks_total` feeds
+    * [[RoundStats]] and is not written).
+    */
+  final case class PartitionMetrics(
+      partition_id: Int, round: Int, urls_fetched: Long, urls_converted: Long,
+      bytes_total: Long, failed_count: Long, unique_origins: Long,
+      heaviest_url: String, heaviest_bytes: Long, outlinks_total: Long,
+      redirects_total: Long)
+
+  /** The fetch columns [[partitionMetrics]] reads, in its order. */
+  private def metricsInput(fetched: DataFrame): DataFrame = fetched.select(
+    col("partition_id"), col("round"), col("error"), col("status"), col("bytes"),
+    col("host"), col("url_canon"), size(col("outlinks")), col("redirects"))
+
+  /** A fetch partition's lineage metrics in one pass over its rows. All
+    * rows of a fetch partition carry that partition's id, so each
+    * (partition_id, round) group IS one partition — no shuffle, no
+    * aggregation plan. The columns keep the aggregate semantics they
+    * had as a `groupBy`: `unique_origins` is `approx_count_distinct`'s
+    * HLL++ estimate (same helper, same 0.05 relative error),
+    * `heaviest_url` is `max_by`'s first row with the largest `bytes`,
+    * and a null error counts as neither converted nor failed.
+    */
+  private def partitionMetrics(rows: Iterator[InternalRow]): Iterator[PartitionMetrics] =
+    if (!rows.hasNext) Iterator.empty
+    else {
+      val hll = new HyperLogLogPlusPlusHelper(0.05)
+      val registers = new GenericInternalRow(Array.fill[Any](hll.numWords)(0L))
+      var partitionId, round = -1
+      var heaviestUrl: String = null
+      var fetched, converted, bytes, failed, heaviestBytes, outlinks, redirects = 0L
+      rows.foreach { r =>
+        if (fetched == 0) { partitionId = r.getInt(0); round = r.getInt(1) }
+        fetched += 1
+        if (!r.isNullAt(2)) {
+          if (r.getUTF8String(2).numBytes() > 0) failed += 1
+          else if (r.getInt(3) == 200) converted += 1
+        }
+        val b = r.getLong(4)
+        bytes += b
+        if (!r.isNullAt(5)) hll.update(registers, 0, r.getUTF8String(5), StringType)
+        if (fetched == 1 || b > heaviestBytes) {
+          heaviestUrl = Option(r.getUTF8String(6)).map(_.toString).orNull; heaviestBytes = b
+        }
+        outlinks += r.getInt(7)
+        redirects += r.getInt(8)
+      }
+      Iterator.single(PartitionMetrics(partitionId, round, fetched, converted, bytes, failed,
+        hll.query(registers, 0), heaviestUrl, heaviestBytes, outlinks, redirects))
+    }
+
+  /** The round as a Column that generated code does not inline. Spark
+    * writes integer literals into the generated classes, so `lit(round)`
+    * gives every round its own classes, and a crawl's classes outgrow
+    * the session's codegen cache (100 entries by default), which then
+    * recompiles them on every crawl. A UDF is never constant-folded:
+    * its value reaches the code through the references array, and all
+    * rounds share one class.
+    */
+  private def roundValue(round: Int): Column = udf(() => round).apply()
+
   private val timing = sys.env.get("GRAFT_TIMING").contains("1")
 
   private def timed[A](label: String)(f: => A): A = {
@@ -81,7 +165,12 @@ object CrawlJob {
     val t0 = System.nanoTime()
     val store = new SnapshotStore(storeRoot)
 
-    val emptySeen = Seq.empty[SeenUrl].toDF()
+    // cold-start seen set as an empty RDD-backed frame, not an empty
+    // local relation: the optimizer prunes the anti-join against a
+    // relation it knows is empty, which would give round 0 a frontier
+    // plan — and generated classes — of its own
+    val emptySeen = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      Seq.empty[SeenUrl].toDF().schema)
 
     // ---- resume from the last committed snapshot (north rule) ----
     val startRound = store.currentSnapshot.map(_ + 1).getOrElse(0)
@@ -119,7 +208,7 @@ object CrawlJob {
         .filter(store.hasTable(_, "url_seen_delta"))
         .map(c => store.readSeen(spark, c)).getOrElse(emptySeen)
     var pending: Dataset[PendingUrl] =
-      if (startRound == 0) seeds.map(s => PendingUrl(s.url, s.priority, s.seq))
+      if (startRound == 0) seeds.toDF().as[PendingUrl]
       else store.readOrEmpty(spark, store.currentSnapshot,
         "pending", Seq.empty[PendingUrl].toDF()).as[PendingUrl]
     var seenCount: Long = if (startRound == 0) 0L else seen.count()
@@ -229,6 +318,15 @@ object CrawlJob {
       }
     def await[A](f: scala.concurrent.Future[A]): A =
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+    // main-thread jobs: the label is restored to the caller's afterwards,
+    // or it would name every later main-thread job (the state reload,
+    // the next round's jobs) to listeners keyed by these labels
+    def labelled[A](label: String)(f: => A): A = {
+      val sc = spark.sparkContext
+      val caller = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(label)
+      try f finally sc.setJobDescription(caller)
+    }
 
     try {
     while (continue && round < startRound + cfg.maxRounds) {
@@ -284,7 +382,7 @@ object CrawlJob {
         .withColumn("host", graft.functions.UrlExprs.host(col("url_canon")))
         .withColumn("host_hash",
           UrlFunctions.hostSaltCol(col("host"), col("url_hash"), cfg.saltsPerHost))
-        .withColumn("round", lit(round))
+        .withColumn("round", roundValue(round))
         .withColumn("url", lit(""))
         .select("url", "url_canon", "url_hash", "host", "host_hash", "priority", "seq", "round")
         .as[FrontierEntry]
@@ -304,11 +402,10 @@ object CrawlJob {
       // 7. sorted frontier snapshot — already partitioned by host_hash
       //    from the admission shuffle; sort within, no re-shuffle.
       //    `url` (blanked for the shuffle) is restored for the table.
-      spark.sparkContext.setJobDescription("frontier-write")
-      timed("frontier-write")(store.write(admitted.toDF()
+      labelled("frontier-write")(timed("frontier-write")(store.write(admitted.toDF()
         .withColumn("url", col("url_canon"))
         .sortWithinPartitions(col("priority").desc, col("seq"), col("url_canon")),
-        round, "frontier"))
+        round, "frontier")))
       val robotsMetrics = robotsObs.get
       val (candidateCount, deniedCount) =
         if (robotsMetrics.contains("total"))
@@ -383,36 +480,23 @@ object CrawlJob {
 
       // 9. outputs: spans snapshot (sorted in-partition, no re-shuffle of
       //    the heavy payload) + per-partition lineage metrics
-      spark.sparkContext.setJobDescription("spans-write")
-      timed("fetch+convert+spans-write")(store.write(
+      labelled("spans-write")(timed("fetch+convert+spans-write")(store.write(
         fetched.filter(r => r.error.isEmpty && r.status == 200)
           .select($"doc_id", $"spans", $"round")
           .sortWithinPartitions("doc_id"),
-        round, "output_spans"))
+        round, "output_spans")))
 
       // ---- steps 9-11 are independent jobs over the cached frames;
       //      each runs on the io pool, awaited together before commit ----
 
-      // per-partition lineage metrics: ONE aggregation job; the rows are
-      // tiny (≤ numPartitions), so global fetch stats derive locally and
-      // the metrics table is written from the collected rows
-      val metricsDf = fetched.toDF().groupBy("partition_id", "round").agg(
-        count(lit(1)).as("urls_fetched"),
-        sum(when(col("error") === "" && col("status") === 200, 1L).otherwise(0L))
-          .as("urls_converted"),
-        sum("bytes").as("bytes_total"),
-        sum(when(col("error") =!= "", 1L).otherwise(0L)).as("failed_count"),
-        approx_count_distinct("host").as("unique_origins"),
-        max_by(col("url_canon"), col("bytes")).as("heaviest_url"),
-        max("bytes").as("heaviest_bytes"),
-        sum(size(col("outlinks"))).as("outlinks_total"),
-        // appended LAST: the positional reads below (urls_fetched at 2,
-        // failed_count at 5, outlinks_total at 9) must stay stable
-        sum(col("redirects").cast("long")).as("redirects_total"))
+      // per-partition lineage metrics: one pass over each cached fetch
+      // partition, no shuffle; the rows are tiny (≤ numPartitions), so
+      // global fetch stats derive locally and the metrics table is
+      // written from the collected rows
       val metricsFut = job("metrics") {
-        val rows = metricsDf.collect()
-        store.write(spark.createDataFrame(java.util.Arrays.asList(rows: _*), metricsDf.schema)
-          .drop("outlinks_total").coalesce(1), round, "metrics")
+        val rows = metricsInput(fetched.toDF()).queryExecution.toRdd
+          .mapPartitions(partitionMetrics).collect()
+        store.write(rows.toSeq.toDF().drop("outlinks_total").coalesce(1), round, "metrics")
         rows
       }
 
@@ -452,10 +536,10 @@ object CrawlJob {
           val (pairs, deltaIndex, caches) = Dedup.minhashIncrementalPairsWithCaches(
             docsRound, corpus, index,
             k = dedupShingleK, threshold = dedupThreshold, seed = cfg.seed)
-          store.write(pairs.withColumn("round", lit(round)), round, "doc_dup_pairs")
+          store.write(pairs.withColumn("round", roundValue(round)), round, "doc_dup_pairs")
           // `round` makes the index compactable (hidden-partitioned by
           // round) under cfg.compactEvery maintenance
-          store.write(deltaIndex.withColumn("round", lit(round)), round, "minhash_index")
+          store.write(deltaIndex.withColumn("round", roundValue(round)), round, "minhash_index")
           // release the stage's caches — a long crawl must not
           // accumulate per-round cached frames (the admissions/fetched
           // discipline of the main loop)
@@ -536,9 +620,9 @@ object CrawlJob {
       // barrier: everything staged under v<round> must exist before the
       // atomic commit makes the snapshot visible
       val metricRows = await(metricsFut)
-      val fetchedCount = metricRows.map(_.getLong(2)).sum
-      val failedCount = metricRows.map(_.getLong(5)).sum
-      val outlinkCount = metricRows.map(r => if (r.isNullAt(9)) 0L else r.getLong(9)).sum
+      val fetchedCount = metricRows.map(_.urls_fetched).sum
+      val failedCount = metricRows.map(_.failed_count).sum
+      val outlinkCount = metricRows.map(_.outlinks_total).sum
       Seq(fetchLogFut, seenFut, bloomFut, cuckooFut, pendingFut, dedupFut).foreach(await)
 
       // 12. atomic commit → resumable checkpoint. With cfg.wapAudit the
@@ -559,17 +643,16 @@ object CrawlJob {
           "dedup_threshold" -> dedupThreshold.toString) else Map.empty)
       if (cfg.wapAudit) {
         store.stage(round, round, commitMeta)
-        spark.sparkContext.setJobDescription("wap-audit")
         // structural audit over the STAGED snapshot: the seen delta must
         // carry exactly the admitted rows, every row canonical and
         // stamped with this round — one count-shaped aggregate
         val audited =
           if (!store.hasTable(round, "url_seen_delta")) (0L, 0L)
-          else {
+          else labelled("wap-audit") {
             val r = store.read(spark, round, "url_seen_delta").agg(
               count(lit(1)),
               coalesce(sum(when(col("url_canon").isNull ||
-                col("round_first_seen") =!= round, 1L).otherwise(0L)), lit(0L))).head()
+                col("round_first_seen") =!= roundValue(round), 1L).otherwise(0L)), lit(0L))).head()
             (r.getLong(0), r.getLong(1))
           }
         if (audited._1 != admittedCount || audited._2 != 0L) {
@@ -594,8 +677,7 @@ object CrawlJob {
       // BEFORE the state reload below, so the reloaded frames plan over
       // the post-maintenance file set — never over paths expiry removed.
       if (cfg.compactEvery > 0 && (round + 1) % cfg.compactEvery == 0) {
-        spark.sparkContext.setJobDescription("snapshot-maintenance")
-        timed("compact+expire") {
+        labelled("snapshot-maintenance")(timed("compact+expire") {
           // a table may exist only in EARLIER snapshots (an empty round,
           // or dedupDocs toggled off after indexed rounds) — the guard
           // must scan the whole history or expiry would strand live rows
@@ -611,7 +693,7 @@ object CrawlJob {
           Seq("output_spans", "fetch_log", "doc_dup_pairs", "metrics")
             .filter(anywhere).foreach(t => store.relocateDeltas(round, t))
           store.expireSnapshots()
-        }
+        })
       }
 
       // reload state from the committed snapshot (truncates lineage —

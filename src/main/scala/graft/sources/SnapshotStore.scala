@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -13,6 +14,7 @@ import scala.jdk.CollectionConverters._
   * Layout:
   * {{{
   *   <root>/v<N>/<table>/           parquet data per snapshot
+  *   <root>/v<N>/<table>/_SCHEMA    the table's schema (JSON)
   *   <root>/v<N>/MANIFEST.json      tables + row counts + round
   *   <root>/CURRENT                 text file: committed snapshot id
   * }}}
@@ -47,23 +49,47 @@ final class SnapshotStore(val root: String) {
   private def transformMarker(id: Int, table: String): Path =
     Paths.get(tablePath(id, table), "_PARTITION_TRANSFORM")
 
+  /** The table's schema, kept as table METADATA as Iceberg does: every
+    * write records it in a `_SCHEMA` marker beside the data, and
+    * maintenance keeps it current. Reads hand it to the scan, so opening
+    * a table runs no footer-inference Spark job — the crawl reloads its
+    * state after every commit, and inference there cost one job per
+    * snapshot read.
+    */
+  def schema(id: Int, table: String): StructType = {
+    val m = Paths.get(tablePath(id, table), "_SCHEMA")
+    require(Files.exists(m), s"table $table of snapshot $id has no recorded schema ($m)")
+    DataType.fromJson(Files.readString(m)).asInstanceOf[StructType]
+  }
+
+  /** Record `s` as the schema of the table staged in `dir`: the
+    * nullable form, exactly what footer inference of the written files
+    * yields (file sources read every column as nullable).
+    */
+  private def recordSchema(dir: Path, s: StructType): Unit =
+    Files.writeString(dir.resolve("_SCHEMA"), GraftBridge.asNullable(s).json)
+
+  /** Add-column evolution of recorded schemas: the earliest schema's
+    * columns in order, then each later schema's new columns — the
+    * column order `unionByName(allowMissingColumns)` produces.
+    */
+  private def evolve(schemas: Seq[StructType]): StructType =
+    schemas.reduce { (acc, s) =>
+      StructType(acc.fields ++ s.fields.filterNot(f => acc.fieldNames.contains(f.name)))
+    }
+
   def read(spark: SparkSession, id: Int, table: String): DataFrame = {
     // a maintained base can hold files of MIXED schemas in one dir (the
     // incremental carry renames pre-evolution partitions in beside the
-    // rewritten tail); without footer merging a single arbitrary footer
-    // would win and silently drop an added column. Plain per-round
-    // deltas stay on the cheap single-footer path.
-    val reader =
-      if (partitionTransform(id, table).isDefined)
-        spark.read.option("mergeSchema", "true")
-      else spark.read
-    val df = reader.parquet(tablePath(id, table))
+    // rewritten tail): the recorded schema is their evolution, and the
+    // scan projects null for columns a file lacks
+    val df = spark.read.schema(schema(id, table)).parquet(tablePath(id, table))
     if (df.columns.contains(HiddenPartCol)) df.drop(HiddenPartCol) else df
   }
 
   def readOrEmpty(spark: SparkSession, id: Option[Int], table: String, like: DataFrame): DataFrame =
     id.filter(hasTable(_, table)) match {
-      case Some(s) => spark.read.parquet(tablePath(s, table))
+      case Some(s) => read(spark, s, table)
       case None => like.limit(0)
     }
 
@@ -87,12 +113,14 @@ final class SnapshotStore(val root: String) {
         df.sortWithinPartitions(sortWithinPartitionsBy.map(org.apache.spark.sql.functions.col): _*)
       else df
     out.write.mode(SaveMode.Overwrite).parquet(tablePath(id, table))
+    recordSchema(Paths.get(tablePath(id, table)), df.schema)
   }
 
   /** Stage a table with a HIDDEN partition: rows are laid out under
     * `_part=<value>` directories computed by `transform`, the transform
     * column never appears to readers (every read path drops it), and a
-    * `_PARTITION_TRANSFORM` marker records the transform name — the
+    * `_PARTITION_TRANSFORM` marker records the transform name (and
+    * `_SCHEMA` the schema readers see, without the column) — the
     * Iceberg hidden-partitioning contract (partitioning is table
     * metadata; predicates on partition VALUES prune files without the
     * schema ever carrying the derived column). Opt-in per table.
@@ -103,6 +131,7 @@ final class SnapshotStore(val root: String) {
     df.withColumn(HiddenPartCol, transform)
       .write.mode(SaveMode.Overwrite).partitionBy(HiddenPartCol)
       .parquet(tablePath(id, table))
+    recordSchema(Paths.get(tablePath(id, table)), df.schema)
     Files.writeString(transformMarker(id, table), transformName)
   }
 
@@ -127,11 +156,9 @@ final class SnapshotStore(val root: String) {
     val dirs = values.map(v => Paths.get(tablePath(id, table), s"$HiddenPartCol=$v"))
       .filter(Files.isDirectory(_)).map(_.toString)
     if (dirs.isEmpty) read(spark, id, table).limit(0)
-    else spark.read.option("basePath", tablePath(id, table))
-      // mixed schemas across carried partitions — see read()
-      .option("mergeSchema", "true")
-      .parquet(dirs: _*)
-      .drop(HiddenPartCol)
+    // mixed schemas across carried partitions — see read()
+    else spark.read.schema(schema(id, table)).option("basePath", tablePath(id, table))
+      .parquet(dirs: _*).drop(HiddenPartCol)
   }
 
   /** Atomically commit snapshot `id` with manifest metadata. */
@@ -323,6 +350,8 @@ final class SnapshotStore(val root: String) {
         p.getFileName.toString.startsWith(s"$HiddenPartCol=")).toSeq)
         .foreach(d => mergeMove(d, tmp.resolve(d.getFileName.toString)))
     }
+    // the base's schema: the carried rounds' evolved by the tail's
+    recordSchema(tmp, evolve((prevBase.toSeq ++ tailIds).map(schema(_, table))))
     // intent file: spans the swap → manifest window, during which the
     // pass leaves no staging/backup debris but is not yet recorded —
     // without it, a crash there would pass the resume fail-fast and
@@ -465,6 +494,9 @@ final class SnapshotStore(val root: String) {
     // of failing parquet schema inference on a dir with no footers
     listed(staging)(_.filter(Files.isDirectory(_)).toSeq)
       .filter(d => listed(d)(_.isEmpty)).foreach(Files.delete(_))
+    // the sources' schemas, evolved in snapshot order; the marker rides
+    // the swap in
+    recordSchema(staging, evolve(sources.map(schema(_, table))))
     // swap the assembled layout in (rename-aside, see swapStaged), then
     // mark + manifest BEFORE dropping the drained sources: once the
     // base is recorded as compacted, readers start their union at it
@@ -553,9 +585,11 @@ final class SnapshotStore(val root: String) {
     *     the scan would still read every snapshot's footers; the prune
     *     removes the files from the plan entirely.
     *   - ADD-COLUMN SCHEMA EVOLUTION: snapshots written before a column
-    *     existed project that column as null. When every snapshot still
-    *     shares one schema (the common case) the read stays a single
-    *     multi-path scan; mixed schemas fold with
+    *     existed project that column as null. The snapshots' recorded
+    *     schemas evolve into the read schema on the driver, so the read
+    *     is a single multi-path scan that runs no Spark job to plan.
+    *     Hidden-partitioned snapshots, whose directory layouts a
+    *     multi-root scan would try to unify, fold with
     *     `unionByName(allowMissingColumns)` — the union of parallel
     *     per-snapshot scans, no shuffle.
     */
@@ -577,7 +611,10 @@ final class SnapshotStore(val root: String) {
       }
     }
     require(pruned.nonEmpty, s"no $table deltas up to snapshot $upTo (rounds=$rounds)")
-    val frames = pruned.map { id =>
+    if (!pruned.exists(id => partitionTransform(id, table).isDefined))
+      spark.read.schema(evolve(pruned.map(schema(_, table))))
+        .parquet(pruned.map(tablePath(_, table)): _*)
+    else pruned.map { id =>
       rounds match {
         // the compacted base holds MANY rounds, hidden-partitioned by
         // the round column — a range read prunes its `_part=` dirs like
@@ -587,15 +624,7 @@ final class SnapshotStore(val root: String) {
             (math.max(lo, 0) to math.min(hi, snapshotRound(id))).map(_.toString))
         case _ => read(spark, id, table)
       }
-    }
-    val schemas = frames.map(_.schema).distinct
-    // hidden-partitioned snapshots have per-path directory layouts that
-    // a single multi-root scan would try to unify — route them through
-    // the per-snapshot union like mixed schemas
-    val anyHidden = pruned.exists(id => partitionTransform(id, table).isDefined)
-    if (schemas.size == 1 && !anyHidden)
-      spark.read.parquet(pruned.map(tablePath(_, table)): _*)
-    else frames.reduce(_.unionByName(_, allowMissingColumns = true))
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** The full URL-seen set as of snapshot `upTo`; `rounds` prunes to

@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The schema file sources report for data written with `s`. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }
 
 /** Serializable Hadoop `Configuration` carrier for task closures —

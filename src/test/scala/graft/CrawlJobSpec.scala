@@ -5,6 +5,9 @@ import graft.model.CrawlConfig
 import graft.pipeline.CrawlJob
 import graft.sources.{SnapshotStore, SyntheticWeb}
 import graft.testkit.ReferenceCrawl
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
@@ -318,5 +321,47 @@ class CrawlJobSpec extends SparkSpec {
     assert(badRows === 1L)
     store2.abandon(1)
     assert(store2.currentSnapshot === Some(0))
+  }
+
+  test("every round >= 1 runs the same number of Spark jobs (no reload job per snapshot)") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("crawl-jobs").toString
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+    }
+    val sc = spark.sparkContext
+    val t0 = System.currentTimeMillis()
+    sc.addSparkListener(listener)
+    val rounds =
+      try CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+        cfg.copy(maxRounds = 4), root).rounds
+      finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    assert(rounds.size === 4)
+    // a round's jobs start after the previous round's commit (the state
+    // reload after a commit belongs to the next round) and by its own
+    val store = new SnapshotStore(root)
+    val commits = rounds.map(r => Files.getLastModifiedTime(
+      java.nio.file.Paths.get(store.snapshotDir(r.round), "MANIFEST.json")).toMillis)
+    val bounds = (t0 +: commits).sliding(2).toSeq
+    val jobs = bounds.map { case Seq(a, b) => starts.toArray.count { t =>
+      val ms = t.asInstanceOf[Long]; ms > a && ms <= b } }
+    info(s"jobs per round: ${jobs.mkString(", ")}")
+    assert(jobs.tail.distinct.size === 1, s"jobs per round: ${jobs.mkString(", ")}")
+  }
+
+  test("a repeated crawl compiles almost no code: the crawl's classes fit the codegen cache") {
+    import spark.implicits._
+    // Spark's codegen cache keeps 100 classes (least recently used out);
+    // a crawl whose classes outgrow it recompiles all of them on the
+    // next crawl in the same JVM
+    def crawl(): Unit = CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+      cfg.copy(maxRounds = 4), Files.createTempDirectory("crawl-codegen").toString)
+    crawl()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    crawl()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    info(s"the second identical crawl compiled $compiled classes")
+    assert(compiled <= 12, s"the second identical crawl compiled $compiled classes")
   }
 }

@@ -1,7 +1,12 @@
 package graft
 
-import graft.sources.SnapshotStore
+import graft.model.CrawlConfig
+import graft.pipeline.CrawlJob
+import graft.sources.{SnapshotStore, SyntheticWeb}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 
@@ -14,6 +19,44 @@ class SnapshotStoreSpec extends SparkSpec {
 
   private def freshStore(): SnapshotStore =
     new SnapshotStore(Files.createTempDirectory("store-spec").toString)
+
+  /** The schema footer inference gives a table's files, without the
+    * hidden partition column — what reads saw before schemas were
+    * recorded.
+    */
+  private def inferred(store: SnapshotStore, id: Int, table: String): StructType =
+    StructType(spark.read.option("mergeSchema", "true").parquet(store.tablePath(id, table))
+      .schema.filterNot(_.name == "_part"))
+
+  /** Every table of every snapshot records exactly its inferred schema;
+    * returns the number of tables checked.
+    */
+  private def assertRecordedSchemas(store: SnapshotStore): Int = {
+    val tables = store.committedSnapshots.flatMap { id =>
+      Files.list(java.nio.file.Paths.get(store.snapshotDir(id))).toArray
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(p => Files.isDirectory(p) && !p.getFileName.toString.startsWith("."))
+        .map(p => id -> p.getFileName.toString)
+        .filter { case (i, t) => store.hasTable(i, t) }
+    }
+    tables.foreach { case (id, t) =>
+      assert(store.schema(id, t) === inferred(store, id, t), s"v$id/$t")
+    }
+    tables.size
+  }
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring[A](f: => A): Int = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try f finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    n.get()
+  }
 
   test("add-column schema evolution: old snapshots project null for new columns") {
     import spark.implicits._
@@ -338,5 +381,73 @@ class SnapshotStoreSpec extends SparkSpec {
     resumed.publish(1)
     assert(resumed.currentSnapshot === Some(1))
     assert(resumed.readSeen(spark, 1).count() === 2)
+  }
+
+  test("recorded schemas: every crawl table records its inferred schema, maintained bases too") {
+    import spark.implicits._
+    val universe = SyntheticWeb.Universe(numHosts = 11, pagesPerHost = 20,
+      seed = 3L, outlinksPerDoc = 3, spansPerDoc = 4)
+    val cfg = CrawlConfig(numPartitions = 4, saltsPerHost = 2, hostBudgetPerRound = 4,
+      maxRounds = 4, bloomExpectedItems = 1 << 12, dedupDocs = true)
+    def crawl(c: CrawlConfig): SnapshotStore = {
+      val store = freshStore()
+      CrawlJob.run(spark, universe.seedUrls(30).toDS(), SyntheticWeb.defaultRobots,
+        SyntheticWeb.hostMap(universe.numHosts).toDS(), universe, c, store.root)
+      store
+    }
+    // plain per-round deltas: frontier, output_spans, metrics, fetch_log,
+    // url_seen_delta, cuckoo, pending, doc_dup_pairs, minhash_index
+    val plain = crawl(cfg)
+    assert(assertRecordedSchemas(plain) >= 4 * 9)
+    // in-crawl maintenance: rewrite-compacted and rename-relocated
+    // hidden-partitioned bases keep a recorded schema of their own
+    val maintained = crawl(cfg.copy(compactEvery = 2))
+    assert(maintained.compactedTables(3).contains("url_seen_delta"))
+    assert(maintained.compactedTables(3).contains("output_spans"))
+    assertRecordedSchemas(maintained)
+  }
+
+  test("recorded schemas: add-column evolution across compaction and relocation") {
+    import spark.implicits._
+    val store = freshStore()
+    (0 to 3).foreach { r =>
+      val base = Seq((s"https://e/$r", r.toLong, r)).toDF("url_canon", "url_hash", "round_first_seen")
+      store.write(if (r >= 2) base.withColumn("src_tag", lit(s"t$r")) else base, r, "url_seen_delta")
+      store.write(base.select(col("url_canon").as("doc_id"), col("round_first_seen").as("round")),
+        r, "output_spans")
+      store.commit(r, r)
+    }
+    assert(store.schema(1, "url_seen_delta").fieldNames.toSeq ===
+      Seq("url_canon", "url_hash", "round_first_seen"))
+    // compact 0..1, then 2..3 on top: the second base carries the
+    // pre-evolution partitions beside the evolved tail
+    store.compactDeltas(spark, baseId = 1, table = "url_seen_delta")
+    store.compactDeltas(spark, baseId = 3, table = "url_seen_delta")
+    store.relocateDeltas(baseId = 3, table = "output_spans")
+    assert(store.schema(3, "url_seen_delta").fieldNames.toSeq ===
+      Seq("url_canon", "url_hash", "round_first_seen", "src_tag"))
+    assertRecordedSchemas(store)
+    val seen = store.readSeen(spark, 3)
+    assert(seen.filter(col("src_tag").isNull).count() === 2)
+    assert(store.readDeltas(spark, 3, "output_spans").count() === 4)
+    // hidden-partitioned write: the schema readers see, without `_part`
+    store.writeHiddenPartitioned(Seq(("u", 200)).toDF("url_canon", "status"), 4, "fetch_log_hp",
+      "status", col("status"))
+    assert(store.schema(4, "fetch_log_hp") === inferred(store, 4, "fetch_log_hp"))
+  }
+
+  test("readSeen over k snapshots plans without a Spark job") {
+    import spark.implicits._
+    val store = freshStore()
+    val k = 6
+    (0 until k).foreach { r =>
+      store.write(Seq((s"https://j/$r", r.toLong, r)).toDF("url_canon", "url_hash", "round_first_seen"),
+        r, "url_seen_delta")
+      store.commit(r, r)
+    }
+    var seen: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { seen = store.readSeen(spark, k - 1) } === 0)
+    assert(jobsDuring(store.read(spark, k - 1, "url_seen_delta")) === 0)
+    assert(seen.count() === k)
   }
 }
