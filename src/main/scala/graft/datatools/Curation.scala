@@ -1023,14 +1023,11 @@ object Curation {
       val best = pairCounts(sym, obs)
         .orderBy(col("pc").desc, col("l"), col("r")).limit(1).collect()
       obs.foreach { o =>
-        // AQE prunes the CollectMetrics node when the pair aggregation
-        // comes up EMPTY (the exhausted round), leaving an empty metric
-        // map — fall back to the dedicated total over the same sym
-        // (pre-mutation, exactly what the observation measured)
-        val tok = o.get.get("tok").flatMap(Option(_))
-          .map(_.asInstanceOf[Long])
-          .getOrElse(words.agg(sum(col("cnt") * size(split(trim(sym), " "))))
-            .first().getLong(0))
+        // AQE prunes the metric when the pair aggregation comes up
+        // EMPTY (the exhausted round) — recount the total over the same
+        // sym (pre-mutation, exactly what the observation measured)
+        val tok = Observations.observedOrRecount(o, "tok")(
+          words.agg(sum(col("cnt") * size(split(trim(sym), " ")))).first().getLong(0))
         pending.foreach { case (ri, l0, r0, pc0, ns0) =>
           out += ((ri, l0, r0, pc0, ns0, tok)) }
         pending = None

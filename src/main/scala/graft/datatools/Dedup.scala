@@ -752,8 +752,9 @@ object Dedup {
     * evaluated as a pure slot-equality predicate over the SAME persisted
     * all-pairs frame — no bucket explode, no per-config join, no second
     * text pass. Ground truth = exact shingle-set Jaccard ≥ `tauPpm`
-    * (intersections via one shingle-keyed equi-join, left-joined so
-    * disjoint pairs count as Jaccard 0).
+    * (Jaccard in parts per million; intersections via one shingle-keyed
+    * equi-join). `tauPpm` must be positive: truth pairs then share at
+    * least one shingle, and disjoint pairs (Jaccard 0) are never truth.
     *
     * Like the SimHash audit this is the TUNING operator, deliberately
     * quadratic in its input: run it on a hash-sampled slice; the
@@ -768,6 +769,7 @@ object Dedup {
     configs.foreach { case (b, r) =>
       require(b > 0 && r > 0 && b * r == slots,
         s"bands x rowsPerBand must equal slots=$slots: $b x $r") }
+    require(tauPpm > 0, "tauPpm must be positive (jppm = 0 pairs are non-truth)")
     // ZERO-EXCHANGE signature construction: the shingle array is
     // per-doc DISTINCT (ShinglesExpr), so slot i = array_min over
     // md5_48("i:shingle") of the array — identical to the former
@@ -808,12 +810,11 @@ object Dedup {
     // |docs|-sized signature cache, and the quadratic frame never
     // crosses an exchange at all (guide §2.3: shuffle keys and
     // metadata, never the bulk stream).
-    require(tauPpm > 0, "tauPpm must be positive (jppm = 0 pairs are non-truth)")
+    val candCounts = configs.indices.map(ci =>
+      sum(when(col(s"cand$ci"), 1L).otherwise(0L)).as(s"nc$ci"))
     val candAgg = sigs.as("a").join(sigs.as("b"), col("a.id") < col("b.id"))
       .select(candCols: _*)
-      .agg(count(lit(1)).as("n_pairs"),
-        configs.indices.map(ci =>
-          sum(when(col(s"cand$ci"), 1L).otherwise(0L)).as(s"nc$ci")): _*)
+      .agg(candCounts.head, candCounts.tail: _*)
     val inter = elems.as("x").join(elems.as("y"),
         col("x.e") === col("y.e") && col("x.id") < col("y.id"))
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))

@@ -96,12 +96,9 @@ object GraphOps {
           col("old"))
         .observe(obs, sum(when(col("lbl") =!= col("old"), 1L).otherwise(0L)).as("changed"))
         .localCheckpoint(true) // eager: next is materialized here
-      // a missing/empty metric map only occurs when the observed frame
-      // itself is empty (AQE prunes the CollectMetrics node with the
-      // empty subtree) — and an empty label frame has zero changes, so
-      // 0 is the exact answer, not a fallback approximation
-      changed = obs.get.get("changed").flatMap(Option(_))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      // a metric AQE pruned is recounted over the checkpointed rows
+      changed = Observations.observedOrRecount(obs, "changed")(
+        next.filter(col("lbl") =!= col("old")).count())
       // next's lineage is truncated, so the previous round's checkpoint
       // blocks are dead — release them or an R-round run pins R copies
       // of the node set
@@ -376,9 +373,7 @@ object GraphOps {
         .select(col("id"), lit(d).as("depth"))
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      // empty metric map ⇔ empty frontier (AQE prunes CollectMetrics
-      // with the empty subtree) — 0 is then the exact count
-      val n = obs.get.get("n").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val n = Observations.observedOrRecount(obs, "n")(next.count())
       // the previous level's frontier checkpoint is superseded (its
       // rows live on in `visited`); at d = 1 frontier IS visited — keep
       if (frontier ne visited) Checkpoints.release(frontier)

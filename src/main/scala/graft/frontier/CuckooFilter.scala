@@ -174,14 +174,8 @@ object CuckooFilter {
     new CuckooFilter(numBuckets, new Array[Short](numBuckets * SlotsPerBucket), 0L, 0x5bd1e995L)
   }
 
-  /** Parses both blob layouts: the current one (20-byte header + a
-    * saturated flag byte + 2 bytes/slot) and the legacy pre-saturation
-    * one (20-byte header + 2 bytes/slot, written by early snapshots the
-    * resume path still accepts). The two are distinguished by total
-    * length — `21 + 8·numBuckets` vs `20 + 8·numBuckets` — so no magic
-    * byte is needed and legacy blobs keep deserializing (a legacy
-    * filter was never able to saturate, so `saturated = false` is the
-    * faithful reading).
+  /** Parses the blob `toBytes` writes: a 20-byte header, a saturated
+    * flag byte and 2 bytes per slot. Any other length is rejected.
     */
   def fromBytes(bytes: Array[Byte]): CuckooFilter = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
@@ -189,13 +183,10 @@ object CuckooFilter {
     val kicksSeed = bb.getLong
     val numBuckets = bb.getInt
     val slots = numBuckets * SlotsPerBucket
-    val saturated = bytes.length match {
-      case n if n == 21 + 2 * slots => bb.get() != 0 // current layout
-      case n if n == 20 + 2 * slots => false         // legacy layout (no flag byte)
-      case n => throw new IllegalArgumentException(
-        s"cuckoo blob length $n matches neither layout for numBuckets=$numBuckets")
-    }
-    val table = new Array[Short](numBuckets * SlotsPerBucket)
+    require(bytes.length == 21 + 2 * slots,
+      s"cuckoo blob length ${bytes.length} does not match numBuckets=$numBuckets")
+    val saturated = bb.get() != 0
+    val table = new Array[Short](slots)
     var i = 0
     while (i < table.length) { table(i) = bb.getShort; i += 1 }
     new CuckooFilter(numBuckets, table, count, kicksSeed, saturated)

@@ -115,16 +115,6 @@ object UrlSeen {
     else partials.treeReduce((a, b) => { a.mergeInPlace(b); a })
   }
 
-  /** One-time full build (resume fallback when no persisted bloom
-    * exists — legacy snapshots only; the steady state is incremental).
-    */
-  def buildBloom(spark: SparkSession, seen: DataFrame, expectedItems: Long, fpp: Double): Broadcast[BloomFilter] = {
-    val bf =
-      if (seen.isEmpty) emptyBloom(expectedItems, fpp)
-      else bloomOfDelta(seen, expectedItems, fpp)
-    spark.sparkContext.broadcast(bf)
-  }
-
   def bloomToBytes(bf: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
@@ -303,10 +293,10 @@ object UrlSeen {
   }
 
   /** Whether `dir` holds at least one committed bloom shard
-    * (`bloom-<bucket>.bin` behind a `_DONE` marker). Used by the resume
-    * path to detect a checkpoint that predates sharded mode: trusting
-    * empty shards over a non-empty seen set would turn historical URLs
-    * into bloom false NEGATIVES and silently re-admit them.
+    * (`bloom-<bucket>.bin` behind a `_DONE` marker). A sharded resume
+    * with URLs seen requires it: empty shards over a non-empty seen set
+    * would turn historical URLs into bloom false NEGATIVES and silently
+    * re-admit them.
     */
   def bloomShardsPresent(dir: String, conf: org.apache.hadoop.conf.Configuration): Boolean = {
     import org.apache.hadoop.fs.Path
@@ -315,44 +305,6 @@ object UrlSeen {
     // globStatus returns null (not empty) when the parent dir is absent
     fs.exists(done) &&
       Option(fs.globStatus(new Path(s"$dir/bloom-*.bin"))).exists(_.nonEmpty)
-  }
-
-  /** One-time bloom-shard seed from the FULL seen table — the sharded
-    * twin of the legacy broadcast-bloom rebuild. Runs exactly when a
-    * crawl resumes in sharded mode from a checkpoint whose blob dir has
-    * no shards (pre-sharded checkpoints, or a broadcast→sharded
-    * migration): each bucket's shard is built executor-side from every
-    * historical url_hash, so shard "no" answers are trustworthy from
-    * the first resumed round. Cost is one O(seen) pass, paid once.
-    */
-  def seedBloomShards(spark: SparkSession, seen: DataFrame, dir: String,
-                      capacityPerShard: Long, fpp: Double,
-                      buckets: Int = CuckooBuckets): Unit = {
-    import spark.implicits._
-    val hconf = broadcastHadoopConf(spark)
-    val cap = math.max(1024L, capacityPerShard)
-    seen.select(col("url_hash").cast("long")).as[Long]
-      .groupByKey(cuckooBucket(_, buckets))
-      .mapGroups { (bucket, keys) =>
-        val bf = BloomFilter.create(cap, fpp)
-        keys.foreach(bf.putLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        writeBlobFileNamed(dir, s"bloom-$bucket.bin", bos.toByteArray, hconf.value.value)
-        bucket
-      }.write.format("noop").mode("overwrite").save() // action drives the writes
-    finishCuckooDir(dir, driverHadoopConf)
-  }
-
-  /** Standalone blob-file write of an existing cuckoo state (spec /
-    * legacy path; the crawl hot path uses the fused [[updateCuckoo]]).
-    */
-  def writeCuckooFiles(cuckoo: DataFrame, dir: String): Unit = {
-    val hconf = broadcastHadoopConf(cuckoo.sparkSession)
-    cuckoo.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      rows.foreach(r => writeBlobFile(dir, r.getInt(0), r.getAs[Array[Byte]](1), hconf.value.value))
-    }
-    finishCuckooDir(dir, hconf.value.value)
   }
 
   private def driverHadoopConf: org.apache.hadoop.conf.Configuration =
@@ -390,9 +342,10 @@ object UrlSeen {
   /** Filter `candidates` down to never-seen rows.
     *
     * `candidates` must carry exactly (url_canon, url_hash, priority,
-    * seq). `seen` is the exact table; `cuckooDir` points at blob files
-    * written by [[writeCuckooFiles]] (None or not-ready ⇒ the exact
-    * join decides everything the bloom flags).
+    * seq). `seen` is the exact table; `cuckooDir` points at the blob
+    * files [[updateCuckoo]] wrote with its `blobDir` and
+    * [[finishCuckooDir]] marked done (None or not-ready ⇒ the exact join
+    * decides everything the bloom flags).
     *
     * The cuckoo check (and the bloom check, in sharded mode) is
     * MAP-SIDE: each executor lazily reads the bucket blobs it needs
@@ -467,15 +420,6 @@ object UrlSeen {
       .drop("maybe_seen")
   }
 
-  /** Broadcast-bloom convenience overload (the north-rule default). */
-  def filterNew(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
-                bloom: Broadcast[BloomFilter], cuckooDir: Option[String]): DataFrame =
-    filterNew(spark, candidates, seen, BroadcastBloom(bloom), cuckooDir, CuckooBuckets)
-
-  /** Round-1 API shim for specs: full cuckoo state built from scratch. */
-  def buildCuckoo(spark: SparkSession, seen: DataFrame, expectedItems: Long): DataFrame =
-    updateCuckoo(spark, emptyCuckooState(spark), seen.select(col("url_hash")),
-      math.max(1024L, expectedItems / CuckooBuckets))
 }
 
 /** Executor-local blob-file cache: one storage read per (dir, bucket)

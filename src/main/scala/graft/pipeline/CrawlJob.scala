@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.datatools.Dedup
+import graft.datatools.Observations.observedOrRecount
 import graft.frontier.{Politeness, RobotsFilter, UrlSeen}
 import graft.functions.UrlFunctions
 import graft.model._
@@ -139,17 +140,9 @@ object CrawlJob {
     */
   private def roundValue(round: Int): Column = udf(() => round).apply()
 
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-
-  private def timed[A](label: String)(f: => A): A = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[crawl-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
+  /** The manifest keys every committed round writes and a resume needs. */
+  private val CheckpointKeys =
+    Seq("cuckoo_buckets", "bloom_capacity", "bloom_fpp", "bloom_sharded", "seen_total")
 
   def run(
       spark: SparkSession,
@@ -173,36 +166,63 @@ object CrawlJob {
       Seq.empty[SeenUrl].toDF().schema)
 
     // ---- resume from the last committed snapshot (north rule) ----
+    // A checkpoint is exactly what a round commits: the seen deltas, the
+    // `cuckoo` table and its blob dir, the bloom (`bloom.bin`, or
+    // `bloom-<bucket>.bin` shards beside the cuckoo blobs) and the
+    // manifest's [[CheckpointKeys]]. Resume reads that and nothing else.
+    // A missing sketch fails fast: rebuilt from nothing (or from one
+    // round's delta) it would answer "definitely new" for historical
+    // URLs and the crawl would re-admit them.
     val startRound = store.currentSnapshot.map(_ + 1).getOrElse(0)
-    // a crash MID-MAINTENANCE leaves staging/backup dot-dirs whose rows
-    // are invisible to readers — crawling over them would corrupt the
-    // seen/corpus invariants silently. Fail fast; the dot-dirs preserve
-    // every byte for repair.
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val resumeMeta: Map[String, String] =
+      store.currentSnapshot.map(store.manifestMeta).getOrElse(Map.empty)
     store.currentSnapshot.foreach { c =>
+      def need(present: Boolean, piece: String): Unit =
+        require(present, s"snapshot v$c has no $piece: it is not a checkpoint this crawl " +
+          "writes, so it cannot be resumed")
+      // a crash MID-MAINTENANCE leaves staging/backup dot-dirs whose rows
+      // are invisible to readers — crawling over them would corrupt the
+      // seen/corpus invariants silently. Fail fast; the dot-dirs preserve
+      // every byte for repair.
       val debris = store.maintenanceDebris(c)
       require(debris.isEmpty,
         s"snapshot v$c has interrupted-maintenance debris (${debris.mkString(", ")}): " +
           "repair (or remove after inspection) before resuming the crawl")
+      CheckpointKeys.foreach(k => need(resumeMeta.contains(k), s"manifest key $k"))
+      if (resumeMeta("seen_total").toLong > 0) {
+        need(store.hasTable(c, "cuckoo"), "cuckoo table")
+        val dir = store.snapshotDir(c)
+        if (resumeMeta("bloom_sharded").toBoolean)
+          need(UrlSeen.bloomShardsPresent(s"$dir/cuckoo_bin", hadoopConf), "bloom-*.bin shards")
+        else {
+          val bloomBin = new org.apache.hadoop.fs.Path(s"$dir/bloom.bin")
+          need(bloomBin.getFileSystem(hadoopConf).exists(bloomBin), "bloom.bin")
+        }
+      }
     }
-    // sketch partitioning is a property of the CHECKPOINT, not the
+    // Sketch geometry and mode are properties of the CHECKPOINT, not the
     // caller: resuming with a different cfg.cuckooBuckets would hash
     // url_hash to the wrong bucket-N.bin, turn cuckoo "no"s into lies
-    // and re-admit seen URLs — so the committed value always wins
-    val cuckooBuckets: Int = store.currentSnapshot
-      .flatMap(c => store.manifestMeta(c).get("cuckoo_buckets"))
-      .map(_.toInt).getOrElse(cfg.cuckooBuckets)
+    // and re-admit seen URLs — so the committed values always win.
+    val cuckooBuckets: Int =
+      resumeMeta.get("cuckoo_buckets").map(_.toInt).getOrElse(cfg.cuckooBuckets)
+    val bloomSharded: Boolean =
+      resumeMeta.get("bloom_sharded").map(_.toBoolean).getOrElse(cfg.bloomSharded)
+    val bloomCapacity: Long =
+      resumeMeta.get("bloom_capacity").map(_.toLong).getOrElse(cfg.bloomExpectedItems)
+    val bloomFpp: Double = resumeMeta.get("bloom_fpp").map(_.toDouble).getOrElse(cfg.bloomFpp)
     // same pinning for the doc-dedup shingle width: resuming with a
     // different k would band fresh signatures against incomparable
     // stored ones — the checkpoint's value wins
-    val dedupShingleK: Int = store.currentSnapshot
-      .flatMap(c => store.manifestMeta(c).get("dedup_k"))
-      .map(_.toInt).getOrElse(cfg.dedupShingleK)
+    val dedupShingleK: Int =
+      resumeMeta.get("dedup_k").map(_.toInt).getOrElse(cfg.dedupShingleK)
     // and the threshold: a mid-crawl switch would break the invariant
     // that the union of per-round doc_dup_pairs equals one batch LSH
     // run over all docs (CrawlDedupSpec/FIXTURES.md)
-    val dedupThreshold: Double = store.currentSnapshot
-      .flatMap(c => store.manifestMeta(c).get("dedup_threshold"))
-      .map(_.toDouble).getOrElse(cfg.dedupThreshold)
+    val dedupThreshold: Double =
+      resumeMeta.get("dedup_threshold").map(_.toDouble).getOrElse(cfg.dedupThreshold)
+    var seenCount: Long = resumeMeta.get("seen_total").map(_.toLong).getOrElse(0L)
     var seen: DataFrame =
       store.currentSnapshot
         .filter(store.hasTable(_, "url_seen_delta"))
@@ -211,11 +231,9 @@ object CrawlJob {
       if (startRound == 0) seeds.toDF().as[PendingUrl]
       else store.readOrEmpty(spark, store.currentSnapshot,
         "pending", Seq.empty[PendingUrl].toDF()).as[PendingUrl]
-    var seenCount: Long = if (startRound == 0) 0L else seen.count()
 
     // ---- incremental seen-sketch state (maintenance is O(round delta);
-    //      nothing below ever rebuilds from the seen union in steady
-    //      state — the resume paths read the persisted sketches) ----
+    //      nothing ever rebuilds from the seen union) ----
     // bloom: driver-held running filter; capacity fixed at creation so
     // per-round delta blooms stay merge-compatible. Persisted as a raw
     // blob file written FROM THE DRIVER (<snapshot>/bloom.bin +
@@ -223,70 +241,24 @@ object CrawlJob {
     // a one-row LocalRelation write would serialize the full filter
     // bytes into a task closure (the "task of very large size" warning)
     // and pay a Spark job for what is a single driver-side stream copy.
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val resumeMeta: Map[String, String] =
-      store.currentSnapshot.map(store.manifestMeta).getOrElse(Map.empty)
-    // sharded mode (10^10 escape hatch) is, like the bucket count, a
-    // property of the checkpoint
-    val bloomSharded: Boolean =
-      resumeMeta.get("bloom_sharded").map(_.toBoolean).getOrElse(cfg.bloomSharded)
-    // legacy snapshots persisted the bloom as a one-row parquet table
-    val legacyBloomRow =
-      if (bloomSharded) None
-      else store.currentSnapshot.filter(store.hasTable(_, "bloom"))
-        .map(c => store.read(spark, c, "bloom").head())
-    val bloomCapacity: Long = resumeMeta.get("bloom_capacity").map(_.toLong)
-      .orElse(legacyBloomRow.map(_.getLong(1)))
-      .getOrElse(math.max(cfg.bloomExpectedItems, seenCount * 2))
-    val bloomFpp: Double = resumeMeta.get("bloom_fpp").map(_.toDouble)
-      .orElse(legacyBloomRow.map(_.getDouble(2))).getOrElse(cfg.bloomFpp)
+    // An absent bloom.bin passed the guard above only with nothing seen.
     val bloomOpt: Option[org.apache.spark.util.sketch.BloomFilter] =
       if (bloomSharded) None // shards live beside the cuckoo blobs, executor-maintained
       else Some(store.currentSnapshot
         .flatMap(c => UrlSeen.readBloomFile(s"${store.snapshotDir(c)}/bloom.bin", hadoopConf))
-        .orElse(legacyBloomRow.map(r => UrlSeen.bloomFromBytes(r.getAs[Array[Byte]](0))))
-        .getOrElse {
-          if (seenCount > 0) UrlSeen.bloomOfDelta(seen, bloomCapacity, bloomFpp) // legacy rebuild
-          else UrlSeen.emptyBloom(bloomCapacity, bloomFpp)
-        })
+        .getOrElse(UrlSeen.emptyBloom(bloomCapacity, bloomFpp)))
     var bloomBcOpt = bloomOpt.map(spark.sparkContext.broadcast(_))
 
     // cuckoo: persisted (bucket, filter_bytes) parquet table (canonical,
     // resume source) + per-bucket raw blob FILES under
     // <snapshot>/cuckoo_bin (the lookup path: executors read their
-    // bucket straight from storage — puffin-style sketch files)
+    // bucket straight from storage — puffin-style sketch files). In
+    // sharded mode the bloom shards live in the same dir.
     val perBucketCapacity = math.max(1024L, bloomCapacity / cuckooBuckets)
     var cuckoo: DataFrame = store.currentSnapshot.filter(store.hasTable(_, "cuckoo"))
-      .map(c => store.read(spark, c, "cuckoo"))
-      .getOrElse {
-        if (seenCount == 0) UrlSeen.emptyCuckooState(spark)
-        else UrlSeen.updateCuckoo(spark, UrlSeen.emptyCuckooState(spark), // legacy one-time rebuild
-          seen.select("url_hash"), perBucketCapacity, cuckooBuckets).persist()
-      }
+      .map(c => store.read(spark, c, "cuckoo")).getOrElse(UrlSeen.emptyCuckooState(spark))
     var cuckooDir: Option[String] = store.currentSnapshot
       .map(c => s"${store.snapshotDir(c)}/cuckoo_bin")
-      .filter(UrlSeen.cuckooFilesReady)
-
-    // sharded mode's shard source. Normally the shards live beside the
-    // cuckoo blobs (they ride the same cogroup), but a checkpoint that
-    // PREDATES sharded mode (seen rows, no bloom-*.bin) must not start
-    // its shards empty: the first rounds would answer "definitely new"
-    // for historical URLs — a bloom false NEGATIVE that skips the cuckoo
-    // and exact layers entirely and re-admits seen URLs. The resume path
-    // seeds the shards ONCE from the full seen table (the sharded twin
-    // of the legacy broadcast-bloom rebuild) into an auxiliary dir.
-    var bloomShardDir: Option[String] =
-      if (!bloomSharded) None
-      else cuckooDir.filter(d => UrlSeen.bloomShardsPresent(d, hadoopConf)) match {
-        case ready @ Some(_) => ready
-        case None if seenCount > 0 =>
-          val dir = s"${store.snapshotDir(store.currentSnapshot.get)}/bloom_seed_bin"
-          if (!UrlSeen.bloomShardsPresent(dir, hadoopConf))
-            UrlSeen.seedBloomShards(spark, seen, dir,
-              math.max(1024L, bloomCapacity / cuckooBuckets), bloomFpp, cuckooBuckets)
-          Some(dir)
-        case None => None // cold start: empty shards are honestly empty
-      }
 
     val stats = scala.collection.mutable.ArrayBuffer.empty[RoundStats]
     var round = startRound
@@ -314,7 +286,7 @@ object CrawlJob {
         SparkSession.setActiveSession(spark)
         // thread-local: names this job's stages for the UI + profilers
         spark.sparkContext.setJobDescription(label)
-        timed(label)(f)
+        f
       }
     def await[A](f: scala.concurrent.Future[A]): A =
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
@@ -368,7 +340,7 @@ object CrawlJob {
       //    end of the previous round — nothing is rebuilt here
       val bloomLayer: UrlSeen.BloomLayer = bloomBcOpt match {
         case Some(bc) => UrlSeen.BroadcastBloom(bc)
-        case None => bloomShardDir.map(UrlSeen.ShardedBloom.apply).getOrElse(UrlSeen.NoBloom)
+        case None => cuckooDir.map(UrlSeen.ShardedBloom.apply).getOrElse(UrlSeen.NoBloom)
       }
       val newUrls = UrlSeen.filterNew(spark, dedup, seen, bloomLayer, cuckooDir, cuckooBuckets)
 
@@ -402,29 +374,17 @@ object CrawlJob {
       // 7. sorted frontier snapshot — already partitioned by host_hash
       //    from the admission shuffle; sort within, no re-shuffle.
       //    `url` (blanked for the shuffle) is restored for the table.
-      labelled("frontier-write")(timed("frontier-write")(store.write(admitted.toDF()
+      labelled("frontier-write")(store.write(admitted.toDF()
         .withColumn("url", col("url_canon"))
         .sortWithinPartitions(col("priority").desc, col("seq"), col("url_canon")),
-        round, "frontier")))
-      val robotsMetrics = robotsObs.get
-      val (candidateCount, deniedCount) =
-        if (robotsMetrics.contains("total"))
-          (robotsMetrics("total").asInstanceOf[Long], robotsMetrics("denied") match {
-            case null => 0L; case l: java.lang.Long => l.longValue(); case other => other.toString.toLong
-          })
-        else {
-          // AQE's empty-relation propagation can excise the
-          // CollectMetrics node when EVERY row of the round is filtered
-          // out downstream (an all-denied or all-seen round): once a
-          // shuffle stage materializes empty, the re-optimized final
-          // plan carries no observed metrics and the Observation
-          // resolves to an empty map. Re-derive the two counters with
-          // one tiny job over the pre-observe frame — a round that
-          // trips this is by construction near-empty.
-          val r = decidedRaw.agg(count(lit(1)),
-            sum(when(col("robots_verdict") =!= "ok", 1L).otherwise(0L))).head()
-          (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-        }
+        round, "frontier"))
+      // the metrics go missing when EVERY row of the round is filtered
+      // out downstream (an all-denied or all-seen round); both counters
+      // are then recounted by one tiny job over the pre-observe frame
+      lazy val robotsRecount = decidedRaw.agg(count(lit(1)),
+        coalesce(sum(when(col("robots_verdict") =!= "ok", 1L).otherwise(0L)), lit(0L))).head()
+      val candidateCount = observedOrRecount(robotsObs, "total")(robotsRecount.getLong(0))
+      val deniedCount = observedOrRecount(robotsObs, "denied")(robotsRecount.getLong(1))
       val admittedCount = admAcc.value.longValue()
       val deferredCount = defAcc.value.longValue()
 
@@ -480,11 +440,11 @@ object CrawlJob {
 
       // 9. outputs: spans snapshot (sorted in-partition, no re-shuffle of
       //    the heavy payload) + per-partition lineage metrics
-      labelled("spans-write")(timed("fetch+convert+spans-write")(store.write(
+      labelled("spans-write")(store.write(
         fetched.filter(r => r.error.isEmpty && r.status == 200)
           .select($"doc_id", $"spans", $"round")
           .sortWithinPartitions("doc_id"),
-        round, "output_spans")))
+        round, "output_spans"))
 
       // ---- steps 9-11 are independent jobs over the cached frames;
       //      each runs on the io pool, awaited together before commit ----
@@ -581,11 +541,8 @@ object CrawlJob {
       // sharded mode: the bloom shards fold the SAME delta inside the
       // cuckoo cogroup, reading each bucket's previous shard from the
       // previous round's dir — no driver bytes, no broadcast
-      // shard lineage follows bloomShardDir (not cuckooDir): on a seeded
-      // resume the previous shards live in the auxiliary seed dir
       val shardSpec =
-        if (bloomSharded) Some(UrlSeen.BloomShardSpec(bloomShardDir,
-          math.max(1024L, bloomCapacity / cuckooBuckets), bloomFpp))
+        if (bloomSharded) Some(UrlSeen.BloomShardSpec(cuckooDir, perBucketCapacity, bloomFpp))
         else None
       val cuckooFut = job("cuckoo-write") {
         // ONE job feeds both layouts: the fused cogroup writes each
@@ -677,7 +634,7 @@ object CrawlJob {
       // BEFORE the state reload below, so the reloaded frames plan over
       // the post-maintenance file set — never over paths expiry removed.
       if (cfg.compactEvery > 0 && (round + 1) % cfg.compactEvery == 0) {
-        labelled("snapshot-maintenance")(timed("compact+expire") {
+        labelled("snapshot-maintenance") {
           // a table may exist only in EARLIER snapshots (an empty round,
           // or dedupDocs toggled off after indexed rounds) — the guard
           // must scan the whole history or expiry would strand live rows
@@ -693,7 +650,7 @@ object CrawlJob {
           Seq("output_spans", "fetch_log", "doc_dup_pairs", "metrics")
             .filter(anywhere).foreach(t => store.relocateDeltas(round, t))
           store.expireSnapshots()
-        })
+        }
       }
 
       // reload state from the committed snapshot (truncates lineage —
@@ -702,7 +659,6 @@ object CrawlJob {
       pending = store.read(spark, round, "pending").as[PendingUrl]
       cuckoo = store.read(spark, round, "cuckoo")
       cuckooDir = Some(s"${store.snapshotDir(round)}/cuckoo_bin")
-      if (bloomSharded) bloomShardDir = cuckooDir // shards rode this round's cogroup
 
       admissions.unpersist(); fetched.unpersist()
 

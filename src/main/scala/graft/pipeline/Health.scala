@@ -48,13 +48,12 @@ object Health {
           case Some(id) =>
             val manifest = scala.util.Try(store.readManifest(id))
             val seen = scala.util.Try(store.readSeen(spark, id).limit(1).count())
-            // bloom lives as a driver-written blob file (bloom.bin), as
-            // per-bucket shard files in sharded mode, or as the legacy
-            // one-row parquet table — any of the three counts. The blob
-            // probes go through the Hadoop FS API with the session conf,
-            // matching the writer (the blob files are the one store
-            // artifact written via that API; the SnapshotStore's own
-            // manifest/CURRENT metadata is java.nio local-path-only in
+            // the bloom is a driver-written blob file (bloom.bin), or
+            // per-bucket shard files beside the cuckoo blobs in sharded
+            // mode. The blob probes go through the Hadoop FS API with the
+            // session conf, matching the writer (the blob files are the
+            // one store artifact written via that API; the SnapshotStore's
+            // own manifest/CURRENT metadata is java.nio local-path-only in
             // this miniature, so a non-local root needs the real
             // Iceberg-runtime swap the store documents).
             val hconf = spark.sessionState.newHadoopConf()
@@ -64,16 +63,14 @@ object Health {
             } || {
               // sharded mode: the flag alone isn't health — the shard
               // FILES must be committed beside the cuckoo blobs (a
-              // flagged checkpoint with no shards is exactly the state
-              // the resume path has to repair by re-seeding)
+              // flagged checkpoint with no shards cannot be resumed)
               store.manifestMeta(id).get("bloom_sharded").contains("true") &&
                 graft.frontier.UrlSeen.bloomShardsPresent(
                   s"${store.snapshotDir(id)}/cuckoo_bin", hconf)
-            } ||
-              store.hasTable(id, "bloom")
+            }
             val sketches =
               if (store.hasTable(id, "cuckoo") && bloomOk) "up"
-              else "degraded" // exact layer still decides; sketches rebuild on resume
+              else "degraded" // the exact layer still answers; a crawl cannot resume
             Seq(
               Check("snapshot-store",
                 if (manifest.isSuccess) "up" else "down",
@@ -120,18 +117,9 @@ object Health {
       "architecture" -> System.getProperty("os.arch"),
       "modules" -> AlphaSort.sorted(modules).mkString(","),
       "store" -> storeRoot.getOrElse(""))
-    val flags = Seq(
-      "numPartitions" -> cfg.numPartitions.toString,
-      "saltsPerHost" -> cfg.saltsPerHost.toString,
-      "hostBudgetPerRound" -> cfg.hostBudgetPerRound.toString,
-      "maxQueuePerPartition" -> cfg.maxQueuePerPartition.toString,
-      "bloomExpectedItems" -> cfg.bloomExpectedItems.toString,
-      "bloomFpp" -> cfg.bloomFpp.toString,
-      "bloomCollectThreshold" -> cfg.bloomCollectThreshold.toString,
-      "cuckooBuckets" -> cfg.cuckooBuckets.toString,
-      "softTimeoutMs" -> cfg.softTimeoutMs.toString,
-      "maxRounds" -> cfg.maxRounds.toString,
-      "seed" -> cfg.seed.toString).map { case (k, v) => s"flag:$k" -> v }
+    // every CrawlConfig field, so the echo cannot drift from the config
+    val flags = cfg.productElementNames.zip(cfg.productIterator)
+      .map { case (k, v) => s"flag:$k" -> String.valueOf(v) }.toSeq
     (base ++ flags).toDF("key", "value")
   }
 }

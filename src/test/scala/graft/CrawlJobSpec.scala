@@ -1,6 +1,5 @@
 package graft
 
-import graft.frontier.UrlSeen
 import graft.model.CrawlConfig
 import graft.pipeline.CrawlJob
 import graft.sources.{SnapshotStore, SyntheticWeb}
@@ -10,7 +9,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 /** End-to-end crawl vs the straight-line reference model: final URL-seen
   * set, per-round canonical frontier order, and output span-sequence
@@ -118,7 +117,7 @@ class CrawlJobSpec extends SparkSpec {
     assert(engineSeen === model.seen)
   }
 
-  test("sharded resume of a pre-sharded checkpoint seeds shards from the seen table") {
+  test("sharded resume of a pre-sharded checkpoint fails fast instead of seeding shards") {
     import spark.implicits._
     val root = Files.createTempDirectory("crawl-shard-seed").toString
     // rounds 0-1 in broadcast-bloom mode
@@ -127,30 +126,100 @@ class CrawlJobSpec extends SparkSpec {
     val store = new SnapshotStore(root)
     val ckpt = store.currentSnapshot.get
     // simulate a checkpoint that PREDATES sharded mode: its manifest has
-    // no bloom_sharded key, so resume falls back to the caller's cfg
+    // no bloom_sharded key
     val mf = java.nio.file.Paths.get(store.snapshotDir(ckpt), "MANIFEST.json")
     Files.writeString(mf,
       Files.readString(mf).replace("\"bloom_sharded\"", "\"legacy_stripped\""))
     assert(!store.manifestMeta(ckpt).contains("bloom_sharded"))
-    // resume WITH bloomSharded=true: without the one-time shard seed the
-    // first rounds would build shards from the round delta only, answer
-    // "definitely new" for historical URLs (bloom false NEGATIVE,
-    // skipping cuckoo AND the exact anti-join) and re-admit them
-    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-      cfg.copy(maxRounds = 2, bloomSharded = true), root)
-    // the seed dir was built next to the pre-sharded checkpoint
-    assert(UrlSeen.bloomShardsPresent(s"${store.snapshotDir(ckpt)}/bloom_seed_bin",
-      spark.sessionState.newHadoopConf()))
-    val last = store.currentSnapshot.get
-    val model4 = ReferenceCrawl.run(seeds, robots,
-      hostMap.map(h => h.host -> h.ips).toMap, universe, cfg.copy(maxRounds = 4))
-    val seenRows = store.readSeen(spark, last)
-      .select("url_canon", "round_first_seen")
-      .collect().map(r => r.getString(0) -> r.getInt(1))
-    // no duplicate url_canon rows (re-admission would duplicate), and
-    // the map equals the 4-round straight-line model exactly
-    assert(seenRows.length === seenRows.map(_._1).distinct.length)
-    assert(seenRows.toMap === model4.seen)
+    // resume WITH bloomSharded=true: no shards exist, and shards built
+    // from the round delta only would answer "definitely new" for
+    // historical URLs (bloom false NEGATIVE, skipping cuckoo AND the
+    // exact anti-join) and re-admit them — the resume refuses instead
+    val ex = intercept[IllegalArgumentException] {
+      CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+        cfg.copy(maxRounds = 2, bloomSharded = true), root)
+    }
+    assert(ex.getMessage.contains(s"snapshot v$ckpt"), ex.getMessage)
+    assert(ex.getMessage.contains("bloom_sharded"), ex.getMessage)
+    assert(store.currentSnapshot === Some(ckpt))
+    assert(!Files.exists(java.nio.file.Paths.get(store.snapshotDir(ckpt), "bloom_seed_bin")))
+    assert(!Files.exists(java.nio.file.Paths.get(store.snapshotDir(ckpt + 1))))
+  }
+
+  test("resume fails fast on a checkpoint missing any piece the crawl writes") {
+    import spark.implicits._
+    def crawl2(sharded: Boolean): String = {
+      val root = Files.createTempDirectory("crawl-pieces").toString
+      CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+        cfg.copy(maxRounds = 2, bloomSharded = sharded), root)
+      root
+    }
+    val broadcastRoot = crawl2(sharded = false)
+    val shardedRoot = crawl2(sharded = true)
+    // `break` takes one piece away from the checkpoint's dir and returns
+    // what puts it back
+    def failsFast(root: String, piece: String)(break: Path => () => Unit): Unit = {
+      val store = new SnapshotStore(root)
+      val ckpt = store.currentSnapshot.get
+      val committed = store.committedSnapshots
+      val restore = break(Paths.get(store.snapshotDir(ckpt)))
+      try {
+        val ex = intercept[IllegalArgumentException] {
+          CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+            cfg.copy(maxRounds = 1), root)
+        }
+        assert(ex.getMessage.contains(s"snapshot v$ckpt"), s"$piece: ${ex.getMessage}")
+        assert(ex.getMessage.contains(piece), s"$piece: ${ex.getMessage}")
+        assert(store.currentSnapshot === Some(ckpt), piece)
+        assert(store.committedSnapshots === committed, piece)
+        assert(!Files.exists(Paths.get(store.snapshotDir(ckpt + 1))), piece)
+      } finally restore()
+    }
+    def moveAside(paths: Seq[Path]): () => Unit = {
+      assert(paths.nonEmpty && paths.forall(Files.exists(_)), paths)
+      val aside = Files.createTempDirectory("crawl-piece-aside")
+      val moved = paths.map(p => p -> Files.move(p, aside.resolve(p.getFileName)))
+      () => moved.foreach { case (p, a) => Files.move(a, p) }
+    }
+    failsFast(broadcastRoot, "bloom.bin")(d => moveAside(Seq(d.resolve("bloom.bin"))))
+    failsFast(broadcastRoot, "cuckoo table")(d => moveAside(Seq(d.resolve("cuckoo"))))
+    failsFast(shardedRoot, "bloom-*.bin shards")(d => moveAside(d.resolve("cuckoo_bin")
+      .toFile.listFiles().toSeq.filter(_.getName.startsWith("bloom-")).map(_.toPath)))
+    Seq("cuckoo_buckets", "bloom_capacity", "bloom_fpp", "bloom_sharded", "seen_total")
+      .foreach { key =>
+        failsFast(broadcastRoot, s"manifest key $key") { d =>
+          val mf = d.resolve("MANIFEST.json")
+          val manifest = Files.readString(mf)
+          Files.writeString(mf, manifest.replace(s"\"$key\"", s"\"${key}_removed\""))
+          () => Files.writeString(mf, manifest)
+        }
+      }
+    // restored, both checkpoints resume
+    Seq(broadcastRoot, shardedRoot).foreach { root =>
+      CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+        cfg.copy(maxRounds = 1), root)
+      assert(new SnapshotStore(root).currentSnapshot === Some(2))
+    }
+  }
+
+  test("resume reads its state without a Spark job (seen_total comes from the manifest)") {
+    summary
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc) // earlier jobs' events must not reach the listener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    import spark.implicits._
+    val resumed =
+      try CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+        cfg.copy(maxRounds = 0), storeRoot) // the resume prologue only
+      finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    val store = new SnapshotStore(storeRoot)
+    assert(resumed.seenTotal ===
+      store.manifestMeta(store.currentSnapshot.get)("seen_total").toLong)
+    assert(jobs.get === 0, s"${jobs.get} Spark jobs before round work")
   }
 
   test("resume adopts the checkpoint's cuckoo bucket count (manifest wins over cfg)") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.datatools.{Dedup, GraphOps}
+import org.apache.spark.sql.{Column, Observation}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -338,6 +339,29 @@ class GraphOpsSpec extends SparkSpec {
     val b4 = live()
     GraphOps.hits(chain.toDF("src", "dst"), iters = 4).collect()
     assert(live() - b4 <= 1, "hits leaked checkpoints")
+  }
+
+  test("observedOrRecount: a metric AQE pruned is recounted, a present one is read") {
+    import graft.datatools.Observations.observedOrRecount
+    val rows = (1L to 100L).toDF("x")
+    def observedJob(keep: Column): Observation = {
+      val obs = Observation()
+      // every observed row may be filtered out before the shuffle: its
+      // stage then materializes empty and AQE re-plans the query
+      // without the CollectMetrics node
+      rows.observe(obs, count(lit(1)).as("n"), sum(when(col("x") > 1000L, 1L)).as("big"))
+        .filter(keep).groupBy("x").count().collect()
+      obs
+    }
+    val pruned = observedJob(col("x") < 0L)
+    assert(pruned.get.isEmpty, s"the metrics survived: ${pruned.get}")
+    assert(observedOrRecount(pruned, "n")(rows.count()) === 100L)
+    // a present metric is read, never recounted; a sum over rows it
+    // never counted (null) is 0
+    val present = observedJob(col("x") > 50L)
+    def noRecount: Long = fail("recounted a present metric")
+    assert(observedOrRecount(present, "n")(noRecount) === 100L)
+    assert(observedOrRecount(present, "big")(noRecount) === 0L)
   }
 
   // ---- anchorTopK ----

@@ -39,8 +39,8 @@ class HealthSpec extends SparkSpec {
     val rows = Health.health(spark, Some(root)).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows("seen-sketches") === "up", "committed shards = healthy sketches")
-    // a sharded-flagged snapshot WITHOUT shard files (the legacy state
-    // the resume path re-seeds) must report degraded, not up
+    // a sharded-flagged snapshot WITHOUT shard files (a checkpoint the
+    // crawl refuses to resume) must report degraded, not up
     val store = new graft.sources.SnapshotStore(root)
     val last = store.currentSnapshot.get
     new java.io.File(store.snapshotDir(last), "cuckoo_bin").listFiles()
@@ -70,5 +70,22 @@ class HealthSpec extends SparkSpec {
     assert(dbg("flag:cuckooBuckets") === "64")
     assert(dbg("flag:softTimeoutMs") === "30000")
     assert(dbg.keys.count(_.startsWith("flag:")) >= 10)
+  }
+
+  test("debug echoes every CrawlConfig field, the checkpoint-shaping flags too") {
+    val cfg = CrawlConfig(bloomSharded = true, outlinksPerDoc = 7, dedupDocs = true,
+      dedupThreshold = 0.75, dedupShingleK = 5, compactEvery = 3, wapAudit = true)
+    val flags = Health.debug(spark, cfg).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+      .collect { case (k, v) if k.startsWith("flag:") => k.stripPrefix("flag:") -> v }
+    assert(flags.keySet === cfg.productElementNames.toSet)
+    assert(flags.size === cfg.productArity)
+    cfg.productElementNames.zip(cfg.productIterator).foreach { case (k, v) =>
+      assert(flags(k) === v.toString, k)
+    }
+    assert(flags("bloomSharded") === "true" && flags("outlinksPerDoc") === "7" &&
+      flags("dedupDocs") === "true" && flags("dedupThreshold") === "0.75" &&
+      flags("dedupShingleK") === "5" && flags("compactEvery") === "3" &&
+      flags("wapAudit") === "true")
   }
 }

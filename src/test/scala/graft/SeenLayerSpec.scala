@@ -2,12 +2,26 @@ package graft
 
 import graft.frontier.{CuckooFilter, UrlSeen}
 import graft.model.SeenUrl
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** URL-seen layer: cuckoo filter invariants + the bloom→cuckoo→exact
   * discipline (a sketch may only say "definitely new", never drop).
   */
 class SeenLayerSpec extends SparkSpec {
+
+  /** The running bloom over `seen`, broadcast — as the crawl builds it. */
+  private def broadcastBloom(seen: DataFrame, capacity: Long): UrlSeen.BroadcastBloom =
+    UrlSeen.BroadcastBloom(spark.sparkContext.broadcast(UrlSeen.bloomOfDelta(seen, capacity, 0.03)))
+
+  /** `seen`'s cuckoo blobs written into `dir` the way a crawl round
+    * writes them: the fused update driven by an action, then `_DONE`.
+    */
+  private def writeCuckooBlobs(seen: DataFrame, dir: String): Unit = {
+    UrlSeen.updateCuckoo(spark, UrlSeen.emptyCuckooState(spark), seen.select("url_hash"),
+      1024, blobDir = Some(dir)).count()
+    UrlSeen.finishCuckooDir(dir, spark.sessionState.newHadoopConf())
+  }
 
   test("cuckoo filter: no false negatives, deletes work, serde round-trips") {
     val cf = CuckooFilter.create(10000)
@@ -44,18 +58,18 @@ class SeenLayerSpec extends SparkSpec {
     assert(CuckooFilter.fromBytes(cf.toBytes).mightContain(123456789L))
   }
 
-  test("cuckoo blob legacy layout (pre-saturation-flag) still deserializes") {
+  test("cuckoo blob: the pre-saturation layout's length is rejected, never misparsed") {
     val cf = CuckooFilter.create(1000)
     val keys = (0L until 500L).map(k => k * 0x9E3779B97F4A7CL + 3)
     keys.foreach(cf.insert)
     val cur = cf.toBytes
-    // legacy snapshots serialized header(20B) + table — no flag byte
-    val legacy = cur.take(20) ++ cur.drop(21)
-    val back = CuckooFilter.fromBytes(legacy)
-    assert(!back.saturated)
-    keys.foreach(k => assert(back.mightContain(k), s"false negative for $k after legacy parse"))
-    // a blob matching neither layout is rejected loudly, not misparsed
-    intercept[IllegalArgumentException](CuckooFilter.fromBytes(cur ++ Array[Byte](0)))
+    keys.foreach(k => assert(CuckooFilter.fromBytes(cur).mightContain(k)))
+    // the pre-saturation layout was header(20B) + table, no flag byte:
+    // its length is rejected like any other wrong length, never misparsed
+    Seq(cur.take(20) ++ cur.drop(21), cur ++ Array[Byte](0)).foreach { bad =>
+      val e = intercept[IllegalArgumentException](CuckooFilter.fromBytes(bad))
+      assert(e.getMessage.contains(s"length ${bad.length}"), e.getMessage)
+    }
   }
 
   test("updateCuckoo: two incremental deltas == one full build (bytes-equal)") {
@@ -85,8 +99,7 @@ class SeenLayerSpec extends SparkSpec {
       val u = s"https://h/$i"
       (u, graft.functions.UrlFunctions.urlHash(u), 1.0, i.toLong)
     }.toDF("url_canon", "url_hash", "priority", "seq")
-    val bloom = UrlSeen.buildBloom(spark, seen, 1000, 0.03)
-    val out = UrlSeen.filterNew(spark, candidates, seen, bloom, None)
+    val out = UrlSeen.filterNew(spark, candidates, seen, broadcastBloom(seen, 1000), None)
     val plan = out.queryExecution.executedPlan.toString()
     // a tiny seen table is exactly when Catalyst would broadcast — i.e.
     // collect the whole seen set through the driver each round
@@ -118,35 +131,13 @@ class SeenLayerSpec extends SparkSpec {
       .select("url_canon").as[String].collect().toSet
     assert(sharded === expected)
     // broadcast path agrees (the sketch deployment must never change answers)
-    val bc = UrlSeen.buildBloom(spark, seen, 10000, 0.03)
-    val broadcasted = UrlSeen.filterNew(spark, candidates, seen, bc, Some(dir))
+    val broadcasted = UrlSeen.filterNew(spark, candidates, seen, broadcastBloom(seen, 10000), Some(dir))
       .select("url_canon").as[String].collect().toSet
     assert(broadcasted === expected)
     // NoBloom (sharded cold start): exact join decides everything, same set
     val cold = UrlSeen.filterNew(spark, candidates, seen, UrlSeen.NoBloom, None)
       .select("url_canon").as[String].collect().toSet
     assert(cold === expected)
-  }
-
-  test("seedBloomShards: every historical url_hash answers maybe in its shard") {
-    import spark.implicits._
-    val hashes = (0 until 3000).map(i => graft.functions.UrlFunctions.urlHash(s"https://h/$i"))
-    val seen = hashes.zipWithIndex.map { case (h, i) => (s"https://h/$i", h, 0) }
-      .toDF("url_canon", "url_hash", "round_first_seen")
-    val dir = java.nio.file.Files.createTempDirectory("bloom-seed").toString
-    val conf = spark.sessionState.newHadoopConf()
-    assert(!UrlSeen.bloomShardsPresent(dir, conf))
-    UrlSeen.seedBloomShards(spark, seen, dir, capacityPerShard = 1024, fpp = 0.01)
-    assert(UrlSeen.bloomShardsPresent(dir, conf))
-    // every historical hash must read "maybe" from its own shard — a
-    // false NEGATIVE here is exactly the re-admission corruption the
-    // seeded resume path exists to prevent
-    hashes.foreach { h =>
-      val b = UrlSeen.cuckooBucket(h)
-      val bf = UrlSeen.readBloomFile(s"$dir/bloom-$b.bin", conf)
-      assert(bf.isDefined, s"missing shard $b")
-      assert(bf.get.mightContainLong(h), s"false negative for $h in shard $b")
-    }
   }
 
   test("bloomOfDelta builds at most MaxDeltaPartials full-capacity partials") {
@@ -188,9 +179,9 @@ class SeenLayerSpec extends SparkSpec {
       val u = s"https://h/$i"
       (u, graft.functions.UrlFunctions.urlHash(u), 1.0, i.toLong)
     }.toDF("url_canon", "url_hash", "priority", "seq")
-    val bloom = UrlSeen.buildBloom(spark, seen, 10000, 0.03)
+    val bloom = broadcastBloom(seen, 10000)
     val dir = java.nio.file.Files.createTempDirectory("cuckoo-bin").toString
-    UrlSeen.writeCuckooFiles(UrlSeen.buildCuckoo(spark, seen, 10000), dir)
+    writeCuckooBlobs(seen, dir)
     assert(UrlSeen.cuckooFilesReady(dir))
     val out = UrlSeen.filterNew(spark, candidates, seen, bloom, Some(dir))
       .select("url_canon").as[String].collect().toSet
