@@ -35,23 +35,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private val fastDir =
-    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else System.getProperty("java.io.tmpdir")
-
-  private def newSession(threads: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(s"graft-bench-$threads")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$fastDir/graft-spark-local")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+  private def newSession(threads: Int, shufflePartitions: Int, adaptive: Boolean): SparkSession = {
+    val s = Sessions.local(threads, shufflePartitions, adaptive)
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
     s
   }
 
@@ -123,29 +109,17 @@ object Bench {
 
   /** One crawl at the given parallelism; returns (urls fetched+converted, seconds). */
   private def crawlOnce(threads: Int, seeds: Int, rounds: Int): (Long, Double) = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(s"graft-bench-crawl-$threads")
-      .config("spark.sql.shuffle.partitions", "32")
-      // AQE OFF for the measured crawls: adaptive coalescing targets
-      // defaultParallelism (`parallelismFirst`), so at local[2] it
-      // rewrites the shuffles into fewer, fatter tasks (−21% task-time
-      // in an interleaved same-JVM A/B: 290-311 vs 374-394 task-sec)
-      // — an optimizer advantage that exists ONLY at small parallelism
-      // and cannot scale. The N→4N criterion compares the SAME physical
-      // plan at two executor counts (strong scaling); at local[8]/[32]
-      // AQE-off costs nothing (equal wall, higher thread utilization).
-      // Production CrawlJob keeps AQE (skew-join splitting matters on a
-      // real cluster); this is measurement parity, not a tuning default.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$fastDir/graft-spark-local")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // AQE OFF for the measured crawls: adaptive coalescing targets
+    // defaultParallelism (`parallelismFirst`), so at local[2] it
+    // rewrites the shuffles into fewer, fatter tasks (−21% task-time
+    // in an interleaved same-JVM A/B: 290-311 vs 374-394 task-sec)
+    // — an optimizer advantage that exists ONLY at small parallelism
+    // and cannot scale. The N→4N criterion compares the SAME physical
+    // plan at two executor counts (strong scaling); at local[8]/[32]
+    // AQE-off costs nothing (equal wall, higher thread utilization).
+    // Production CrawlJob keeps AQE (skew-join splitting matters on a
+    // real cluster); this is measurement parity, not a tuning default.
+    val spark = newSession(threads, shufflePartitions = 32, adaptive = false)
     import spark.implicits._
     // hosts scale with seeds (~100 seeds/host) so the politeness budget
     // (64/host/round) admits the same per-host fraction at every
@@ -163,7 +137,7 @@ object Bench {
       // final seen ≈ 1.1x seeds over 2 rounds; 2x keeps the fpp honest
       bloomExpectedItems = math.max(1L << 21, 2L * seeds))
     val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(fastDir), s"graft-bench-$threads").toString
+      java.nio.file.Paths.get(Sessions.scratchDir), s"graft-bench-$threads").toString
     val t0 = System.nanoTime()
     val summary = CrawlJob.run(spark, universe.seedUrlsDS(spark, seeds),
       SyntheticWeb.defaultRobots, SyntheticWeb.hostMapDS(spark, universe.numHosts),
@@ -308,7 +282,7 @@ object Bench {
         s"SPARK_GRAFT_BENCH_ONLY='$f' matched no headline query")
     }
     val qmap = SparkEntry.queries
-    val spark = newSession(cpus)
+    val spark = newSession(cpus, shufflePartitions = 64, adaptive = true)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
@@ -454,17 +428,17 @@ object Bench {
     val pairEffs = pairRuns.map { case (_, p2, p8) => (p2 / p8) / 4.0 }
     val eff = median(pairEffs)
 
-    val qs = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
+    val qs = results.map { case (k, v) => Json.string(k) + f":$v%.3f" }
       .mkString("{", ",", "}")
     val totalQuerySec = results.map(_._2).sum
     def runsJson(xs: Seq[Double]): String = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
     def pairsJson(xs: Seq[(Double, Double)]): String =
       xs.map { case (b, a) => f"[$b%.2f,$a%.2f]" }.mkString("[", ",", "]")
-    val qruns = runsByQuery.map { case (k, rs) => "\"" + k + "\":" + runsJson(rs.toSeq) }
+    val qruns = runsByQuery.map { case (k, rs) => Json.string(k) + ":" + runsJson(rs.toSeq) }
       .mkString("{", ",", "}")
-    val benchOnlyJson = benchOnly.map(f => "\"" + f + "\"").getOrElse("null")
+    val benchOnlyJson = benchOnly.map(Json.string).getOrElse("null")
     val thr32runs = leg32.map { case (f, s) => f / s }.toSeq
     println(
-      f"""{"metric":"frontier throughput (URLs fetched+converted/sec) at local[32]","value":$thr32%.1f,"unit":"urls/sec","bench_only":$benchOnlyJson,"queries":$qs,"query_protocol":"median of $qreps warm passes per query (pass-major interleaved) after 1 unmeasured warmup","query_runs":$qruns,"sf":"$sfDir","crawl":{"urls_per_run":$urls,"n_pair":"local[2] -> local[8]","protocol":"median of per-pair ratios over $reps interleaved (N,4N) pairs, alternating order, AQE off (plan parity)","sec_n_median":$s2%.2f,"sec_n_runs":${runsJson(s2runs)},"urls_per_sec_n":$thr2%.1f,"sec_4n_median":$s8%.2f,"sec_4n_runs":${runsJson(s8runs)},"urls_per_sec_4n":$thr8%.1f,"pair_efficiencies":${runsJson(pairEffs)},"scaling_efficiency_n_to_4n":$eff%.3f,"host_probe":{"protocol":"per measured leg, [before,after] brackets of two fixed-work probes: cpu = 32-thread xorshift wall sec (quiet ~0.8s; inflated = CPU stolen) and gbps = 8-thread 8GB stream-sum bandwidth, quiet ~45GB/s on this host (inflated legs with quiet cpu + depressed gbps = memory-bandwidth co-tenancy, run 17's window; both quiet on a slow leg would indicate code regression)","cpu":{"n":${pairsJson(probeN.toSeq)},"4n":${pairsJson(probe4N.toSeq)},"local32":${pairsJson(probe32.toSeq)}},"gbps":{"n":${pairsJson(gbpsN.toSeq)},"4n":${pairsJson(gbps4N.toSeq)},"local32":${pairsJson(gbps32.toSeq)}}},"local32_protocol":"median of $legs32 full-size legs interleaved across the protocol (leg 1 after warmup, rest spread over the pair sequence)","urls_local32":$f32,"sec_local32_runs":${runsJson(s32runs)},"sec_local32":$s32%.2f,"urls_per_sec_local32_runs":${runsJson(thr32runs)},"urls_per_sec_local32":$thr32%.1f},"total_query_sec":$totalQuerySec%.2f}""")
+      f"""{"metric":"frontier throughput (URLs fetched+converted/sec) at local[32]","value":$thr32%.1f,"unit":"urls/sec","bench_only":$benchOnlyJson,"queries":$qs,"query_protocol":"median of $qreps warm passes per query (pass-major interleaved) after 1 unmeasured warmup","query_runs":$qruns,"sf":${Json.string(sfDir)},"crawl":{"urls_per_run":$urls,"n_pair":"local[2] -> local[8]","protocol":"median of per-pair ratios over $reps interleaved (N,4N) pairs, alternating order, AQE off (plan parity)","sec_n_median":$s2%.2f,"sec_n_runs":${runsJson(s2runs)},"urls_per_sec_n":$thr2%.1f,"sec_4n_median":$s8%.2f,"sec_4n_runs":${runsJson(s8runs)},"urls_per_sec_4n":$thr8%.1f,"pair_efficiencies":${runsJson(pairEffs)},"scaling_efficiency_n_to_4n":$eff%.3f,"host_probe":{"protocol":"per measured leg, [before,after] brackets of two fixed-work probes: cpu = 32-thread xorshift wall sec (quiet ~0.8s; inflated = CPU stolen) and gbps = 8-thread 8GB stream-sum bandwidth, quiet ~45GB/s on this host (inflated legs with quiet cpu + depressed gbps = memory-bandwidth co-tenancy, run 17's window; both quiet on a slow leg would indicate code regression)","cpu":{"n":${pairsJson(probeN.toSeq)},"4n":${pairsJson(probe4N.toSeq)},"local32":${pairsJson(probe32.toSeq)}},"gbps":{"n":${pairsJson(gbpsN.toSeq)},"4n":${pairsJson(gbps4N.toSeq)},"local32":${pairsJson(gbps32.toSeq)}}},"local32_protocol":"median of $legs32 full-size legs interleaved across the protocol (leg 1 after warmup, rest spread over the pair sequence)","urls_local32":$f32,"sec_local32_runs":${runsJson(s32runs)},"sec_local32":$s32%.2f,"urls_per_sec_local32_runs":${runsJson(thr32runs)},"urls_per_sec_local32":$thr32%.1f},"total_query_sec":$totalQuerySec%.2f}""")
   }
 }

@@ -1,6 +1,6 @@
 package graft.frontier
 
-import graft.functions.{IpFunctions, UrlFunctions}
+import graft.functions.{IpFunctions, UrlExprs, UrlFunctions}
 import graft.model.{HostIps, RobotsRule}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,7 +58,7 @@ object RobotsFilter {
     val withNorm = df
       .withColumn("__norm", norm)
       .withColumn("__scheme", regexp_extract(col("__norm"), "^([a-z][a-z0-9+.-]*)://", 1))
-      .withColumn("__host", UrlFunctions.hostOfCol(col("__norm")))
+      .withColumn("__host", UrlExprs.host(col("__norm")))
       .withColumn("__allow_matched",
         if (allows.isEmpty) lit(false) else orMatch(col("__norm"), allows))
       .withColumn("__deny_matched",

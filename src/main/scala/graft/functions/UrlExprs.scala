@@ -7,20 +7,21 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native codegen expressions for the crawl hot path's URL scalars.
+/** Native codegen expressions for the URL scalars: the one Column form
+  * of [[UrlFunctions.canonicalizeUrl]] and [[UrlFunctions.hostOf]] that
+  * the crawl, the robots filter, streaming and the queries use.
   *
   * Three candidate implementations were measured at bench scale
   * (~4M URL rows/round):
   *   - Scala UDF over [[UrlFunctions.canonicalizeUrl]] — fast parser,
   *     but pays the serde + lambda boundary per row and blocks
   *     whole-stage codegen;
-  *   - built-in regex Column stack ([[UrlFunctions.canonicalizeUrlCol]])
-  *     — codegen'd but evaluates 6 regex automata per row (kept for the
-  *     DuckDB-oracle-expressible queries);
+  *   - a built-in regex Column stack — codegen'd but evaluates 6 regex
+  *     automata per row;
   *   - THIS: a unary expression whose generated code calls the static
   *     hand-rolled parser directly — single pass per row, no serde, no
   *     regex, stays inside the WholeStageCodegen stage.
-  * UrlExprParitySpec pins all three to identical outputs.
+  * UrlExprParitySpec pins both expressions to the Scala functions.
   */
 case class CanonicalizeUrlExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType

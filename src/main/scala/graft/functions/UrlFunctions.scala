@@ -20,11 +20,12 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * the trailing slash, so the FIXTURES.md `seen-dup` cases (case, default
   * port, trailing slash) canonicalize equal.
   *
-  * Everything here exists twice on purpose: a pure Scala function (used
-  * by the straight-line crawl reference model in tests and by typed
-  * Dataset operators) and a Column expression built from built-ins
-  * (codegen'd, usable in oracle-checked queries). Both must agree — there
-  * is a ScalaCheck spec pinning that.
+  * The pure Scala functions are the reference model: the straight-line
+  * crawl twin (`ReferenceCrawl`) calls them directly, and the hot path
+  * calls the URL parsers through the codegen expressions in
+  * [[UrlExprs]] (pinned by `UrlExprParitySpec`). Hashing, salting and
+  * status matching also have Column twins built from built-ins, pinned
+  * by `ColumnParitySpec`.
   */
 object UrlFunctions {
 
@@ -40,16 +41,20 @@ object UrlFunctions {
     case UrlRe(scheme, authority, path, query, _) =>
       // strip userinfo, split port
       val hostPort = authority.substring(authority.lastIndexOf('@') + 1)
+      // a port that does not parse as an Int (empty, non-numeric, out of
+      // range) keeps the authority whole as host, with port -1
+      def withPort(host: String, p: String): (String, Int) =
+        p.toIntOption.fold((hostPort, -1))(n => (host, n))
       val (host, port) = hostPort.lastIndexOf(':') match {
         case i if i >= 0 && !hostPort.startsWith("[") =>
           val p = hostPort.substring(i + 1)
-          if (p.forall(_.isDigit) && p.nonEmpty) (hostPort.substring(0, i), p.toInt)
+          if (p.forall(_.isDigit)) withPort(hostPort.substring(0, i), p)
           else (hostPort, -1)
         case i if i >= 0 && hostPort.startsWith("[") =>
           // [v6]:port
           val close = hostPort.indexOf(']')
           if (close >= 0 && close + 1 < hostPort.length && hostPort.charAt(close + 1) == ':')
-            (hostPort.substring(0, close + 1), hostPort.substring(close + 2).toInt)
+            withPort(hostPort.substring(0, close + 1), hostPort.substring(close + 2))
           else (hostPort, -1)
         case _ => (hostPort, -1)
       }
@@ -83,40 +88,8 @@ object UrlFunctions {
     case None => raw.trim
   }
 
-  /** Column twin of [[canonicalizeUrl]] — built-ins only so it stays in
-    * whole-stage codegen and is expressible in the DuckDB oracle.
-    * Assumes scheme://host/path shape (no userinfo/v6 — crawl tables);
-    * anything without `scheme://` passes through trimmed, matching the
-    * Scala twin's None branch.
-    */
-  def canonicalizeUrlCol(url: Column): Column = {
-    val trimmed = trim(url)
-    when(!trimmed.rlike("^[A-Za-z][A-Za-z0-9+.-]*://"), trimmed)
-      .otherwise(canonicalizeUrlColUnsafe(trimmed))
-  }
-
-  private def canonicalizeUrlColUnsafe(trimmed: Column): Column = {
-    val scheme = lower(regexp_extract(trimmed, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val hostPort = lower(regexp_extract(trimmed, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
-    val port = regexp_extract(hostPort, ":(\\d+)$", 1)
-    val keepPort = when(port === "", lit(""))
-      .when(scheme === "http" && port === "80", lit(""))
-      .when(scheme === "https" && port === "443", lit(""))
-      .otherwise(concat(lit(":"), port))
-    val bareHost = regexp_replace(hostPort, ":\\d+$", "")
-    val pathQ = regexp_extract(trimmed, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)", 1)
-    val path = regexp_extract(pathQ, "^([^?]*)", 1)
-    val query = regexp_extract(pathQ, "(\\?.*)$", 1)
-    val pathNorm = when(path === "", lit("/"))
-      .otherwise(regexp_replace(path, "(.)/$", "$1"))
-    concat(scheme, lit("://"), bareHost, keepPort, pathNorm, query)
-  }
-
   /** Hostname extraction (`events.go:299-305`): lowercase host, no port. */
   def hostOf(raw: String): String = parseUrl(raw).map(_.host).getOrElse("")
-
-  def hostOfCol(url: Column): Column =
-    lower(regexp_extract(url, "^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]*)", 1))
 
   def schemeOf(raw: String): String = parseUrl(raw).map(_.scheme).getOrElse("")
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.datatools.{Curation, Dedup, GraphOps, Multimodal, Similarity, Sketches, TextAnalysis}
-import graft.functions.{IpFunctions, UrlFunctions}
+import graft.functions.{IpFunctions, UrlExprs, UrlFunctions}
 import graft.model.OptionColumns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -37,9 +37,9 @@ object Queries {
   }
 
   // the native codegen expression (UrlExprParitySpec pins bit-equality
-  // with the scalar UDF and the Column twin) — keeps the canonicalize →
-  // groupBy pipeline inside WholeStageCodegen, no UDF row conversion
-  private def canonUdf(c: Column): Column = graft.functions.UrlExprs.canonicalize(c)
+  // with the Scala function) — keeps the canonicalize → groupBy
+  // pipeline inside WholeStageCodegen, no UDF row conversion
+  private def canonUdf(c: Column): Column = UrlExprs.canonicalize(c)
 
   // q01 — scan + agg pushdown (S1/A-family): the TPC-H Q1 shape.
   def q01AggPushdown(spark: SparkSession, dir: String): DataFrame =
@@ -102,7 +102,7 @@ object Queries {
     val seen = urls.filter(col("o_orderkey") % 2 === 0).select("url_canon")
     val candidates = urls.filter(col("o_orderkey") % 3 === 0)
     candidates.join(seen, Seq("url_canon"), "left_anti")
-      .withColumn("host", UrlFunctions.hostOfCol(col("url_canon")))
+      .withColumn("host", UrlExprs.host(col("url_canon")))
       .groupBy("host").agg(count(lit(1)).as("n_new"))
       .orderBy("host")
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.datatools.GraphOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Iterative-tier scale soak (round-4 VERDICT item 6): run the two
@@ -26,17 +25,8 @@ object IterSoak {
     val edges = args.headOption.map(_.toLong).getOrElse(100000000L)
     val prIters = args.lift(1).map(_.toInt).getOrElse(4)
     val nodes = math.max(edges / 2, 1L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-iter-soak")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-soak-local"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, shufflePartitions = 128, adaptive = true)
 
     // seeded uniform multigraph: two independent xxhash64 draws per
     // edge id (constant salts, not wall-clock — reruns are identical)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-SF scaling ladder (round 5): run one representative query
   * per cost family at sf0.001 → sf0.01 → sf0.1 — a 100× input span —
   * in ONE session, and report per-SF medians plus the sf0.01→sf0.1
@@ -37,19 +35,9 @@ object ScaleLadder {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     require(reps >= 1, s"reps must be >= 1, got $reps") // fail fast, not IOOBE in median()
     val root = sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
-    val fastDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-scale-ladder")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", s"$fastDir/graft-spark-local")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, shufflePartitions = 64, adaptive = true)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
 
     val queries = graft.SparkEntry.queries
     def median(xs: Seq[Double]): Double = {

@@ -4,42 +4,13 @@ import graft.functions.UrlFunctions
 import org.apache.spark.sql.functions._
 
 /** Every scalar that exists both as a pure Scala function and as a
-  * Column expression must agree — the docstring contract in
-  * UrlFunctions. Checked over a generated URL corpus that covers the
+  * built-in Column expression must agree — the docstring contract in
+  * UrlFunctions. Checked over the URL corpus that covers the
   * canonicalization noise classes.
   */
 class ColumnParitySpec extends SparkSpec {
 
-  private def urlCorpus: Seq[String] = {
-    val hosts = Seq("a.test", "UPPER.test", "h0.example.com", "x")
-    val schemes = Seq("http", "https", "HTTP")
-    val ports = Seq("", ":80", ":443", ":8080")
-    val paths = Seq("", "/", "/p", "/p/", "/a/b?q=1", "/a?x=1&y=2")
-    for {
-      s <- schemes; h <- hosts; p <- ports; path <- paths
-    } yield s"$s://$h$p$path"
-  }
-
-  test("canonicalizeUrlCol matches canonicalizeUrl on the URL corpus") {
-    import spark.implicits._
-    val df = urlCorpus.toDF("url")
-      .withColumn("col_canon", UrlFunctions.canonicalizeUrlCol(col("url")))
-    val scalaUdf = udf(UrlFunctions.canonicalizeUrl _)
-    val diff = df.withColumn("scala_canon", scalaUdf(col("url")))
-      .filter(col("col_canon") =!= col("scala_canon"))
-      .select("url", "col_canon", "scala_canon").collect()
-    assert(diff.isEmpty, diff.map(_.toString).mkString("\n"))
-  }
-
-  test("hostOfCol matches hostOf") {
-    import spark.implicits._
-    val scalaUdf = udf(UrlFunctions.hostOf _)
-    val diff = urlCorpus.toDF("url")
-      .withColumn("a", UrlFunctions.hostOfCol(col("url")))
-      .withColumn("b", scalaUdf(col("url")))
-      .filter(col("a") =!= col("b")).collect()
-    assert(diff.isEmpty, diff.map(_.toString).mkString("\n"))
-  }
+  private def urlCorpus: Seq[String] = UrlExprParitySpec.urlCorpus
 
   test("statusMatchesCol matches statusMatches for all statuses and code sets") {
     import spark.implicits._

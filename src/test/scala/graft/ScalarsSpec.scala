@@ -128,6 +128,10 @@ class ScalarsSpec extends AnyFunSuite {
   }
 
   test("canonicalize is idempotent") {
+    // a port that does not parse keeps the authority whole as host: no
+    // throw, and the URL is already canonical
+    Seq("http://h:99999999999/x", "http://[::1]:/x", "http://[::1]:abc/x", "http://h:abc/x")
+      .foreach(url => assert(UrlFunctions.canonicalizeUrl(url) === url))
     forAll(Gen.oneOf(
       Gen.const("https://Host.Example.COM:443/Path/"),
       for {
