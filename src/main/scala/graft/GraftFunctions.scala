@@ -1,37 +1,14 @@
 package graft
 
 import graft.functions.{CosineSimilarityExpr, IpFunctions, TextFunctions, UrlFunctions}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.udf
 
-/** SQL-facing surface of the engine: the scalar ports registered as
-  * session functions, so `spark.sql` users get the same semantics as
-  * the Column/Dataset API. Two entry points:
-  *
-  *   - `GraftExtensions` for `spark.sql.extensions=graft.GraftExtensions`
-  *     (injects the native cosine expression at session build);
-  *   - `GraftFunctions.register(spark)` for an existing session (adds
-  *     the UDF-backed scalars too).
+/** SQL-facing surface of the engine: `GraftFunctions.register(spark)`
+  * registers the scalar ports as session functions on an existing
+  * session, so `spark.sql` users get the same semantics as the
+  * Column/Dataset API.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_similarity"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[CosineSimilarityExpr].getName, "cosine_similarity"),
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          CosineSimilarityExpr(children.head, children(1))))
-    ext.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.functions.SimHashExpr].getName, "simhash64"),
-        (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          require(children.length == 1, "simhash64(text) takes exactly 1 argument")
-          graft.functions.SimHashExpr(GraftFunctions.castTo(children.head, "string"))
-        }))
-  }
-}
-
 object GraftFunctions {
 
   /** Column API for the native expression. */

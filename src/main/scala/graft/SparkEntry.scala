@@ -28,7 +28,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.all.toMap
 
-  /** DuckDB oracle twins — one per query (120/120): even the sketch
+  /** DuckDB oracle twins — one per query (121/121): even the sketch
     * layers share hash functions with DuckDB or inline their constants
     * into the generated SQL.
     */

@@ -40,13 +40,9 @@ object GraphOps {
     * @param pairs one row per undirected edge; self-loops and
     *              duplicate/reversed edges are tolerated (normalized
     *              away).
-    * @param onRound called with the 1-based round number after each
-    *                round's labels have fully materialized — a timing/
-    *                telemetry seam (the IterSoak tool's per-round wall
-    *                clock); no-op by default, no effect on the result.
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-                          maxIter: Int = 50, onRound: Int => Unit = _ => ()): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     val spark = pairs.sparkSession
     // symmetric edge list (u ~ v both ways), self-loops dropped — the
     // one shuffle key the whole loop re-uses is `v` (the join side)
@@ -104,7 +100,6 @@ object GraphOps {
       // of the node set
       Checkpoints.release(labels)
       labels = next.select("id", "lbl")
-      onRound(iter)
     }
     edges.unpersist()
     labels.select(col("id"), col("lbl").as("cluster_id"))
@@ -153,8 +148,7 @@ object GraphOps {
     */
   def linkAuthority(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
                     scale: Long = 1000000L,
-                    srcCol: String = "src", dstCol: String = "dst",
-                    onRound: Int => Unit = _ => ()): DataFrame = {
+                    srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // LAZY: the node set materializes inside round 1's checkpoint job
@@ -169,7 +163,7 @@ object GraphOps {
     // folds into round 1's job instead of paying its own checkpoint job
     var ranks = nodes.select(col("id"), lit(scale).as("rank"))
     var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
+    (1 to iters).foreach { _ =>
       val contrib = eDeg.join(ranks, eDeg("src") === ranks("id"))
         .select(col("dst"), expr("rank DIV outdeg").as("share"))
         .groupBy(col("dst")).agg(sum(col("share")).as("m"))
@@ -180,7 +174,6 @@ object GraphOps {
       ranks = ranks.localCheckpoint(true)
       if (prevCkpt != null) Checkpoints.release(prevCkpt) // superseded round
       prevCkpt = ranks
-      onRound(i) // ranks materialized above — the IterSoak timing seam
     }
     eDeg.unpersist()
     Checkpoints.release(nodes) // final ranks is checkpointed; nodes is dead

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen expressions for the URL scalars: the one Column form
   * of [[UrlFunctions.canonicalizeUrl]] and [[UrlFunctions.hostOf]] that
-  * the crawl, the robots filter, streaming and the queries use.
+  * the crawl, the robots filter and the queries use.
   *
   * Three candidate implementations were measured at bench scale
   * (~4M URL rows/round):

@@ -29,8 +29,8 @@ object Health {
     */
   def modules: Seq[String] = Seq(
     "crawl-frontier", "url-seen", "politeness", "robots",
-    "convert-pipeline", "span-ops", "snapshot-store", "webhook",
-    "datatools", "streaming") ++ graft.operators.Engines.capabilities.keys.toSeq
+    "convert-pipeline", "span-ops", "snapshot-store",
+    "datatools") ++ graft.operators.Engines.capabilities.keys.toSeq
 
   final case class Check(name: String, status: String, details: String)
 

@@ -1,7 +1,9 @@
 package graft
 
 import graft.datatools.{Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalacheck.Gen
 
 /** Training-data operators on planted fixtures: LSH recall against
@@ -481,6 +483,30 @@ class DatatoolsSpec extends SparkSpec {
     assert(got(4L)._2 === "mixed <EMAIL> at <IP> pays <CARD>")
     assert(got(5L)._1 === ((0L, 0L, 0L)))
     assert(got(5L)._2 === "nothing to scrub here")
+  }
+
+  test("datatools projections run unchanged over a document stream (PII scrub)") {
+    // scrubPii is a pure per-row projection, so the SAME operator that
+    // runs over the batch corpus runs over readStream with no
+    // watermark and Append mode — the streaming-ingest shape of the
+    // redaction pass
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, String)]
+    val out = graft.datatools.TextAnalysis.scrubPii(input.toDS().toDF("doc_id", "text"))
+    val query = out.writeStream.format("memory").queryName("scrub_stream")
+      .outputMode(OutputMode.Append).start()
+    try {
+      input.addData(1L -> "mail a@b.io from 10.0.0.1", 2L -> "clean")
+      query.processAllAvailable()
+      input.addData(3L -> "card 4111222233334444")
+      query.processAllAvailable()
+      val rows = spark.table("scrub_stream").as[(Long, Long, Long, Long, String)]
+        .collect().map(r => r._1 -> ((r._2, r._3, r._4), r._5)).toMap
+      assert(rows(1L) === (((1L, 1L, 0L), "mail <EMAIL> from <IP>")))
+      assert(rows(2L) === (((0L, 0L, 0L), "clean")))
+      assert(rows(3L) === (((0L, 0L, 1L), "card <CARD>")))
+    } finally query.stop()
   }
 
   test("property: repetitionSignals equals brute force on word soup") {

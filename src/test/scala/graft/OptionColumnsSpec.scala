@@ -1,6 +1,6 @@
 package graft
 
-import graft.model.{FormData, LibreOfficeOptions, OptionColumns, SplitOptions}
+import graft.model.OptionColumns
 import org.apache.spark.sql.functions._
 
 class OptionColumnsSpec extends SparkSpec {
@@ -64,38 +64,6 @@ class OptionColumnsSpec extends SparkSpec {
     val feats = row.getSeq[org.apache.spark.sql.Row](0)
       .map(r => (r.getString(0), r.getString(1)))
     assert(feats === Seq("hover" -> "none", "prefers-color-scheme" -> "dark"))
-  }
-
-  test("LibreOffice options bind with the exact reference defaults") {
-    val o = LibreOfficeOptions.bind(FormData(Map.empty))
-    assert(o === LibreOfficeOptions()) // every default from api.go:253-305
-    assert(o.quality === 90 && o.maxImageResolution === 300 &&
-      o.zoom === 100 && o.openBookmarkLevels === -1 &&
-      o.nativeWatermarkColor === 8388223 && o.nativeWatermarkFontName === "Helvetica" &&
-      o.updateIndexes && o.exportFormFields && o.exportBookmarks &&
-      o.displayPdfDocumentTitle && o.useTransitionEffects)
-  }
-
-  test("LibreOffice validation: quality bounds and DPI steps (routes.go:217-257)") {
-    val f1 = FormData(Map("quality" -> "0"))
-    LibreOfficeOptions.bind(f1)
-    assert(f1.errors.exists(_.contains("quality")))
-    val f2 = FormData(Map("maxImageResolution" -> "301"))
-    LibreOfficeOptions.bind(f2)
-    assert(f2.errors.exists(_.contains("maxImageResolution")))
-    val ok = FormData(Map("quality" -> "85", "maxImageResolution" -> "600",
-      "exportNotes" -> "true", "pdfa" -> "PDF/A-2b"))
-    val o = LibreOfficeOptions.bind(ok)
-    assert(ok.errors.isEmpty && o.quality === 85 && o.maxImageResolution === 600 &&
-      o.exportNotes && o.pdfA === "PDF/A-2b")
-  }
-
-  test("native-vs-post-process PDF/A decision (routes.go:336-337,389-394)") {
-    val o = LibreOfficeOptions(pdfA = "PDF/A-2b")
-    assert(LibreOfficeOptions.convertNatively(o, SplitOptions(), hasPostProcessing = false))
-    assert(!LibreOfficeOptions.convertNatively(o, SplitOptions("intervals", "1"), hasPostProcessing = false))
-    assert(!LibreOfficeOptions.convertNatively(o, SplitOptions(), hasPostProcessing = true))
-    assert(!LibreOfficeOptions.convertNatively(LibreOfficeOptions(), SplitOptions(), hasPostProcessing = false))
   }
 
   test("waitDelay binds via the Go-duration parser (chromium/routes.go:113)") {
