@@ -135,6 +135,11 @@ object OracleSql {
   private val normText =
     """trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"""
 
+  // the low `cfg.bpb` bits of a band; 1 << 64 is out of range in
+  // DuckDB, so a whole-signature band is all ones (Dedup.bandedBuckets)
+  private val bandMask =
+    "CASE WHEN cfg.bpb = 64 THEN ~(0::UBIGINT) ELSE (1::UBIGINT << cfg.bpb) - 1 END"
+
   private val noisyCanon =
     """'https://host' || (o_custkey % 50)::VARCHAR || '.example.com/p/' || o_orderkey::VARCHAR"""
 
@@ -161,7 +166,8 @@ object OracleSql {
     * synthesizes those signature-0 rows explicitly (UNION ALL branch).
     */
   private def simhashCtes(bands: Int, bitsPerBand: Int, probeHamming: Int): String = {
-    val mask = (1L << bitsPerBand) - 1
+    // Scala's 1L << 64 is 1L, so a whole-signature band needs its own mask
+    val mask = if (bitsPerBand == 64) "~(0::UBIGINT)" else ((1L << bitsPerBand) - 1).toString
     // radius-R multi-probe admits a candidate iff some band's buckets
     // are within hamming R (each side probes every ≤R-bit flip of its
     // own bucket) — for R = 0 this degenerates to bucket equality
@@ -1897,9 +1903,9 @@ object OracleSql {
          |c AS (SELECT cfg.bands, cfg.bpb, ap.ia, ap.ib,
          |    any_value(ap.hd) AS hd,
          |    max(CASE WHEN ((ap.sa >> (g.b * cfg.bpb)) &
-         |                   ((1::UBIGINT << cfg.bpb) - 1)) =
+         |                   ($bandMask)) =
          |                  ((ap.sb >> (g.b * cfg.bpb)) &
-         |                   ((1::UBIGINT << cfg.bpb) - 1))
+         |                   ($bandMask))
          |        THEN 1 ELSE 0 END) AS is_cand
          |  FROM ap CROSS JOIN cfg
          |  JOIN generate_series(0, 7) g(b) ON g.b < cfg.bands
@@ -2206,9 +2212,9 @@ object OracleSql {
        |c AS (SELECT cfg.bands, cfg.bpb, ap.ia, ap.ib,
        |    any_value(ap.hd) AS hd,
        |    max(CASE WHEN ((ap.sa >> (g.b * cfg.bpb)) &
-       |                   ((1::UBIGINT << cfg.bpb) - 1)) =
+       |                   ($bandMask)) =
        |                  ((ap.sb >> (g.b * cfg.bpb)) &
-       |                   ((1::UBIGINT << cfg.bpb) - 1))
+       |                   ($bandMask))
        |        THEN 1 ELSE 0 END) AS is_cand
        |  FROM ap CROSS JOIN cfg
        |  JOIN generate_series(0, ${maxBands - 1}) g(b) ON g.b < cfg.bands

@@ -49,18 +49,57 @@ class GraphOpsSpec extends SparkSpec {
     assert(!got.contains(3L))
   }
 
+  /** Driver-finish bounds that reach each path: 0 runs the distributed
+    * loop to convergence, 3 runs it and then finishes its tail on the
+    * driver, the default answers from round 0 on the driver.
+    */
+  private val finishBounds = Seq(0, 3, GraphOps.DriverFinishEdges)
+
+  private def components(pairs: org.apache.spark.sql.DataFrame, bound: Int) =
+    GraphOps.connectedComponents(pairs, "id_a", "id_b", 50, bound)
+
   test("property: components equal brute-force union-find on random graphs") {
     val edgeGen = Gen.listOfN(40,
       Gen.zip(Gen.choose(0L, 25L), Gen.choose(0L, 25L)))
     sample(edgeGen, 8) { es =>
       val real = es.filter { case (a, b) => a != b }
       if (real.nonEmpty) {
-        val got = GraphOps.connectedComponents(real.toDF("id_a", "id_b"))
-          .as[(Long, Long)].collect().toMap
         val want = bruteComponents(real)
-        assert(got === want, s"edges: $real")
+        finishBounds.foreach { bound =>
+          val got = components(real.toDF("id_a", "id_b"), bound)
+            .as[(Long, Long)].collect().toMap
+          assert(got === want, s"bound $bound, edges: $real")
+        }
       }
     }
+  }
+
+  test("connectedComponents: string ids take Spark's min, UTF-8 byte order, on every path") {
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes (EF… < F0…) but after
+    // it in UTF-16 code units (FF21 > D83D), so String.compareTo would
+    // pick the wrong keeper
+    val (fullA, smile) = ("\uFF21x", "\uD83D\uDE00")
+    assert(Seq(smile, fullA).toDF("s").select(min("s")).as[String].head() === fullA)
+    val pairs = Seq((smile, fullA), ("ü", "ß"), ("ß", "é"), ("z", "e"),
+      ("k", "m"), ("m", "l")).toDF("id_a", "id_b")
+    val want = Map(fullA -> fullA, smile -> fullA, "ß" -> "ß", "é" -> "ß", "ü" -> "ß",
+      "e" -> "e", "z" -> "e", "k" -> "k", "l" -> "k", "m" -> "k")
+    finishBounds.foreach { bound =>
+      assert(components(pairs, bound).as[(String, String)].collect().toMap === want,
+        s"bound $bound")
+    }
+  }
+
+  test("connectedComponents: a 200,000-node path finishes on the driver without recursion") {
+    val n = 200000L
+    val path = spark.range(n - 1).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val got = GraphOps.connectedComponents(path)
+    // the driver path answers with a local frame; the loop's is checkpointed
+    assert(got.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val (rows, lo, hi) = got.agg(count(lit(1)), min("cluster_id"), max("cluster_id"))
+      .as[(Long, Long, Long)].head()
+    assert((rows, lo, hi) === ((n, 0L, 0L)))
   }
 
   test("neardupClusters sizes count members per component") {
@@ -156,6 +195,21 @@ class GraphOpsSpec extends SparkSpec {
     assert(got === bruteHits(es, 3))
     assert(got(1L)._1 > got(2L)._1, "hub 1 must out-score leaf 2")
     assert(got(2L)._2 > 0L && got(2L)._1 === 0L, "pure leaf: authority only")
+  }
+
+  test("hits over an empty edge frame returns no rows") {
+    // every stage materializes empty, so AQE drops the observed totals
+    // and the normalization must recount them
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(GraphOps.hits(none, iters = 2).collect().isEmpty)
+  }
+
+  test("graph loops fail fast on bad parameters") {
+    val es = Seq((1L, 2L)).toDF("src", "dst")
+    intercept[IllegalArgumentException](GraphOps.hits(es, iters = 0))
+    intercept[IllegalArgumentException](GraphOps.hits(es, scale = 0L))
+    intercept[IllegalArgumentException](
+      GraphOps.connectedComponents(es.toDF("id_a", "id_b"), maxIter = 0))
   }
 
   test("property: hits equals brute-force integer HITS on random multigraphs") {
@@ -327,9 +381,11 @@ class GraphOpsSpec extends SparkSpec {
     // survivor
     def live(): Int = spark.sparkContext.getPersistentRDDs.size
     val chain = (1L to 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val before = live()
-    GraphOps.connectedComponents(chain).collect()
-    assert(live() - before <= 1, "connectedComponents leaked checkpoints")
+    finishBounds.foreach { bound =>
+      val before = live()
+      components(chain, bound).collect()
+      assert(live() - before <= 1, s"connectedComponents leaked checkpoints at bound $bound")
+    }
     val b2 = live()
     GraphOps.linkAuthority(chain.toDF("src", "dst"), iters = 4).collect()
     assert(live() - b2 <= 1, "linkAuthority leaked checkpoints")
