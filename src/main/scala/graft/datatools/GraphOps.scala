@@ -35,22 +35,26 @@ import scala.jdk.CollectionConverters._
   *
   * Determinism: the fixpoint is unique (every node labeled with its
   * component's minimum id), so the answer is independent of iteration
-  * count, partitioning, scheduling and of where the loop finishes —
-  * oracle-safe.
+  * count, partitioning, scheduling and of whether the driver or the
+  * loop answers — oracle-safe.
   */
 object GraphOps {
 
   /** The largest edge set [[connectedComponents]] solves on the driver.
-    * Estimated driver heap at the bound, with long ids: a collected
-    * edge is a Row of two boxed ids (~100 B, 26 MB in all), and each
-    * of the ≤ 2¹⁹ endpoints costs ~250 B across the distinct pass, the
-    * sorted id array, the id → index map, the parent array and the
-    * returned local frame (~130 MB) — ~0.15 GB, and ~0.3 GB with
-    * 64-character string ids: at most a tenth of the 3 GB driver heap
-    * the benchmark runs with, and a finish that takes well under a
-    * second where Hash-to-Min spends O(log d) rounds of several jobs.
+    * The answer is a local frame, so its rows sit in every downstream
+    * plan, and the optimizer's cost grows with them. Measured with a
+    * 3 GB driver, `local[4]`, AQE on, over [[neardupClusters]]' plan
+    * run to a count, driver path vs the loop (median of 3):
+    *   - 2¹⁴ edges: 0.36 vs 0.72 s (random graph, long ids), 0.59 vs
+    *     0.91 s (matching, 64-char string ids); optimization 50–74 ms;
+    *     driver heap peak ≤ 0.4 GB, garbage included;
+    *   - 2¹⁶ edges: 1.00 vs 1.15 s and 1.96 vs 2.09 s — about even;
+    *   - 2¹⁸ edges: 3.95 vs 2.13 s and 7.38 vs 5.07 s — the loop wins,
+    *     with 0.7–1.5 s of optimization and a 1.3 GB heap peak.
+    * So the bound sits at the largest measured size where the driver
+    * still wins.
     */
-  val DriverFinishEdges: Int = 1 << 18
+  val DriverFinishEdges: Int = 1 << 14
 
   /** (id, cluster_id) for every node appearing in `pairs`;
     * cluster_id = the component's minimum node id, in the order
@@ -63,12 +67,8 @@ object GraphOps {
     * `limit(DriverFinishEdges + 1)`; when it fits, a driver union-find
     * (the smaller root wins, so each root is its component's min)
     * answers with a local frame and no loop runs. Otherwise Hash-to-Min
-    * runs one eager checkpoint per round, whose job also observes the
-    * changed-label count; once a round changes at most
-    * [[DriverFinishEdges]] labels, the residual quotient edges
-    * {(lbl(u), lbl(v)) : lbl(u) < lbl(v)} are collected the same way,
-    * and if they fit, a union-find over them finishes the loop, mapped
-    * onto every label by a broadcast join.
+    * runs to convergence, one eager checkpoint per round, whose job
+    * also observes the changed-label count.
     *
     * @param pairs one row per undirected edge; self-loops and
     *              duplicate/reversed edges are tolerated (normalized
@@ -79,7 +79,7 @@ object GraphOps {
     connectedComponents(pairs, aCol, bCol, maxIter, DriverFinishEdges)
 
   /** [[connectedComponents]] with the driver-finish bound as a
-    * parameter: 0 runs the distributed loop to convergence.
+    * parameter: 0 always runs the distributed loop.
     */
   private[graft] def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                                          maxIter: Int, finishEdges: Int): DataFrame = {
@@ -93,15 +93,12 @@ object GraphOps {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val idType = und.schema("u").dataType
-    val order = driverOrder(idType)
-    val small = order.flatMap(driverComponents(und, finishEdges, _))
-    // a local (x, y) frame of ids, typed like the input's
-    def local(rows: Seq[(Any, Any)], x: String, y: String): DataFrame =
-      spark.createDataFrame(rows.map { case (a, b) => Row(a, b) }.asJava, StructType(Seq(
-        StructField(x, idType, nullable = false), StructField(y, idType, nullable = false))))
+    val small = driverOrder(idType).flatMap(driverComponents(und, finishEdges, _))
     if (small.isDefined) {
       und.unpersist()
-      return local(small.get, "id", "cluster_id")
+      return spark.createDataFrame(small.get.map { case (a, b) => Row(a, b) }.asJava,
+        StructType(Seq(StructField("id", idType, nullable = false),
+          StructField("cluster_id", idType, nullable = false))))
     }
     // symmetric edge list (u ~ v both ways) — the one shuffle key the
     // whole loop re-uses is `v` (the join side)
@@ -123,8 +120,7 @@ object GraphOps {
       .localCheckpoint(true)
     var iter = 0
     var changed = 1L
-    var finished: DataFrame = null
-    while (finished == null && changed > 0) {
+    while (changed > 0) {
       iter += 1
       require(iter <= maxIter,
         s"connectedComponents did not converge in $maxIter iterations")
@@ -156,26 +152,9 @@ object GraphOps {
       // of the node set
       Checkpoints.release(labels)
       labels = next.select("id", "lbl")
-      // the tail: labels still moving span a residual graph whose nodes
-      // are the labels; its components are the answer's, so a small one
-      // finishes on the driver instead of in O(log d) more rounds
-      if (changed > 0 && changed <= finishEdges) {
-        val lu = labels.select(col("id").as("u"), col("lbl").as("lu"))
-        val lv = labels.select(col("id").as("v"), col("lbl").as("lv"))
-        val quotient = und.join(lu, "u").join(lv, "v")
-          .filter(col("lu") =!= col("lv"))
-          .select(least(col("lu"), col("lv")).as("u"), greatest(col("lu"), col("lv")).as("v"))
-          .distinct()
-        order.flatMap(driverComponents(quotient, finishEdges, _)).foreach { roots =>
-          val rootOf = local(roots.filter { case (l, r) => l != r }, "from", "root")
-          finished = labels.join(broadcast(rootOf), labels("lbl") === rootOf("from"), "left")
-            .select(col("id"), coalesce(col("root"), col("lbl")).as("cluster_id"))
-        }
-      }
     }
     und.unpersist()
-    if (finished != null) finished
-    else labels.select(col("id"), col("lbl").as("cluster_id"))
+    labels.select(col("id"), col("lbl").as("cluster_id"))
   }
 
   /** The order Spark's `min` uses for `idType`, on the external values

@@ -166,8 +166,7 @@ object OracleSql {
     * synthesizes those signature-0 rows explicitly (UNION ALL branch).
     */
   private def simhashCtes(bands: Int, bitsPerBand: Int, probeHamming: Int): String = {
-    // Scala's 1L << 64 is 1L, so a whole-signature band needs its own mask
-    val mask = if (bitsPerBand == 64) "~(0::UBIGINT)" else ((1L << bitsPerBand) - 1).toString
+    val mask = (1L << bitsPerBand) - 1
     // radius-R multi-probe admits a candidate iff some band's buckets
     // are within hamming R (each side probes every ≤R-bit flip of its
     // own bucket) — for R = 0 this degenerates to bucket equality

@@ -50,10 +50,9 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   /** Driver-finish bounds that reach each path: 0 runs the distributed
-    * loop to convergence, 3 runs it and then finishes its tail on the
-    * driver, the default answers from round 0 on the driver.
+    * loop to convergence, the default answers on the driver.
     */
-  private val finishBounds = Seq(0, 3, GraphOps.DriverFinishEdges)
+  private val finishBounds = Seq(0, GraphOps.DriverFinishEdges)
 
   private def components(pairs: org.apache.spark.sql.DataFrame, bound: Int) =
     GraphOps.connectedComponents(pairs, "id_a", "id_b", 50, bound)
@@ -93,7 +92,7 @@ class GraphOpsSpec extends SparkSpec {
   test("connectedComponents: a 200,000-node path finishes on the driver without recursion") {
     val n = 200000L
     val path = spark.range(n - 1).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
-    val got = GraphOps.connectedComponents(path)
+    val got = components(path, n.toInt) // a bound past the default, so the path fits
     // the driver path answers with a local frame; the loop's is checkpointed
     assert(got.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
