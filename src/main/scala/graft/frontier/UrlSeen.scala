@@ -1,5 +1,6 @@
 package graft.frontier
 
+import graft.sources.InProcessLocalFs
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Row, SerializableHadoopConf, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,6 +37,11 @@ import org.apache.spark.util.sketch.BloomFilter
   *   - the EXACT seen table (per-round deltas, union-read) confirms the
   *     residue via one conditional left-anti join — only rows both
   *     sketches call "maybe" can match it and be dropped.
+  *
+  * Every sketch file (bloom, cuckoo and bloom-shard blobs, `_DONE`) is
+  * written through the Hadoop FS API with [[InProcessLocalFs.hadoopConf]],
+  * the snapshot store's own conf: on `file:` roots the blobs get their
+  * modes without a `chmod` process each.
   */
 object UrlSeen {
 
@@ -49,14 +55,15 @@ object UrlSeen {
   def cuckooBucket(urlHash: Long, buckets: Int = CuckooBuckets): Int =
     Math.floorMod(urlHash, buckets.toLong).toInt
 
-  /** The session's Hadoop conf (spark.hadoop.* — s3a creds, endpoints)
-    * for executor-side FS calls; a bare `new Configuration()` would
-    * silently drop them. Broadcast once per call: captured in a task
-    * closure, the full conf (~1 000 properties, ~110 KB) would be
+  /** The store's Hadoop conf ([[InProcessLocalFs.hadoopConf]]: the
+    * session's spark.hadoop.* — s3a creds, endpoints — plus the in-process
+    * local FS) for executor-side FS calls; a bare `new Configuration()`
+    * would silently drop them. Broadcast once per call: captured in a
+    * task closure, the full conf (~1 000 properties, ~110 KB) would be
     * deserialized by every task.
     */
   private def broadcastHadoopConf(spark: SparkSession): Broadcast[SerializableHadoopConf] =
-    spark.sparkContext.broadcast(new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+    spark.sparkContext.broadcast(new SerializableHadoopConf(InProcessLocalFs.hadoopConf(spark)))
 
   // ---------------------------------------------------------------------
   // Bloom layer — driver-held, incrementally maintained.
@@ -126,10 +133,11 @@ object UrlSeen {
 
   /** Persist the running bloom as ONE raw blob file, written from the
     * driver (tmp + rename; Hadoop FS API, so file:///hdfs/s3a all
-    * work). The bloom is DRIVER-held state — round-tripping it through
-    * a one-row LocalRelation write would serialize the full filter
-    * (megabytes at real capacities) into a task closure and pay a Spark
-    * job, just to move bytes the driver already has onto storage.
+    * work; pass [[InProcessLocalFs.hadoopConf]]). The bloom is
+    * DRIVER-held state — round-tripping it through a one-row
+    * LocalRelation write would serialize the full filter (megabytes at
+    * real capacities) into a task closure and pay a Spark job, just to
+    * move bytes the driver already has onto storage.
     */
   def writeBloomFile(bf: BloomFilter, path: String,
                      conf: org.apache.hadoop.conf.Configuration): Unit = {
@@ -256,8 +264,10 @@ object UrlSeen {
     * Sketch bytes move executor↔storage only — never through the
     * driver, and never through a shuffle of the candidate rows. Uses
     * the Hadoop FS API so the same code serves file://, hdfs:// and
-    * s3a:// roots. Idempotent under task retry: bytes are deterministic
-    * and the visible file appears only via delete-then-rename.
+    * s3a:// roots; the conf is the broadcast [[InProcessLocalFs.hadoopConf]],
+    * so a `file:` blob and its `.crc` get their modes without starting a
+    * process. Idempotent under task retry: bytes are deterministic and
+    * the visible file appears only via delete-then-rename.
     */
   private def writeBlobFile(dir: String, bucket: Int, bytes: Array[Byte],
                             conf: org.apache.hadoop.conf.Configuration): Unit =
@@ -307,14 +317,13 @@ object UrlSeen {
       Option(fs.globStatus(new Path(s"$dir/bloom-*.bin"))).exists(_.nonEmpty)
   }
 
-  private def driverHadoopConf: org.apache.hadoop.conf.Configuration =
-    SparkSession.getActiveSession.map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
+  /** Whether [[finishCuckooDir]] marked `dir` complete; probed with the
+    * active session's store conf, the one its writer used.
+    */
   def cuckooFilesReady(dir: String): Boolean = {
     import org.apache.hadoop.fs.Path
     val p = new Path(s"$dir/_DONE")
-    p.getFileSystem(driverHadoopConf).exists(p)
+    p.getFileSystem(InProcessLocalFs.hadoopConf(SparkSession.active)).exists(p)
   }
 
   /** Candidate row shape inside [[filterNew]] (what CrawlJob's in-batch
@@ -445,8 +454,7 @@ object CuckooFileCache {
     }
   }
 
-  def get(dir: String, bucket: Int,
-          conf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration())
+  def get(dir: String, bucket: Int, conf: org.apache.hadoop.conf.Configuration)
       : Option[CuckooFilter] = {
     touch(dir)
     cache.computeIfAbsent((dir, bucket), { case (d, b) =>

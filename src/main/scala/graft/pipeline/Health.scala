@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.AlphaSort
 import graft.model.CrawlConfig
-import graft.sources.SnapshotStore
+import graft.sources.{InProcessLocalFs, SnapshotStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The S10 surface: /health, /version and /debug re-expressed as tiny
@@ -51,12 +51,13 @@ object Health {
             // the bloom is a driver-written blob file (bloom.bin), or
             // per-bucket shard files beside the cuckoo blobs in sharded
             // mode. The blob probes go through the Hadoop FS API with the
-            // session conf, matching the writer (the blob files are the
-            // one store artifact written via that API; the SnapshotStore's
-            // own manifest/CURRENT metadata is java.nio local-path-only in
-            // this miniature, so a non-local root needs the real
-            // Iceberg-runtime swap the store documents).
-            val hconf = spark.sessionState.newHadoopConf()
+            // store's conf, the one the writers use (the parquet tables
+            // and the sketch blobs are written via that API; the
+            // SnapshotStore's own manifest/CURRENT/_SCHEMA metadata is
+            // java.nio local-path-only in this miniature, so a non-local
+            // root needs the real Iceberg-runtime swap the store
+            // documents).
+            val hconf = InProcessLocalFs.hadoopConf(spark)
             val bloomOk = {
               val p = new org.apache.hadoop.fs.Path(s"${store.snapshotDir(id)}/bloom.bin")
               p.getFileSystem(hconf).exists(p)

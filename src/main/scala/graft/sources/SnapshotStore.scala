@@ -105,14 +105,17 @@ final class SnapshotStore(val root: String) {
     deleteRecursively(Paths.get(snapshotDir(id)))
   }
 
-  /** Stage a table into the (uncommitted) snapshot `id`. */
+  /** Stage a table into the (uncommitted) snapshot `id`. Every parquet
+    * write of the store goes through [[InProcessLocalFs]], which sets
+    * the files' modes without a `chmod` process per file.
+    */
   def write(df: DataFrame, id: Int, table: String,
             sortWithinPartitionsBy: Seq[String] = Nil): Unit = {
     val out =
       if (sortWithinPartitionsBy.nonEmpty)
         df.sortWithinPartitions(sortWithinPartitionsBy.map(org.apache.spark.sql.functions.col): _*)
       else df
-    out.write.mode(SaveMode.Overwrite).parquet(tablePath(id, table))
+    out.write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options).parquet(tablePath(id, table))
     recordSchema(Paths.get(tablePath(id, table)), df.schema)
   }
 
@@ -129,7 +132,7 @@ final class SnapshotStore(val root: String) {
                              transformName: String,
                              transform: org.apache.spark.sql.Column): Unit = {
     df.withColumn(HiddenPartCol, transform)
-      .write.mode(SaveMode.Overwrite).partitionBy(HiddenPartCol)
+      .write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options).partitionBy(HiddenPartCol)
       .parquet(tablePath(id, table))
     recordSchema(Paths.get(tablePath(id, table)), df.schema)
     Files.writeString(transformMarker(id, table), transformName)
@@ -340,7 +343,7 @@ final class SnapshotStore(val root: String) {
       // files exist.
       tail.repartition(org.apache.spark.sql.functions.col(roundCol))
         .withColumn(HiddenPartCol, org.apache.spark.sql.functions.col(roundCol))
-        .write.mode(SaveMode.Overwrite).partitionBy(HiddenPartCol)
+        .write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options).partitionBy(HiddenPartCol)
         .parquet(tmp.toString)
     } else Files.createDirectories(tmp)
     // previous base's packed partitions ride in by rename, never rewrite
