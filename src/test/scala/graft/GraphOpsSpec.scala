@@ -1,7 +1,7 @@
 package graft
 
 import graft.datatools.{Dedup, GraphOps}
-import org.apache.spark.sql.{Column, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -54,8 +54,14 @@ class GraphOpsSpec extends SparkSpec {
     */
   private val finishBounds = Seq(0, GraphOps.DriverFinishEdges)
 
-  private def components(pairs: org.apache.spark.sql.DataFrame, bound: Int) =
+  private def components(pairs: DataFrame, bound: Int) =
     GraphOps.connectedComponents(pairs, "id_a", "id_b", 50, bound)
+
+  /** Whether a driver finish answered: its frame is a local relation,
+    * the loop's a checkpoint.
+    */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   test("property: components equal brute-force union-find on random graphs") {
     val edgeGen = Gen.listOfN(40,
@@ -163,15 +169,25 @@ class GraphOpsSpec extends SparkSpec {
     }
   }
 
+  /** [[finishBounds]] for [[GraphOps.hits]]: the loop, and the driver finish. */
+  private val hitsBounds = Seq(0, GraphOps.HitsDriverEdges)
+
+  private def hitsAt(edges: DataFrame, iters: Int, bound: Int, scale: Long = 1000000L) =
+    GraphOps.hits(edges, iters, scale, "src", "dst", bound)
+
+  private def hitsMap[A](edges: DataFrame, iters: Int, bound: Int): Map[A, (Long, Long)] =
+    hitsAt(edges, iters, bound).collect()
+      .map(r => r.getAs[A](0) -> (r.getLong(1), r.getLong(2))).toMap
+
   /** Brute-force HITS: the fixed-point integer iteration straight from
     * the scaladoc — sum-normalize (floor div to total = scale) after
     * each half-step; nodes outside a half-step's key set score 0.
     */
-  private def bruteHits(edges: Seq[(Long, Long)], iters: Int,
-                        scale: Long = 1000000L): Map[Long, (Long, Long)] = {
+  private def bruteHits[A](edges: Seq[(A, A)], iters: Int,
+                           scale: Long = 1000000L): Map[A, (Long, Long)] = {
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
     var hub = nodes.map(_ -> scale).toMap
-    var auth = Map.empty[Long, Long]
+    var auth = Map.empty[A, Long]
     (1 to iters).foreach { _ =>
       val rawA = edges.groupBy(_._2).view
         .mapValues(_.map(e => hub.getOrElse(e._1, 0L)).sum).toMap
@@ -189,18 +205,21 @@ class GraphOpsSpec extends SparkSpec {
     // 1 links to {2,3,4}; 4 also links back to 1 — 1 is the hub, 2-4
     // (and 1, via 4) are authorities
     val es = Seq((1L, 2L), (1L, 3L), (1L, 4L), (4L, 1L))
-    val got = GraphOps.hits(es.toDF("src", "dst"), iters = 3)
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    assert(got === bruteHits(es, 3))
-    assert(got(1L)._1 > got(2L)._1, "hub 1 must out-score leaf 2")
-    assert(got(2L)._2 > 0L && got(2L)._1 === 0L, "pure leaf: authority only")
+    hitsBounds.foreach { bound =>
+      val got = hitsMap[Long](es.toDF("src", "dst"), 3, bound)
+      assert(got === bruteHits(es, 3), s"bound $bound")
+      assert(got(1L)._1 > got(2L)._1, "hub 1 must out-score leaf 2")
+      assert(got(2L)._2 > 0L && got(2L)._1 === 0L, "pure leaf: authority only")
+    }
   }
 
   test("hits over an empty edge frame returns no rows") {
-    // every stage materializes empty, so AQE drops the observed totals
-    // and the normalization must recount them
+    // on the loop (bound 0) every stage materializes empty, so AQE
+    // drops the observed totals and the normalization must recount them
     val none = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(GraphOps.hits(none, iters = 2).collect().isEmpty)
+    hitsBounds.foreach { bound =>
+      assert(hitsAt(none, 2, bound).collect().isEmpty, s"bound $bound")
+    }
   }
 
   test("graph loops fail fast on bad parameters") {
@@ -215,10 +234,49 @@ class GraphOpsSpec extends SparkSpec {
     val edgeGen = Gen.listOfN(30, Gen.zip(Gen.choose(0L, 12L), Gen.choose(0L, 12L)))
     sample(edgeGen, 6) { es =>
       if (es.nonEmpty) {
-        val got = GraphOps.hits(es.toDF("src", "dst"), iters = 3)
-          .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-        assert(got === bruteHits(es, 3), s"edges: $es")
+        val want = bruteHits(es, 3)
+        hitsBounds.foreach { bound =>
+          val got = hitsMap[Long](es.toDF("src", "dst"), 3, bound)
+          assert(got === want, s"bound $bound, edges: $es")
+        }
       }
+    }
+  }
+
+  test("hits: string ids, non-ASCII included, give the same answer at both bounds") {
+    val es = Seq(("\uFF21x", "\uD83D\uDE00"), ("ü", "ß"), ("ß", "\uFF21x"), ("ü", "\uD83D\uDE00"),
+      ("e", "ü"), ("ß", "ß"), ("e", "ß"))
+    val want = bruteHits(es, 3)
+    hitsBounds.foreach { bound =>
+      assert(hitsMap[String](es.toDF("src", "dst"), 3, bound) === want, s"bound $bound")
+    }
+    assert(isLocal(hitsAt(es.toDF("src", "dst"), 3, GraphOps.HitsDriverEdges)),
+      "string ids finish on the driver")
+  }
+
+  test("hits: null endpoints and mixed Int/Long ids take the loop at the default bound") {
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val withNulls = Seq((Some(1L), Some(2L)), (None, Some(2L)), (Some(2L), None),
+      (Some(3L), Some(1L)), (Some(1L), Some(3L))).toDF("src", "dst")
+    val mixed = Seq((1, 2L), (2, 3L), (3, 1L), (1, 3L)).toDF("src", "dst")
+    Seq(withNulls, mixed).foreach { es =>
+      val got = hitsAt(es, 3, GraphOps.HitsDriverEdges)
+      assert(!isLocal(got), s"the loop answers for ${es.schema.simpleString}")
+      assert(rows(got) === rows(hitsAt(es, 3, 0)), es.schema.simpleString)
+    }
+    // Spark widens the Int ids to the Long dst's type in the joins
+    assert(hitsMap[Long](mixed, 3, GraphOps.HitsDriverEdges) ===
+      bruteHits(Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)), 3))
+  }
+
+  test("hits: an overflowing scale throws ArithmeticException at both bounds") {
+    // in-degree 2 at scale Long.MaxValue / 2: round 1's raw authority
+    // scale·indeg overflows a Long
+    val es = Seq((1L, 3L), (2L, 3L)).toDF("src", "dst")
+    hitsBounds.foreach { bound =>
+      val thrown = intercept[Throwable](hitsAt(es, 1, bound, Long.MaxValue / 2).collect())
+      val chain = Iterator.iterate(thrown)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(_.isInstanceOf[ArithmeticException]), s"bound $bound: $thrown")
     }
   }
 
@@ -391,9 +449,11 @@ class GraphOpsSpec extends SparkSpec {
     val b3 = live()
     GraphOps.bfsDepths(chain.toDF("src", "dst"), Seq(1L).toDF("id"), maxDepth = 8).collect()
     assert(live() - b3 <= 1, "bfsDepths leaked checkpoints")
-    val b4 = live()
-    GraphOps.hits(chain.toDF("src", "dst"), iters = 4).collect()
-    assert(live() - b4 <= 1, "hits leaked checkpoints")
+    hitsBounds.foreach { bound =>
+      val before = live()
+      hitsAt(chain.toDF("src", "dst"), 4, bound).collect()
+      assert(live() - before <= 1, s"hits leaked checkpoints at bound $bound")
+    }
   }
 
   test("observedOrRecount: a metric AQE pruned is recounted, a present one is read") {
