@@ -603,7 +603,8 @@ object GraphOps {
     * the raw agg's keys and the nodes left-join that restores zero
     * rows runs ONCE on the final output, not per half-step. Each
     * superseded checkpoint is released as soon as the next one has
-    * read it.
+    * read it. A null endpoint is no node, as in the SQL twin: its edge
+    * carries no score through a join on it, and no row has a null id.
     *
     * @return (id, hub_ppm, auth_ppm) one row per node
     */
@@ -647,10 +648,12 @@ object GraphOps {
     (1 to iters).foreach { i =>
       // round 1's hub₀ is `scale` on EVERY node, so its half-step
       // degenerates to a per-dst edge count (sum of hub₀(src) over in-
-      // edges = scale·indeg) — one exchange, no join, hub₀ never built
+      // edges = scale·indeg) — one exchange, no join, hub₀ never built.
+      // `count(src)`: the join drops an edge with a null src, and every
+      // dst keeps its key (raw 0 if all its in-edges have a null src)
       val a =
         if (i == 1)
-          normalized(e.groupBy(col("dst").as("id")).agg((count(lit(1)) * scale).as("raw")))
+          normalized(e.groupBy(col("dst").as("id")).agg((count(col("src")) * scale).as("raw")))
         else halfStep(hub, joinOn = "src", outKey = "dst")
       // `a` is materialized: the previous round's vectors are dead
       if (hub != null) { Checkpoints.release(hub); Checkpoints.release(auth) }
@@ -662,9 +665,12 @@ object GraphOps {
     // ≥ 1 by construction), so inductively every auth covers every dst
     // and every hub every src — the FULL OUTER join of the two final
     // vectors is exactly src ∪ dst, and a node missing from one side
-    // is a zero score on that side.
+    // is a zero score on that side. A null endpoint is no node: its
+    // half-step key still counts toward that half-step's total, as the
+    // SQL twin's `sum(raw)` does, but it gets no output row.
     val out = hub.select(col("id"), col("s").as("hub_ppm"))
       .join(auth.select(col("id"), col("s").as("auth_ppm")), Seq("id"), "full_outer")
+      .filter(col("id").isNotNull)
       .select(col("id"),
         coalesce(col("hub_ppm"), lit(0L)).as("hub_ppm"),
         coalesce(col("auth_ppm"), lit(0L)).as("auth_ppm"))

@@ -3,6 +3,7 @@ package graft.frontier
 import graft.model.{CrawlConfig, FrontierEntry}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
 
 import scala.collection.mutable
 
@@ -56,16 +57,57 @@ object Politeness {
 
   final case class Admission(entry: FrontierEntry, admitted: Boolean)
 
-  /** Split `frontier` into (admitted, deferred) per the politeness budget. */
+  /** The admitted rows' `url_hash`es, up to `cap` of them; past the cap
+    * it keeps only that it overflowed, and `value` is None. A growable
+    * `long[]`, so `value` can be read any number of times.
+    */
+  final class HashCollector(cap: Long) extends AccumulatorV2[Long, Option[Array[Long]]] {
+    private var hashes = Array.emptyLongArray
+    private var n = 0
+    private var overflowed = false
+    override def isZero: Boolean = n == 0 && !overflowed
+    override def copy(): HashCollector = { val c = new HashCollector(cap); c.merge(this); c }
+    override def reset(): Unit = { hashes = Array.emptyLongArray; n = 0; overflowed = false }
+    private def overflow(): Unit = { overflowed = true; hashes = Array.emptyLongArray; n = 0 }
+    override def add(h: Long): Unit =
+      if (overflowed) ()
+      else if (n >= cap) overflow()
+      else {
+        if (n == hashes.length) hashes = java.util.Arrays.copyOf(hashes, math.max(16, 2 * n))
+        hashes(n) = h; n += 1
+      }
+    override def merge(other: AccumulatorV2[Long, Option[Array[Long]]]): Unit = other match {
+      case o: HashCollector =>
+        if (o.overflowed) overflow()
+        var i = 0
+        while (i < o.n && !overflowed) { add(o.hashes(i)); i += 1 }
+    }
+    override def value: Option[Array[Long]] =
+      if (overflowed) None else Some(java.util.Arrays.copyOf(hashes, n))
+  }
+
+  /** Split `frontier` into (admitted, deferred) per the politeness budget.
+    *
+    * `counters` (admitted, deferred) and `admittedHashes` are filled by
+    * the admitted tail of each partition. When the admission runs in the
+    * result stage of an action (the crawl's frontier write, the first
+    * action over the persisted result), Spark merges each partition's
+    * updates exactly once, from its one successful task, before the
+    * action returns; so they are exact when read right then. A later
+    * recompute of a lost cached partition adds again, and updates made
+    * in a shuffle map stage can be applied more than once. The crawl
+    * reads them once, right after its frontier write: the admitted count
+    * feeds the manifest's `seen_total`, the WAP audit's expected row
+    * count and the stop test, and the hashes go into the bloom only when
+    * they number exactly that count (else the bloom merges the delta
+    * from the admitted rows themselves).
+    */
   def admit(
       spark: SparkSession,
       frontier: Dataset[FrontierEntry],
       cfg: CrawlConfig,
-      // stats-only accumulators (admitted, deferred): task retries can
-      // over-count; correctness never depends on them (the admitted SET
-      // comes from the returned Dataset)
-      counters: Option[(org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator)] = None
+      counters: Option[(LongAccumulator, LongAccumulator)] = None,
+      admittedHashes: Option[HashCollector] = None
   ): Dataset[Admission] = {
     import spark.implicits._
 
@@ -116,6 +158,9 @@ object Politeness {
           counters.foreach { case (adm, dfr) =>
             adm.add(heaps.valuesIterator.map(_.size.toLong).sum)
             dfr.add(deferredCount)
+          }
+          admittedHashes.foreach { acc =>
+            heaps.valuesIterator.foreach(_.foreach(e => acc.add(e.url_hash)))
           }
           heaps.valuesIterator.flatMap(_.iterator).map(Admission(_, admitted = true))
         }

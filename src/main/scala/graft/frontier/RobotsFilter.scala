@@ -31,7 +31,21 @@ import org.apache.spark.sql.functions._
 object RobotsFilter {
 
   private def orMatch(c: Column, patterns: Seq[String]): Column =
-    patterns.foldLeft(lit(false))((acc, p) => acc || c.rlike(p))
+    patterns.foldLeft(lit(false))((acc, p) => acc || c.rlike(withoutLeadingDotStar(p)))
+
+  /** `p` without a leading `.*` or `.*?`. `rlike` asks whether the
+    * pattern matches anywhere (`Matcher.find`), and `.*X` matches
+    * somewhere exactly when `X` does: `.*` may match the empty string
+    * at X's own start. The prefix only costs time — greedy, it runs to
+    * the end of the input and backtracks at every start, O(n²) in the
+    * URL's length. A prefix followed by `+`, `*`, `?` or `{` is a
+    * different quantifier (possessive, nested, counted) and stays.
+    */
+  private[graft] def withoutLeadingDotStar(p: String): String = {
+    val prefix = if (p.startsWith(".*?")) 3 else if (p.startsWith(".*")) 2 else 0
+    if (prefix == 0 || (p.length > prefix && "+*?{".indexOf(p.charAt(prefix)) >= 0)) p
+    else p.substring(prefix)
+  }
 
   /** Adds `robots_verdict`. `urlCol` must be the RAW url column name;
     * `hostMap` is the synthetic DNS table.

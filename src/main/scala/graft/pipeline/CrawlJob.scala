@@ -9,11 +9,13 @@ import graft.operators.SpanOps
 import graft.sources.{InProcessLocalFs, SnapshotStore, SyntheticWeb}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** The crawl archetype end-to-end (SURVEY.md §3.1 re-expressed):
   *
@@ -27,13 +29,33 @@ import org.apache.spark.sql.types.StringType
   *
   * Physical-plan budget per round (scale discipline):
   *   - A FIXED number of Spark jobs per round, the same at every round
-  *     ≥ 1 (CrawlJobSpec pins it). Without AQE that is ten: one per
-  *     table write, the robots broadcast, the metrics collect and the
-  *     bloom-delta collect. The state reload after a commit runs none:
-  *     snapshot tables carry their schema (SnapshotStore `_SCHEMA`), so
-  *     no read infers one from footers. Inference there cost one job
-  *     per snapshot read, so round r paid r+4 reload jobs and a crawl
-  *     O(r²) jobs over its life.
+  *     ≥ 1 (CrawlJobSpec pins it). Without AQE that is eight: one per
+  *     table write and the robots broadcast. Nothing is collected by a
+  *     job of its own: the metrics ride the fetch (each partition
+  *     reports its row into an accumulator as its rows stream out) and
+  *     the bloom delta rides the admission (the admitted tail adds its
+  *     url_hashes to a bounded accumulator); a missing report costs one
+  *     recount job, and a delta past `bloomCollectThreshold` one merge
+  *     job. The state reload after a commit runs none: snapshot tables
+  *     carry their schema (SnapshotStore `_SCHEMA`), so no read infers
+  *     one from footers. Inference there cost one job per snapshot
+  *     read, so round r paid r+4 reload jobs and a crawl O(r²) jobs
+  *     over its life.
+  *   - Jobs fan out as soon as their inputs exist: after the frontier
+  *     write (which materializes the admissions) the seen-delta write,
+  *     the bloom update and the cuckoo write start on the io pool and
+  *     run beside the fetch + spans write; the metrics, fetch-log and
+  *     pending writes start when the spans write has materialized the
+  *     fetch. A round is CPU-bound, so overlapping jobs fill the cores.
+  *   - As few write tasks as a table's rows need. `url_seen_delta`,
+  *     `fetch_log`, `pending` and `metrics` are written from cached
+  *     frames, `coalesce`d (narrow, no recomputation) to
+  *     ceil(rows / [[RowsPerWriteTask]]) tasks, at most numPartitions:
+  *     each write task pays a fixed cost (~25–31 ms of task time
+  *     measured at 4 threads) however few rows it writes. The
+  *     `frontier`, `output_spans` and `cuckoo` writes keep their
+  *     partitions: their job also computes the admission, the fetch +
+  *     convert or the cuckoo fold, which a coalesce would serialize.
   *   - Generated code shared by every round, and few enough classes to
   *     fit Spark's default codegen cache (`spark.sql.codegen.cache.
   *     maxEntries` = 100) with margin: ~70 entries for a 4-round crawl,
@@ -96,47 +118,71 @@ object CrawlJob {
       heaviest_url: String, heaviest_bytes: Long, outlinks_total: Long,
       redirects_total: Long)
 
-  /** The fetch columns [[partitionMetrics]] reads, in its order. */
-  private def metricsInput(fetched: DataFrame): DataFrame = fetched.select(
-    col("partition_id"), col("round"), col("error"), col("status"), col("bytes"),
-    col("host"), col("url_canon"), size(col("outlinks")), col("redirects"))
-
-  /** A fetch partition's lineage metrics in one pass over its rows. All
-    * rows of a fetch partition carry that partition's id, so each
-    * (partition_id, round) group IS one partition — no shuffle, no
-    * aggregation plan. The columns keep the aggregate semantics they
-    * had as a `groupBy`: `unique_origins` is `approx_count_distinct`'s
-    * HLL++ estimate (same helper, same 0.05 relative error),
+  /** A fetch partition's lineage metrics, built row by row as the fetch
+    * emits them. All rows of a fetch partition carry that partition's
+    * id, so each (partition_id, round) group IS one partition — no
+    * shuffle, no aggregation plan. The columns keep the aggregate
+    * semantics they had as a `groupBy`: `unique_origins` is
+    * `approx_count_distinct`'s HLL++ estimate (same helper, same 0.05
+    * relative error; its registers do not depend on row order),
     * `heaviest_url` is `max_by`'s first row with the largest `bytes`,
     * and a null error counts as neither converted nor failed.
     */
-  private def partitionMetrics(rows: Iterator[InternalRow]): Iterator[PartitionMetrics] =
-    if (!rows.hasNext) Iterator.empty
-    else {
-      val hll = new HyperLogLogPlusPlusHelper(0.05)
-      val registers = new GenericInternalRow(Array.fill[Any](hll.numWords)(0L))
-      var partitionId, round = -1
-      var heaviestUrl: String = null
-      var fetched, converted, bytes, failed, heaviestBytes, outlinks, redirects = 0L
-      rows.foreach { r =>
-        if (fetched == 0) { partitionId = r.getInt(0); round = r.getInt(1) }
-        fetched += 1
-        if (!r.isNullAt(2)) {
-          if (r.getUTF8String(2).numBytes() > 0) failed += 1
-          else if (r.getInt(3) == 200) converted += 1
-        }
-        val b = r.getLong(4)
-        bytes += b
-        if (!r.isNullAt(5)) hll.update(registers, 0, r.getUTF8String(5), StringType)
-        if (fetched == 1 || b > heaviestBytes) {
-          heaviestUrl = Option(r.getUTF8String(6)).map(_.toString).orNull; heaviestBytes = b
-        }
-        outlinks += r.getInt(7)
-        redirects += r.getInt(8)
+  private final class MetricsBuilder {
+    private val hll = new HyperLogLogPlusPlusHelper(0.05)
+    private val registers = new GenericInternalRow(Array.fill[Any](hll.numWords)(0L))
+    private var partitionId, round = -1
+    private var heaviestUrl: String = null
+    private var fetched, converted, bytes, failed, heaviestBytes, outlinks, redirects = 0L
+
+    def add(r: FetchedRow): Unit = {
+      if (fetched == 0) { partitionId = r.partition_id; round = r.round }
+      fetched += 1
+      if (r.error != null) {
+        if (r.error.nonEmpty) failed += 1
+        else if (r.status == 200) converted += 1
       }
-      Iterator.single(PartitionMetrics(partitionId, round, fetched, converted, bytes, failed,
-        hll.query(registers, 0), heaviestUrl, heaviestBytes, outlinks, redirects))
+      bytes += r.bytes
+      if (r.host != null) hll.update(registers, 0, UTF8String.fromString(r.host), StringType)
+      if (fetched == 1 || r.bytes > heaviestBytes) {
+        heaviestUrl = r.url_canon; heaviestBytes = r.bytes
+      }
+      if (r.outlinks != null) outlinks += r.outlinks.size
+      redirects += r.redirects
     }
+
+    /** None for a partition without rows. */
+    def result: Option[PartitionMetrics] =
+      if (fetched == 0) None
+      else Some(PartitionMetrics(partitionId, round, fetched, converted, bytes, failed,
+        hll.query(registers, 0), heaviestUrl, heaviestBytes, outlinks, redirects))
+  }
+
+  /** Rows per task of a small table's write: the tables whose input is
+    * a cached frame are `coalesce`d to [[writeTasks]] tasks. A write
+    * task has a fixed cost of its own (deserializing the job's Hadoop
+    * conf twice, opening and committing its parquet file), whatever
+    * it writes.
+    *
+    * Measured by a scratch probe (`Sessions.local(4, 4, AQE off)`, a
+    * cached 13-column frame shaped like `fetch_log`, `SnapshotStore.
+    * write` of `coalesce(k)`, median of 10; 4-CPU host). Summed task
+    * time and wall time, 1 task vs 4:
+    *   - 1,000 rows: 28 vs 122 ms task, 60 vs 65 ms wall;
+    *   - 2¹⁴ rows: 46 vs 139 ms task, 73 vs 74 ms wall;
+    *   - 2¹⁶ rows: 75 vs 183 ms task, 98 vs 76 ms wall;
+    *   - 2¹⁸ rows: 222 vs 322 ms task, 247 vs 116 ms wall.
+    * So a task costs ~25–31 ms fixed and a row ~0.74 µs. At 2¹⁶ rows
+    * half a table's row work (~24 ms) is about one task's fixed cost:
+    * below that a second task buys no wall time and costs a core's
+    * worth of fixed work that the round's concurrent jobs need.
+    */
+  private[pipeline] val RowsPerWriteTask: Long = 1L << 16
+
+  /** ceil(rows / [[RowsPerWriteTask]]), clamped to [1, numPartitions]. */
+  private def writeTasks(rows: Long, cfg: CrawlConfig): Int =
+    math.min(cfg.numPartitions.toLong,
+      math.max(1L, (rows + RowsPerWriteTask - 1) / RowsPerWriteTask)).toInt
 
   /** The round as a Column that generated code does not inline. Spark
     * writes integer literals into the generated classes, so `lit(round)`
@@ -368,11 +414,16 @@ object CrawlJob {
         .as[FrontierEntry]
 
       // 6. politeness admission — THE full shuffle of the round.
-      // Admission counters come from accumulators filled during the
-      // cache-materializing first action (the frontier write).
+      // Admission counters and the admitted url_hashes come from
+      // accumulators filled by the result stage of the cache-
+      // materializing first action (the frontier write), read once
+      // right after it.
       val admAcc = spark.sparkContext.longAccumulator(s"admitted-$round")
       val defAcc = spark.sparkContext.longAccumulator(s"deferred-$round")
-      val admissions = Politeness.admit(spark, frontier, cfg, Some((admAcc, defAcc))).persist()
+      val hashAcc = new Politeness.HashCollector(cfg.bloomCollectThreshold)
+      spark.sparkContext.register(hashAcc, s"admitted-hashes-$round")
+      val admissions = Politeness.admit(spark, frontier, cfg, Some((admAcc, defAcc)),
+        Some(hashAcc)).persist()
       // columnar split (no per-row Admission object churn): the typed
       // view is only re-materialized where the fetch genuinely needs
       // FrontierEntry objects
@@ -395,14 +446,82 @@ object CrawlJob {
       val deniedCount = observedOrRecount(robotsObs, "denied")(robotsRecount.getLong(1))
       val admittedCount = admAcc.value.longValue()
       val deferredCount = defAcc.value.longValue()
+      // None past bloomCollectThreshold; a count other than admittedCount
+      // (a recomputed partition added twice) also takes the merge below
+      val admittedHashes = hashAcc.value.filter(_.length == admittedCount)
 
-      // 8. fetch + decompose + convert (narrow, partition-local)
+      // ---- every job from here on reads the cached admissions or the
+      //      cached fetch; the io-pool jobs are awaited together before
+      //      the commit ----
+
+      // 8. seen ∪ admitted — DELTA write only (O(new), the Iceberg
+      //    append): readers union url_seen_delta across snapshots.
+      //    Both sketches fold in ONLY this round's delta. These three
+      //    jobs need only the admissions and driver state, so they start
+      //    now and run beside the fetch:
+      //      - bloom: insert the admitted hashes the admission collected
+      //        (no job), or a distributed OR-merge past
+      //        bloomCollectThreshold; then re-broadcast + a driver-side
+      //        blob-file write
+      //      - cuckoo: executor-side cogroup of delta hashes with the
+      //        persisted blobs; bytes never visit the driver
+      val newSeen = admitted.toDF().select(col("url_canon"), col("url_hash"),
+        col("round").as("round_first_seen"))
+      val seenFut = job("seen-write")(store.write(
+        newSeen.coalesce(writeTasks(admittedCount, cfg)), round, "url_seen_delta"))
+
+      val bloomFut: scala.concurrent.Future[Any] =
+        if (bloomSharded) scala.concurrent.Future.successful(()) // shards ride the cuckoo job
+        else job("bloom-update") {
+          val bloom = bloomOpt.get
+          if (admittedCount > 0) {
+            admittedHashes match {
+              case Some(hashes) => hashes.foreach(bloom.putLong)
+              case None =>
+                bloom.mergeInPlace(UrlSeen.bloomOfDelta(newSeen, bloomCapacity, bloomFpp))
+            }
+            // unpersist (not destroy): cached lineage from this round may
+            // still reference the old broadcast; a re-fetch would resend
+            // the mutated bloom, which only ADDS keys — extra maybe-seen
+            // rows are re-confirmed by the exact layer, never dropped
+            val oldBc = bloomBcOpt.get
+            bloomBcOpt = Some(spark.sparkContext.broadcast(bloom))
+            oldBc.unpersist(blocking = false)
+          }
+          UrlSeen.writeBloomFile(bloom, s"${store.snapshotDir(round)}/bloom.bin", hadoopConf)
+        }
+
+      // sharded mode: the bloom shards fold the SAME delta inside the
+      // cuckoo cogroup, reading each bucket's previous shard from the
+      // previous round's dir — no driver bytes, no broadcast
+      val shardSpec =
+        if (bloomSharded) Some(UrlSeen.BloomShardSpec(cuckooDir, perBucketCapacity, bloomFpp))
+        else None
+      val cuckooFut = job("cuckoo-write") {
+        // ONE job feeds both layouts: the fused cogroup writes each
+        // bucket's blob file as it computes the bytes, and the action
+        // that drives it is the canonical parquet write (resume source).
+        // `_DONE` marks the blob dir only after that action succeeds.
+        val binDir = s"${store.snapshotDir(round)}/cuckoo_bin"
+        store.write(UrlSeen.updateCuckoo(spark, cuckoo,
+          newSeen.select("url_hash"), perBucketCapacity, cuckooBuckets,
+          blobDir = Some(binDir), bloomShards = shardSpec), round, "cuckoo")
+        UrlSeen.finishCuckooDir(binDir, hadoopConf)
+      }
+
+      // 9. fetch + decompose + convert (narrow, partition-local). Each
+      //    partition's lineage metrics are built as its rows stream out
+      //    and reported by partition id once it is exhausted; `None`
+      //    marks an empty partition.
       val uni = universe
       val opts = convertOptions
       val hardTimeoutMs = cfg.softTimeoutMs + 5000L // api/api.go:511 grace
+      val metricsAcc =
+        spark.sparkContext.collectionAccumulator[(Int, Option[PartitionMetrics])](s"metrics-$round")
       val fetched = admitted.mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
-        it.map { e =>
+        val metrics = new MetricsBuilder
+        val rows = it.map { e =>
           val f = uni.fetch(e)
           if (f.error.nonEmpty)
             FetchedRow(f.url_canon, f.url_hash, f.host, round, pid, f.status,
@@ -444,40 +563,51 @@ object CrawlJob {
             }
           }
         }
+        rows.map { r => metrics.add(r); r } ++
+          Iterator.single(()).flatMap { _ => metricsAcc.add(pid -> metrics.result); Iterator.empty }
       }.persist()
 
-      // 9. outputs: spans snapshot (sorted in-partition, no re-shuffle of
-      //    the heavy payload) + per-partition lineage metrics
+      // 10. outputs: spans snapshot (sorted in-partition, no re-shuffle
+      //     of the heavy payload). The first action over the fetch: its
+      //     result tasks compute every fetch partition, and Spark merges
+      //     their metrics reports before the action returns.
       labelled("spans-write")(store.write(
         fetched.filter(r => r.error.isEmpty && r.status == 200)
           .select($"doc_id", $"spans", $"round")
           .sortWithinPartitions("doc_id"),
         round, "output_spans"))
 
-      // ---- steps 9-11 are independent jobs over the cached frames;
-      //      each runs on the io pool, awaited together before commit ----
-
-      // per-partition lineage metrics: one pass over each cached fetch
-      // partition, no shuffle; the rows are tiny (≤ numPartitions), so
-      // global fetch stats derive locally and the metrics table is
-      // written from the collected rows
-      val metricsFut = job("metrics") {
-        val rows = metricsInput(fetched.toDF()).queryExecution.toRdd
-          .mapPartitions(partitionMetrics).collect()
-        store.write(rows.toSeq.toDF().drop("outlinks_total").coalesce(1), round, "metrics")
-        rows
-      }
+      // per-partition lineage metrics: the reports, when every fetch
+      // partition made one; else one recount job over the cached fetch
+      // with the same builder — an absent metric is recounted, never 0.
+      // Keyed by partition id: a recomputed partition reports the same
+      // value again.
+      val reported = metricsAcc.value.asScala.toMap
+      val metricRows: Seq[PartitionMetrics] =
+        if (reported.size == fetched.queryExecution.toRdd.getNumPartitions)
+          reported.values.flatten.toSeq.sortBy(_.partition_id)
+        else labelled("metrics")(fetched.mapPartitions { it =>
+          val metrics = new MetricsBuilder
+          it.foreach(metrics.add)
+          metrics.result.iterator
+        }.collect().toSeq)
+      val fetchedCount = metricRows.map(_.urls_fetched).sum
+      val failedCount = metricRows.map(_.failed_count).sum
+      val outlinkCount = metricRows.map(_.outlinks_total).sum
+      val metricsFut = job("metrics")(store.write(metricRows.toDF().drop("outlinks_total")
+        .coalesce(writeTasks(metricRows.size, cfg)), round, "metrics"))
 
       // per-URL lineage (FIXTURES.md fetch_log): slim projection of the
-      // cached fetch frame — status/bytes/error per URL, no spans
+      // cached fetch frame — status/bytes/error per URL, no spans; one
+      // row per admitted URL
       val fetchLogFut = job("fetch-log-write")(store.write(
         fetched.toDF().select("url_canon", "url_hash", "host", "round",
           "partition_id", "status", "bytes", "error",
           "cookies_applied", "headers_applied", "duration_ms",
-          "redirects", "final_url"),
+          "redirects", "final_url").coalesce(writeTasks(admittedCount, cfg)),
         round, "fetch_log"))
 
-      // 9b. OPT-IN incremental doc near-dup: this round's converted
+      // 10b. OPT-IN incremental doc near-dup: this round's converted
       // docs dedup against the ACCUMULATED minhash_index (delta-append
       // like url_seen_delta) — prior rounds' signatures are read from
       // the store, never recomputed, and prior rounds' span text is
@@ -514,56 +644,6 @@ object CrawlJob {
           caches.foreach(_.unpersist())
         }
 
-      // 10. seen ∪ admitted — DELTA write only (O(new), the Iceberg
-      //     append): readers union url_seen_delta across snapshots.
-      //     Both sketches fold in ONLY this round's delta:
-      //       - bloom: collect+insert for small deltas (O(delta·8B)
-      //         through the driver), distributed OR-merge otherwise;
-      //         then re-broadcast + a driver-side blob-file write
-      //       - cuckoo: executor-side cogroup of delta hashes with the
-      //         persisted blobs; bytes never visit the driver
-      val newSeen = admitted.toDF().select(col("url_canon"), col("url_hash"),
-        col("round").as("round_first_seen"))
-      val seenFut = job("seen-write")(store.write(newSeen, round, "url_seen_delta"))
-
-      val bloomFut: scala.concurrent.Future[Any] =
-        if (bloomSharded) scala.concurrent.Future.successful(()) // shards ride the cuckoo job
-        else job("bloom-update") {
-          val bloom = bloomOpt.get
-          if (admittedCount > 0) {
-            if (admittedCount <= cfg.bloomCollectThreshold)
-              admitted.toDF().select(col("url_hash")).as[Long].collect().foreach(bloom.putLong)
-            else
-              bloom.mergeInPlace(UrlSeen.bloomOfDelta(newSeen, bloomCapacity, bloomFpp))
-            // unpersist (not destroy): cached lineage from this round may
-            // still reference the old broadcast; a re-fetch would resend
-            // the mutated bloom, which only ADDS keys — extra maybe-seen
-            // rows are re-confirmed by the exact layer, never dropped
-            val oldBc = bloomBcOpt.get
-            bloomBcOpt = Some(spark.sparkContext.broadcast(bloom))
-            oldBc.unpersist(blocking = false)
-          }
-          UrlSeen.writeBloomFile(bloom, s"${store.snapshotDir(round)}/bloom.bin", hadoopConf)
-        }
-
-      // sharded mode: the bloom shards fold the SAME delta inside the
-      // cuckoo cogroup, reading each bucket's previous shard from the
-      // previous round's dir — no driver bytes, no broadcast
-      val shardSpec =
-        if (bloomSharded) Some(UrlSeen.BloomShardSpec(cuckooDir, perBucketCapacity, bloomFpp))
-        else None
-      val cuckooFut = job("cuckoo-write") {
-        // ONE job feeds both layouts: the fused cogroup writes each
-        // bucket's blob file as it computes the bytes, and the action
-        // that drives it is the canonical parquet write (resume source).
-        // `_DONE` marks the blob dir only after that action succeeds.
-        val binDir = s"${store.snapshotDir(round)}/cuckoo_bin"
-        store.write(UrlSeen.updateCuckoo(spark, cuckoo,
-          newSeen.select("url_hash"), perBucketCapacity, cuckooBuckets,
-          blobDir = Some(binDir), bloomShards = shardSpec), round, "cuckoo")
-        UrlSeen.finishCuckooDir(binDir, hadoopConf)
-      }
-
       // 11. next pending = deferred ∪ outlinks of this round — fully
       // columnar (codegen posexplode + hash; no PendingUrl object per
       // outlink). `hash()` IS UrlFunctions.murmur3 (Murmur3_x86_32,
@@ -580,15 +660,13 @@ object CrawlJob {
         .select(col("entry.url_canon").as("url"), col("entry.priority").as("priority"),
           col("entry.seq").as("seq"))
         .unionByName(outlinks)
-      val pendingFut = job("pending-write")(store.write(pendingNext, round, "pending"))
+      val pendingFut = job("pending-write")(store.write(
+        pendingNext.coalesce(writeTasks(deferredCount + outlinkCount, cfg)), round, "pending"))
 
       // barrier: everything staged under v<round> must exist before the
       // atomic commit makes the snapshot visible
-      val metricRows = await(metricsFut)
-      val fetchedCount = metricRows.map(_.urls_fetched).sum
-      val failedCount = metricRows.map(_.failed_count).sum
-      val outlinkCount = metricRows.map(_.outlinks_total).sum
-      Seq(fetchLogFut, seenFut, bloomFut, cuckooFut, pendingFut, dedupFut).foreach(await)
+      Seq(seenFut, bloomFut, cuckooFut, metricsFut, fetchLogFut, pendingFut, dedupFut)
+        .foreach(await)
 
       // 12. atomic commit → resumable checkpoint. With cfg.wapAudit the
       // commit splits into Iceberg's write–audit–publish: stage the

@@ -10,6 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end crawl vs the straight-line reference model: final URL-seen
   * set, per-round canonical frontier order, and output span-sequence
@@ -392,31 +393,122 @@ class CrawlJobSpec extends SparkSpec {
     assert(store2.currentSnapshot === Some(0))
   }
 
-  test("every round >= 1 runs the same number of Spark jobs (no reload job per snapshot)") {
+  /** A 4-round crawl into a fresh store under a listener: its rounds,
+    * the store, and each round's job descriptions. A round's jobs start
+    * after the previous round's commit (the state reload after a commit
+    * belongs to the next round) and by its own.
+    */
+  private def crawlJobs(c: CrawlConfig, adaptive: Boolean = true)
+      : (Seq[CrawlJob.RoundStats], SnapshotStore, Seq[Seq[String]]) = {
     import spark.implicits._
     val root = Files.createTempDirectory("crawl-jobs").toString
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(e.time -> String.valueOf(e.properties.getProperty("spark.job.description")))
     }
     val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", adaptive.toString)
     val t0 = System.currentTimeMillis()
     sc.addSparkListener(listener)
     val rounds =
       try CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-        cfg.copy(maxRounds = 4), root).rounds
-      finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+        c.copy(maxRounds = 4), root).rounds
+      finally {
+        ListenerBusDrain(sc); sc.removeSparkListener(listener)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      }
     assert(rounds.size === 4)
-    // a round's jobs start after the previous round's commit (the state
-    // reload after a commit belongs to the next round) and by its own
     val store = new SnapshotStore(root)
     val commits = rounds.map(r => Files.getLastModifiedTime(
       java.nio.file.Paths.get(store.snapshotDir(r.round), "MANIFEST.json")).toMillis)
-    val bounds = (t0 +: commits).sliding(2).toSeq
-    val jobs = bounds.map { case Seq(a, b) => starts.toArray.count { t =>
-      val ms = t.asInstanceOf[Long]; ms > a && ms <= b } }
+    val jobs = (t0 +: commits).sliding(2).toSeq.map { case Seq(a, b) =>
+      starts.asScala.toSeq.collect { case (t, label) if t > a && t <= b => label }
+    }
+    (rounds, store, jobs)
+  }
+
+  test("every round >= 1 runs the same number of Spark jobs (no reload job per snapshot)") {
+    val jobs = crawlJobs(cfg)._3.map(_.size)
     info(s"jobs per round: ${jobs.mkString(", ")}")
     assert(jobs.tail.distinct.size === 1, s"jobs per round: ${jobs.mkString(", ")}")
+  }
+
+  test("without AQE a round runs at most 8 jobs, and small tables write one file") {
+    val (rounds, store, jobs) = crawlJobs(cfg, adaptive = false)
+    info(s"jobs per round: ${jobs.map(_.size).mkString(", ")}")
+    jobs.zipWithIndex.foreach { case (js, r) =>
+      assert(js.size <= 8, s"round $r ran ${js.size} jobs: ${js.mkString(", ")}")
+    }
+    // a table of a few hundred rows is one write task, so one data file
+    for (st <- rounds; t <- Seq("url_seen_delta", "fetch_log", "pending")) {
+      val files = new java.io.File(store.tablePath(st.round, t)).list()
+        .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+      assert(files.length === 1, s"round ${st.round} $t: ${files.mkString(", ")}")
+    }
+  }
+
+  test("bloom.bin is the same from the admitted hashes and from the distributed merge") {
+    // at bloomCollectThreshold = 1 every round's admitted hashes overflow
+    // the collector, so the bloom merges a delta bloom built by a job
+    val (collected, collectedStore, collectedJobs) = crawlJobs(cfg)
+    val (merged, mergedStore, mergedJobs) = crawlJobs(cfg.copy(bloomCollectThreshold = 1L))
+    assert(collectedJobs.forall(!_.contains("bloom-update")), "the admitted hashes need no job")
+    assert(mergedJobs.forall(_.contains("bloom-update")), "every round merges by a job")
+    val model4 = ReferenceCrawl.run(seeds, robots,
+      hostMap.map(h => h.host -> h.ips).toMap, universe, cfg.copy(maxRounds = 4))
+    Seq(collectedStore, mergedStore).foreach { store =>
+      val engineSeen = store.readSeen(spark, 3)
+        .select("url_canon", "round_first_seen")
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(engineSeen === model4.seen, store.root)
+      model4.rounds.foreach { rt =>
+        val order = store.read(spark, rt.round, "frontier")
+          .orderBy(col("host_hash"), col("priority").desc, col("seq"), col("url_canon"))
+          .select("url_canon").collect().map(_.getString(0)).toSeq
+        assert(order === rt.admittedOrdered, s"${store.root} round ${rt.round}")
+      }
+    }
+    assert(collected.map(_.admitted) === merged.map(_.admitted))
+    collected.foreach { st =>
+      def bloom(store: SnapshotStore) =
+        Files.readAllBytes(Paths.get(store.snapshotDir(st.round), "bloom.bin"))
+      assert(bloom(collectedStore).sameElements(bloom(mergedStore)), s"round ${st.round}")
+    }
+  }
+
+  test("metrics rows equal a per-partition recount over the round's fetch_log") {
+    summary
+    val store = new SnapshotStore(storeRoot)
+    store.committedSnapshots.foreach { r =>
+      val log = store.read(spark, r, "fetch_log")
+      val byPartition = log.select("partition_id", "url_canon", "status", "bytes", "error",
+        "redirects").collect().groupBy(_.getInt(0))
+      // HLL++ registers do not depend on row order, so the estimate is
+      // the aggregate's own
+      val origins = log.groupBy("partition_id").agg(approx_count_distinct("host", 0.05))
+        .collect().map(x => x.getInt(0) -> x.getLong(1)).toMap
+      val metrics = store.read(spark, r, "metrics").collect()
+        .map(m => m.getAs[Int]("partition_id") -> m).toMap
+      assert(metrics.keySet === byPartition.keySet, s"round $r partitions")
+      byPartition.foreach { case (pid, rows) =>
+        val m = metrics(pid)
+        val at = s"round $r partition $pid"
+        val bytes = rows.map(_.getLong(3))
+        assert(m.getAs[Int]("round") === r, at)
+        assert(m.getAs[Long]("urls_fetched") === rows.length.toLong, at)
+        assert(m.getAs[Long]("urls_converted") ===
+          rows.count(x => x.getString(4) == "" && x.getInt(2) == 200).toLong, at)
+        assert(m.getAs[Long]("bytes_total") === bytes.sum, at)
+        assert(m.getAs[Long]("failed_count") === rows.count(_.getString(4).nonEmpty).toLong, at)
+        assert(m.getAs[Long]("redirects_total") === rows.map(_.getInt(5).toLong).sum, at)
+        assert(m.getAs[Long]("heaviest_bytes") === bytes.max, at)
+        assert(rows.filter(_.getLong(3) == bytes.max).map(_.getString(1))
+          .contains(m.getAs[String]("heaviest_url")), at)
+        assert(m.getAs[Long]("unique_origins") === origins(pid), at)
+      }
+    }
   }
 
   test("a repeated crawl compiles almost no code: the crawl's classes fit the codegen cache") {

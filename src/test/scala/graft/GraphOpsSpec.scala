@@ -269,6 +269,19 @@ class GraphOpsSpec extends SparkSpec {
       bruteHits(Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)), 3))
   }
 
+  test("hits: an edge with a null src gives no in-degree and no null-id row") {
+    // the SQL twin (OracleSql q91's CTEs) over these edges, 1 round:
+    // its auth join on src drops (null, 2); its hub total still counts
+    // the null src's group, and its node join drops the null id
+    val es = Seq((Some(1L), 2L), (Some(1L), 3L), (None, 2L), (Some(2L), 3L)).toDF("src", "dst")
+    hitsBounds.foreach { bound =>
+      val got = hitsAt(es, 1, bound).collect().map(r => r.get(0) -> (r.getLong(1), r.getLong(2)))
+      assert(got.toMap === Map(1L -> (500000L, 0L), 2L -> (333333L, 333333L),
+        3L -> (0L, 666666L)), s"bound $bound")
+      assert(got.length === 3, s"bound $bound")
+    }
+  }
+
   test("hits: an overflowing scale throws ArithmeticException at both bounds") {
     // in-degree 2 at scale Long.MaxValue / 2: round 1's raw authority
     // scale·indeg overflows a Long

@@ -52,6 +52,40 @@ class HotHostSpec extends SparkSpec {
     }
   }
 
+  test("admit collects the admitted url_hashes, up to a cap") {
+    import spark.implicits._
+    val cfg = CrawlConfig(numPartitions = 4, saltsPerHost = 2, hostBudgetPerRound = 3)
+    val entries = (0 until 400).map { i =>
+      val host = s"h${i % 40}.test"
+      val u = s"https://$host/p/$i"
+      val h = UrlFunctions.urlHash(u)
+      FrontierEntry(u, u, h, host, UrlFunctions.hostSalt(host, h, 2),
+        priority = (i % 7) / 7.0, seq = i.toLong, round = 0)
+    }.toDS()
+    def admitted(cap: Long): (Seq[Long], Option[Array[Long]]) = {
+      val acc = new Politeness.HashCollector(cap)
+      spark.sparkContext.register(acc)
+      val hashes = Politeness.admit(spark, entries, cfg, admittedHashes = Some(acc))
+        .filter(_.admitted).map(_.entry.url_hash).collect().toSeq
+      (hashes, acc.value)
+    }
+    val (hashes, collected) = admitted(1000L)
+    assert(hashes.size === 40 * cfg.hostBudgetPerRound)
+    assert(collected.map(_.toSeq.sorted) === Some(hashes.sorted))
+    // readable again: `value` copies, it does not hand out its buffer
+    val acc = new Politeness.HashCollector(1000L)
+    hashes.foreach(acc.add)
+    assert(acc.value.map(_.toSeq) === acc.value.map(_.toSeq))
+    // past the cap only the overflow is kept, in a task or by a merge
+    assert(admitted(hashes.size - 1L)._2 === None)
+    val (a, b) = (new Politeness.HashCollector(3L), new Politeness.HashCollector(3L))
+    Seq(1L, 2L).foreach(a.add); Seq(3L, 4L).foreach(b.add)
+    a.merge(b)
+    assert(a.value === None && !a.isZero)
+    a.reset()
+    assert(a.isZero && a.value.map(_.toSeq) === Some(Seq.empty))
+  }
+
   test("O4: per-partition queue cap defers the overflow (supervisor.go:302-317)") {
     import spark.implicits._
     val cfg = CrawlConfig(numPartitions = 1, saltsPerHost = 1,
