@@ -57,9 +57,9 @@ object UrlSeen {
 
   /** The store's Hadoop conf ([[InProcessLocalFs.hadoopConf]]: the
     * session's spark.hadoop.* — s3a creds, endpoints — plus the in-process
-    * local FS) for executor-side FS calls; a bare `new Configuration()`
-    * would silently drop them. Broadcast once per call: captured in a
-    * task closure, the full conf (~1 000 properties, ~110 KB) would be
+    * local FS, without what Hadoop's defaults give) for executor-side FS
+    * calls; a bare `new Configuration()` would silently drop them.
+    * Broadcast once per call: captured in a task closure, it would be
     * deserialized by every task.
     */
   private def broadcastHadoopConf(spark: SparkSession): Broadcast[SerializableHadoopConf] =

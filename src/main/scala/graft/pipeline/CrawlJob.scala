@@ -51,8 +51,8 @@ import scala.jdk.CollectionConverters._
   *     `fetch_log`, `pending` and `metrics` are written from cached
   *     frames, `coalesce`d (narrow, no recomputation) to
   *     ceil(rows / [[RowsPerWriteTask]]) tasks, at most numPartitions:
-  *     each write task pays a fixed cost (~25–31 ms of task time
-  *     measured at 4 threads) however few rows it writes. The
+  *     each write task pays a fixed cost (~17 ms of task time measured
+  *     at 4 threads) however few rows it writes. The
   *     `frontier`, `output_spans` and `cuckoo` writes keep their
   *     partitions: their job also computes the admission, the fetch +
   *     convert or the cuckoo fold, which a coalesce would serialize.
@@ -89,7 +89,11 @@ import scala.jdk.CollectionConverters._
   *     FS forks `chmod` for each of them: ~256 processes a steady round
   *     of crawlbench's crawl-deep at 4 threads (527 forks by the host's
   *     counter), and 0.19 s of its 0.45 s write barrier. In-process, the
-  *     crawl's JVM starts 2–3 a round (Spark's `rm` of its temp dirs).
+  *     crawl's JVM still starts 2–3 a round, each an `rm -rf` of an
+  *     `ArtifactManager` dir: `persist()` (`CacheManager.cacheQuery`)
+  *     clones the session state, and each clone's `ArtifactManager`
+  *     registers a Cleaner that forks that `rm` once the clone is
+  *     unreachable.
   */
 object CrawlJob {
 
@@ -160,22 +164,25 @@ object CrawlJob {
 
   /** Rows per task of a small table's write: the tables whose input is
     * a cached frame are `coalesce`d to [[writeTasks]] tasks. A write
-    * task has a fixed cost of its own (deserializing the job's Hadoop
-    * conf twice, opening and committing its parquet file), whatever
-    * it writes.
+    * task has a fixed cost of its own (deserializing the store's
+    * Hadoop conf twice, opening and committing its parquet file),
+    * whatever it writes.
     *
     * Measured by a scratch probe (`Sessions.local(4, 4, AQE off)`, a
     * cached 13-column frame shaped like `fetch_log`, `SnapshotStore.
-    * write` of `coalesce(k)`, median of 10; 4-CPU host). Summed task
-    * time and wall time, 1 task vs 4:
-    *   - 1,000 rows: 28 vs 122 ms task, 60 vs 65 ms wall;
-    *   - 2¹⁴ rows: 46 vs 139 ms task, 73 vs 74 ms wall;
-    *   - 2¹⁶ rows: 75 vs 183 ms task, 98 vs 76 ms wall;
-    *   - 2¹⁸ rows: 222 vs 322 ms task, 247 vs 116 ms wall.
-    * So a task costs ~25–31 ms fixed and a row ~0.74 µs. At 2¹⁶ rows
-    * half a table's row work (~24 ms) is about one task's fixed cost:
-    * below that a second task buys no wall time and costs a core's
-    * worth of fixed work that the round's concurrent jobs need.
+    * write` of `coalesce(k)`, median of the last 10 of 15; 4-CPU host).
+    * Summed task time and wall time, 1 task vs 4:
+    *   - 1,000 rows: 14.5 vs 66 ms task, 33 vs 35 ms wall;
+    *   - 2¹⁴ rows: 30 vs 74 ms task, 46 vs 37 ms wall;
+    *   - 2¹⁶ rows: 62 vs 135 ms task, 76 vs 54 ms wall;
+    *   - 2¹⁸ rows: 198 vs 287 ms task, 210 vs 96 ms wall.
+    * So a task costs ~17 ms fixed and a row ~0.70 µs. Half a table's row
+    * work equals one task's fixed cost at ~2¹⁵·⁶ rows: below that a
+    * second task buys at most a few ms of wall time and costs a core's
+    * worth of fixed work that the round's concurrent jobs need. With the
+    * session's full Hadoop conf a task cost ~27 ms fixed (same probe,
+    * same host: 24 vs 107 ms task at 1,000 rows), a break-even of ~2¹⁶·²
+    * rows; the bound stays at 2¹⁶.
     */
   private[pipeline] val RowsPerWriteTask: Long = 1L << 16
 

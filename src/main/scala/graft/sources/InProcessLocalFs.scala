@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
+import scala.jdk.CollectionConverters._
 
 /** Hadoop's checksummed local file system, with file modes set in the
   * JVM. Without `libhadoop.so`, `RawLocalFileSystem.setPermission`
@@ -35,11 +36,39 @@ object InProcessLocalFs {
     "fs.file.impl" -> classOf[InProcessLocalFs].getName,
     "fs.file.impl.disable.cache" -> "true")
 
-  /** The session's Hadoop conf (`spark.hadoop.*` included) with
-    * [[options]]: the one conf for store and sketch files.
+  /** The one conf for store and sketch files: the session's Hadoop conf
+    * with [[options]], minus every entry whose only sources are Hadoop's
+    * shipped `*-default.xml` resources. It is a `Configuration(false)`,
+    * so it loads no default resource either.
+    *
+    * Every store write task deserializes this conf twice (in
+    * `FileFormatWriter`'s job description and in its stats tracker), and
+    * each cuckoo-blob and bloom-shard task once more, from a broadcast.
+    * The full conf holds ~1,100 properties, about 113 KB serialized and
+    * ~3 ms to parse back in each task; almost all of them restate a
+    * default. What survives here is what a default does not give:
+    * `*-site.xml` values, `spark.hadoop.*` values, programmatic sets
+    * (one to a value equal to the default included) and [[options]]: 25
+    * properties on a stock Spark install, 4.3 KB. Kept values are copied
+    * expanded, so a `${var}` whose variable was a dropped default still
+    * reads the same. A dropped key reads back unset, and Hadoop's code
+    * then applies its built-in default, which is the same value for every
+    * key the local file system and the parquet writer read (their files,
+    * checksums and modes are byte-identical; InProcessLocalFsSpec and
+    * SnapshotStoreSpec pin this). That is verified for `file:` only: an
+    * HDFS or S3 client may read keys whose code default differs from its
+    * `*-default.xml`.
     */
-  def hadoopConf(spark: SparkSession): Configuration =
-    spark.sessionState.newHadoopConfWithOptions(options)
+  def hadoopConf(spark: SparkSession): Configuration = {
+    val session = spark.sessionState.newHadoopConfWithOptions(options)
+    val conf = new Configuration(false)
+    session.iterator().asScala.map(_.getKey).foreach { key =>
+      val sources = Option(session.getPropertySources(key)).toSeq.flatten
+      if (sources.isEmpty || !sources.forall(_.endsWith("-default.xml")))
+        Option(session.get(key)).foreach(conf.set(key, _))
+    }
+    conf
+  }
 
   private final class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -25,6 +25,16 @@ import scala.jdk.CollectionConverters._
   * snapshot atomicity, which is what makes the crawl resumable from the
   * last committed round (north rule: resumable from checkpoint with
   * per-partition lineage).
+  *
+  * Write path: every parquet table (a staged table, a hidden-partitioned
+  * one, a compaction's rewrite) is one `FileFormatWriter.write` call
+  * ([[GraftBridge.writeParquet]]) with [[InProcessLocalFs.hadoopConf]],
+  * replacing the target dir as `SaveMode.Overwrite` does; `_SUCCESS`
+  * comes from the commit protocol and `_SCHEMA` from the store. That FS
+  * sets file modes without a `chmod` process per file, and that conf
+  * holds only what Hadoop's defaults do not give: each write task
+  * deserializes it twice, ~25 properties instead of the session's
+  * ~1,100.
   */
 final class SnapshotStore(val root: String) {
 
@@ -105,17 +115,18 @@ final class SnapshotStore(val root: String) {
     deleteRecursively(Paths.get(snapshotDir(id)))
   }
 
-  /** Stage a table into the (uncommitted) snapshot `id`. Every parquet
-    * write of the store goes through [[InProcessLocalFs]], which sets
-    * the files' modes without a `chmod` process per file.
-    */
+  /** Every parquet write of the store (see the write path above). */
+  private def writeParquet(df: DataFrame, dir: String, partitionBy: Seq[String] = Nil): Unit =
+    GraftBridge.writeParquet(df, dir, partitionBy, InProcessLocalFs.hadoopConf(df.sparkSession))
+
+  /** Stage a table into the (uncommitted) snapshot `id`. */
   def write(df: DataFrame, id: Int, table: String,
             sortWithinPartitionsBy: Seq[String] = Nil): Unit = {
     val out =
       if (sortWithinPartitionsBy.nonEmpty)
         df.sortWithinPartitions(sortWithinPartitionsBy.map(org.apache.spark.sql.functions.col): _*)
       else df
-    out.write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options).parquet(tablePath(id, table))
+    writeParquet(out, tablePath(id, table))
     recordSchema(Paths.get(tablePath(id, table)), df.schema)
   }
 
@@ -131,9 +142,7 @@ final class SnapshotStore(val root: String) {
   def writeHiddenPartitioned(df: DataFrame, id: Int, table: String,
                              transformName: String,
                              transform: org.apache.spark.sql.Column): Unit = {
-    df.withColumn(HiddenPartCol, transform)
-      .write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options).partitionBy(HiddenPartCol)
-      .parquet(tablePath(id, table))
+    writeParquet(df.withColumn(HiddenPartCol, transform), tablePath(id, table), Seq(HiddenPartCol))
     recordSchema(Paths.get(tablePath(id, table)), df.schema)
     Files.writeString(transformMarker(id, table), transformName)
   }
@@ -341,10 +350,9 @@ final class SnapshotStore(val root: String) {
       // every round. Staged beside, then swapped: the rewrite must not
       // destroy its inputs (v<baseId>'s own delta) before the new
       // files exist.
-      tail.repartition(org.apache.spark.sql.functions.col(roundCol))
-        .withColumn(HiddenPartCol, org.apache.spark.sql.functions.col(roundCol))
-        .write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options).partitionBy(HiddenPartCol)
-        .parquet(tmp.toString)
+      writeParquet(tail.repartition(org.apache.spark.sql.functions.col(roundCol))
+        .withColumn(HiddenPartCol, org.apache.spark.sql.functions.col(roundCol)),
+        tmp.toString, Seq(HiddenPartCol))
     } else Files.createDirectories(tmp)
     // previous base's packed partitions ride in by rename, never rewrite
     prevBase.foreach { b =>

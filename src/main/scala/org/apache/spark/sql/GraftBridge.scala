@@ -1,6 +1,15 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.util.SerializableConfiguration
+
+import java.util.UUID
 
 /** Bridge into the `private[sql]` Column↔Expression converters of the
   * classic (non-Connect) API — the standard extension idiom for
@@ -11,6 +20,36 @@ object GraftBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   /** The schema file sources report for data written with `s`. */
   def asNullable(s: types.StructType): types.StructType = s.asNullable
+
+  /** Write `df` as parquet into `path` with `hadoopConf`, replacing what
+    * is there (`SaveMode.Overwrite`), optionally partitioned by the
+    * `partitionBy` columns: `FileFormatWriter.write`, called the way
+    * `InsertIntoHadoopFsRelationCommand` calls it, but with the caller's
+    * conf, which its write and stats-tracker tasks deserialize. The files
+    * (`_SUCCESS` included) are the ones `df.write.parquet` writes with
+    * that conf. Unlike `DataFrameWriter`, it refreshes no cached plan that
+    * reads `path`.
+    */
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String],
+                   hadoopConf: Configuration): Unit = {
+    val qe = df.queryExecution
+    val out = new Path(path)
+    val fs = out.getFileSystem(hadoopConf)
+    val dir = out.makeQualified(fs.getUri, fs.getWorkingDirectory).toString
+    // named, as `DataFrameWriter`'s is: only named executions reach the
+    // session's QueryExecutionListeners, and so `observe` metrics
+    SQLExecution.withNewExecutionId(qe, Some("command")) {
+      fs.delete(new Path(dir), true)
+      val plan = qe.executedPlan
+      val committer = FileCommitProtocol.instantiate(
+        qe.sparkSession.sessionState.conf.fileCommitProtocolClass, UUID.randomUUID.toString, dir)
+      val tracker = new BasicWriteJobStatsTracker(
+        new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics)
+      FileFormatWriter.write(qe.sparkSession, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(dir, Map.empty, plan.output), hadoopConf,
+        partitionBy.map(c => plan.output.find(_.name == c).get), None, Seq(tracker), Map.empty)
+    }
+  }
 }
 
 /** Serializable Hadoop `Configuration` carrier for task closures —

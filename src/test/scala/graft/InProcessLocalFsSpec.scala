@@ -6,6 +6,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SerializableHadoopConf
 
 import java.net.URI
 import java.nio.file.{Files, Path => NioPath}
@@ -13,7 +14,8 @@ import scala.jdk.CollectionConverters._
 
 /** The store's local FS sets file modes in the JVM: its writes start no
   * `chmod` process, and every file, `.crc` file and directory gets the
-  * mode Hadoop's own `LocalFileSystem` gives it.
+  * mode Hadoop's own `LocalFileSystem` gives it. Its conf keeps only
+  * what Hadoop's `*-default.xml` resources do not give.
   */
 class InProcessLocalFsSpec extends SparkSpec {
 
@@ -74,6 +76,45 @@ class InProcessLocalFsSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(store.snapshotDir(0), "bloom.bin")))
     assert(store.read(spark, 0, "url_seen_delta").count() == 2000)
     assert(store.read(spark, 0, "cuckoo").count() == UrlSeen.CuckooBuckets)
+  }
+
+  test("the store conf drops only what Hadoop's *-default.xml resources alone give") {
+    def onlyDefaults(c: org.apache.hadoop.conf.Configuration, key: String): Boolean =
+      Option(c.getPropertySources(key)).exists(_.forall(_.endsWith("-default.xml")))
+    val runtimeKey = "spark.hadoop.graft.conf-rule.probe"
+    val expandingKey = "graft.conf-rule.expanding"
+    val defaultKey = "fs.permissions.umask-mode"
+    val before = spark.sessionState.newHadoopConfWithOptions(InProcessLocalFs.options)
+    assert(onlyDefaults(before, defaultKey) && onlyDefaults(before, "hadoop.tmp.dir"))
+    spark.conf.set(runtimeKey, "v")
+    // a kept value whose variable is a dropped default
+    spark.conf.set(expandingKey, "${hadoop.tmp.dir}/x")
+    // set programmatically to exactly its default value
+    spark.conf.set(defaultKey, before.get(defaultKey))
+    try {
+      val session = spark.sessionState.newHadoopConfWithOptions(InProcessLocalFs.options)
+      val conf = InProcessLocalFs.hadoopConf(spark)
+      val keys = session.iterator().asScala.map(_.getKey).toSet
+      val kept = conf.iterator().asScala.map(_.getKey).toSet
+      assert(kept.subsetOf(keys))
+      kept.foreach(k => assert(conf.get(k) === session.get(k), k))
+      (keys -- kept).foreach(k => assert(onlyDefaults(session, k), s"$k dropped"))
+      assert(!conf.get(expandingKey).contains("${") && conf.get(expandingKey).endsWith("/x"))
+      assert(conf.get(runtimeKey) === "v")
+      assert(conf.get(defaultKey) === before.get(defaultKey))
+      InProcessLocalFs.options.foreach { case (k, v) => assert(conf.get(k) === v, k) }
+      // the SparkConf's spark.hadoop.* keys (Spark's own s3a settings at least)
+      val fromSparkHadoop = keys.filter(k =>
+        Option(session.getPropertySources(k)).exists(_.exists(_.contains("'spark.hadoop'"))))
+      assert(fromSparkHadoop.nonEmpty && fromSparkHadoop.subsetOf(kept), fromSparkHadoop)
+      // what every store write task deserializes twice: a few KB, not the
+      // ~110 KB of the session's conf
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(new SerializableHadoopConf(conf))
+      out.close()
+      assert(bytes.size <= 16 * 1024, s"${bytes.size} bytes, ${kept.size} properties")
+    } finally Seq(runtimeKey, expandingKey, defaultKey).foreach(spark.conf.unset)
   }
 
   test("in-process modes equal Hadoop's LocalFileSystem: files, .crc files, new dirs, set modes") {

@@ -1,14 +1,16 @@
 package graft
 
-import graft.model.CrawlConfig
+import graft.model.{CrawlConfig, FrontierEntry}
 import graft.pipeline.CrawlJob
-import graft.sources.{SnapshotStore, SyntheticWeb}
+import graft.sources.{InProcessLocalFs, SnapshotStore, SyntheticWeb}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Iceberg-table semantics of the snapshot store beyond atomic commit
   * (which CrawlJobSpec's resume/time-travel tests cover): add-column
@@ -434,6 +436,90 @@ class SnapshotStoreSpec extends SparkSpec {
     store.writeHiddenPartitioned(Seq(("u", 200)).toDF("url_canon", "status"), 4, "fetch_log_hp",
       "status", col("status"))
     assert(store.schema(4, "fetch_log_hp") === inferred(store, 4, "fetch_log_hp"))
+  }
+
+  /** Every file and directory under `dir` → (mode, sha-256 of a file's
+    * bytes), keyed by relative path with the write's job UUID cut from
+    * file names (part index and partition dir remain).
+    */
+  private def layout(dir: Path): Map[String, (Int, String)] = {
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_ != dir).map { p =>
+      val mode = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+      val sha = if (Files.isDirectory(p)) "dir" else
+        java.security.MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(p))
+          .map(b => f"$b%02x").mkString
+      uuid.replaceAllIn(dir.relativize(p).toString, "*") -> (mode, sha)
+    }.toMap
+    finally s.close()
+  }
+
+  /** `write` stages into `store` under (0, table); the reference is the
+    * `DataFrameWriter` write with the session's full Hadoop conf that
+    * the store made before. Same data and `.crc` bytes, same modes,
+    * same rows; `_SUCCESS` and the store's `_SCHEMA` present.
+    */
+  private def assertSameFiles(store: SnapshotStore, table: String, reference: Path,
+                              write: SnapshotStore => Unit,
+                              writeReference: String => Unit): Unit = {
+    write(store)
+    writeReference(reference.toString)
+    val mine = Paths.get(store.tablePath(0, table))
+    assert(Files.exists(mine.resolve("_SUCCESS")) && Files.exists(mine.resolve("_SCHEMA")), table)
+    val got = layout(mine) -- Seq("_SCHEMA", "_PARTITION_TRANSFORM")
+    val want = layout(reference)
+    assert(got.keys.exists(_.endsWith(".parquet")) && got.keys.exists(_.endsWith(".parquet.crc")))
+    assert(got === want, table)
+    val rows = store.read(spark, 0, table)
+    val expected = spark.read.parquet(reference.toString).select(rows.columns.map(col): _*)
+    assert(rows.collect().map(_.toString).sorted === expected.collect().map(_.toString).sorted)
+  }
+
+  test("store writes give the files DataFrameWriter gives with the session conf") {
+    import spark.implicits._
+    val store = freshStore()
+    val refs = Files.createTempDirectory("store-ref")
+    def writer(df: DataFrame) = df.write.mode(SaveMode.Overwrite).options(InProcessLocalFs.options)
+    // shaped like the crawl's tables, nulls and non-nullable columns included
+    val frontier = (0 until 400).map { i =>
+      FrontierEntry(s"https://h${i % 7}/p$i", s"https://h${i % 7}/p$i", i * 0x9E3779B97F4A7C15L,
+        s"h${i % 7}", (i % 7) * 31 + i % 2, 1.0 / (1 + i % 5), i.toLong, 2)
+    }.toDS().repartition(4).cache()
+    val fetchLog = (0 until 500).map { i =>
+      (s"https://h${i % 9}/p$i", i.toLong * 7919, s"h${i % 9}", 3, i % 4, if (i % 11 == 0) 404 else 200,
+        i * 37L, if (i % 13 == 0) "timeout" else if (i % 17 == 0) null else "", i % 3, i % 2,
+        i * 3L, i % 2, if (i % 5 == 0) s"https://h${i % 9}/r$i" else "")
+    }.toDF("url_canon", "url_hash", "host", "round", "partition_id", "status", "bytes", "error",
+      "cookies_applied", "headers_applied", "duration_ms", "redirects", "final_url")
+      .repartition(3).cache()
+    val pending = (0 until 300).map(i => (s"https://h${i % 5}/q$i", 1.0 / (2 + i % 3), i * 131L))
+      .toDF("url", "priority", "seq").repartition(2).cache()
+    Seq(frontier.toDF(), fetchLog, pending).foreach(_.count())
+
+    val sortedFrontier = frontier.toDF().sortWithinPartitions(col("priority").desc, col("seq"))
+    assertSameFiles(store, "frontier", refs.resolve("frontier"),
+      _.write(sortedFrontier, 0, "frontier"), writer(sortedFrontier).parquet)
+    assertSameFiles(store, "fetch_log", refs.resolve("fetch_log"),
+      _.write(fetchLog, 0, "fetch_log", sortWithinPartitionsBy = Seq("url_canon")),
+      writer(fetchLog.sortWithinPartitions("url_canon")).parquet)
+    assertSameFiles(store, "pending", refs.resolve("pending"),
+      _.write(pending.coalesce(1), 0, "pending"), writer(pending.coalesce(1)).parquet)
+    val century = (col("status") / 100).cast("int") * 100
+    assertSameFiles(store, "fetch_log_hp", refs.resolve("fetch_log_hp"),
+      _.writeHiddenPartitioned(fetchLog, 0, "fetch_log_hp", "status_century", century),
+      writer(fetchLog.withColumn("_part", century)).partitionBy("_part").parquet)
+    assert(Files.isDirectory(Paths.get(store.tablePath(0, "fetch_log_hp"), "_part=400")))
+
+    // Overwrite: the same (id, table) again keeps only the second write
+    store.write(pending.limit(5).coalesce(1), 0, "pending")
+    assert(store.read(spark, 0, "pending").count() === 5)
+    assert(layout(Paths.get(store.tablePath(0, "pending"))).keys.count(_.endsWith(".parquet")) === 1)
+    store.writeHiddenPartitioned(fetchLog.filter(col("status") === 200), 0, "fetch_log_hp",
+      "status_century", century)
+    assert(!Files.exists(Paths.get(store.tablePath(0, "fetch_log_hp"), "_part=400")))
+    assert(store.read(spark, 0, "fetch_log_hp").count() === fetchLog.filter(col("status") === 200).count())
+    Seq(frontier.toDF(), fetchLog, pending).foreach(_.unpersist())
   }
 
   test("readSeen over k snapshots plans without a Spark job") {
