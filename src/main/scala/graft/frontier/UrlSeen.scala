@@ -2,7 +2,7 @@ package graft.frontier
 
 import graft.sources.InProcessLocalFs
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Row, SerializableHadoopConf, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SerializableHadoopConf, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
@@ -17,10 +17,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * all-maybe the moment an insert fails ([[CuckooFilter.saturated]]), so
   * its "no" stays authoritative.
   *
-  * Layering + maintenance at 10^10 URLs (everything is O(round delta);
-  * nothing rebuilds from the seen union, and no sketch bytes cross the
-  * driver except the bloom, which the north star mandates as a
-  * broadcast):
+  * Layering + maintenance (everything is O(round delta); nothing
+  * rebuilds from the seen union, and no sketch bytes cross the driver
+  * except the bloom, which the north star mandates as a broadcast: ~1.2
+  * GB at its 10⁹-item ceiling, fpp 0.01 — see BASELINE.md's sizing):
   *   - the BLOOM is a driver-held running filter sized once for the
   *     crawl's expected total; each round only the round's NEW urls are
   *     inserted (a distributed delta-bloom OR-merge, or a direct insert
@@ -38,7 +38,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *     residue via one conditional left-anti join — only rows both
   *     sketches call "maybe" can match it and be dropped.
   *
-  * Every sketch file (bloom, cuckoo and bloom-shard blobs, `_DONE`) is
+  * Every sketch file (the bloom, the cuckoo blobs, `_DONE`) is
   * written through the Hadoop FS API with [[InProcessLocalFs.hadoopConf]],
   * the snapshot store's own conf: on `file:` roots the blobs get their
   * modes without a `chmod` process each.
@@ -75,20 +75,6 @@ object UrlSeen {
   def emptyBloom(expectedItems: Long, fpp: Double): BloomFilter =
     BloomFilter.create(math.max(expectedItems, 1024), fpp)
 
-  /** Distributed bloom over a delta's `url_hash` column, parameterized
-    * identically to the running bloom so `mergeInPlace` accepts it.
-    * Cost: O(delta) inserts + a fixed-size bit-array OR-reduction.
-    *
-    * NOT `df.stat.bloomFilter`: its BloomFilterAggregate clamps the bit
-    * array at `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`
-    * (2^26 by default), so past ~7M expected items at fpp 0.01 the
-    * aggregated filter silently gets a SMALLER bit size than
-    * `BloomFilter.create` with the same parameters and `mergeInPlace`
-    * throws IncompatibleMergeException. Per-partition filters built on
-    * the executors + a treeReduce OR keep the exact (expectedItems,
-    * fpp) geometry at any size; merge work stays off the driver until
-    * the final reduced filter returns.
-    */
   /** Per-partition partial filters are FULL-capacity (merge geometry),
     * so their count is the multiplier on the reduce traffic: at the
     * 10⁹-item broadcast ceiling each partial is ~1.2 GB, and an
@@ -111,6 +97,20 @@ object UrlSeen {
     if (rdd.getNumPartitions > MaxDeltaPartials) rdd.coalesce(MaxDeltaPartials) else rdd
   }
 
+  /** Distributed bloom over a delta's `url_hash` column, parameterized
+    * identically to the running bloom so `mergeInPlace` accepts it.
+    * Cost: O(delta) inserts + a fixed-size bit-array OR-reduction.
+    *
+    * NOT `df.stat.bloomFilter`: its BloomFilterAggregate clamps the bit
+    * array at `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`
+    * (2^26 by default), so past ~7M expected items at fpp 0.01 the
+    * aggregated filter silently gets a SMALLER bit size than
+    * `BloomFilter.create` with the same parameters and `mergeInPlace`
+    * throws IncompatibleMergeException. Per-partition filters built on
+    * the executors + a treeReduce OR keep the exact (expectedItems,
+    * fpp) geometry at any size; merge work stays off the driver until
+    * the final reduced filter returns.
+    */
   def bloomOfDelta(delta: DataFrame, expectedItems: Long, fpp: Double): BloomFilter = {
     val cap = math.max(expectedItems, 1024)
     val partials = boundedDeltaRdd(delta).mapPartitions { it =>
@@ -192,28 +192,14 @@ object UrlSeen {
     * columns of opaque bytes and longs, a quarter of Spark's default
     * codegen cache.
     */
-  /** Sharded-bloom spec for [[updateCuckoo]]: maintain one bloom filter
-    * PER CUCKOO BUCKET as a blob file (`bloom-<bucket>.bin`) next to
-    * the cuckoo blobs — the 10¹⁰-scale escape hatch for the broadcast
-    * bloom (a single 10¹⁰-item filter at fpp 0.01 is ~12 GB; re-
-    * broadcasting it every round dominates the fixed cost, while shards
-    * move executor↔storage only, and only for buckets the round's
-    * delta touched... except passthrough copies, which keep every
-    * round's dir self-contained).
-    */
-  final case class BloomShardSpec(prevDir: Option[String], capacityPerShard: Long, fpp: Double)
-
   def updateCuckoo(
       spark: SparkSession,
       prev: DataFrame,
       delta: DataFrame,
       perBucketCapacity: Long,
       buckets: Int = CuckooBuckets,
-      blobDir: Option[String] = None,
-      bloomShards: Option[BloomShardSpec] = None
+      blobDir: Option[String] = None
   ): DataFrame = {
-    require(bloomShards.isEmpty || blobDir.isDefined,
-      "sharded blooms need a blobDir to live in")
     val hconf = blobDir.map(_ => broadcastHadoopConf(spark))
     val deltaKeyed = delta.select(col("url_hash").cast("long")).queryExecution.toRdd
       .map { r => val h = r.getLong(0); (cuckooBucket(h, buckets), h) }
@@ -239,20 +225,6 @@ object UrlSeen {
       // rename), so the cuckoo layer costs ONE job per round instead of
       // a persist + parquet write + foreachPartition triple
       blobDir.foreach(dir => writeBlobFile(dir, bucket, bytes, hconf.get.value.value))
-      // sharded bloom rides the same pass: fold the delta into the
-      // bucket's previous shard (read from the previous round's dir)
-      // and write the updated shard beside the cuckoo blob
-      bloomShards.foreach { spec =>
-        val conf = hconf.get.value.value
-        val bf = spec.prevDir
-          .flatMap(d => readBloomFile(s"$d/bloom-$bucket.bin", conf))
-          .getOrElse(org.apache.spark.util.sketch.BloomFilter.create(
-            math.max(1024L, spec.capacityPerShard), spec.fpp))
-        keys.foreach(bf.putLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        writeBlobFileNamed(blobDir.get, s"bloom-$bucket.bin", bos.toByteArray, conf)
-      }
       Row(bucket, bytes)
     }
     spark.createDataFrame(updated, CuckooSchema)
@@ -270,12 +242,9 @@ object UrlSeen {
     * the visible file appears only via delete-then-rename.
     */
   private def writeBlobFile(dir: String, bucket: Int, bytes: Array[Byte],
-                            conf: org.apache.hadoop.conf.Configuration): Unit =
-    writeBlobFileNamed(dir, s"bucket-$bucket.bin", bytes, conf)
-
-  private def writeBlobFileNamed(dir: String, name: String, bytes: Array[Byte],
-                                 conf: org.apache.hadoop.conf.Configuration): Unit = {
+                            conf: org.apache.hadoop.conf.Configuration): Unit = {
     import org.apache.hadoop.fs.Path
+    val name = s"bucket-$bucket.bin"
     val p = new Path(s"$dir/$name")
     val fs = p.getFileSystem(conf)
     // attempt-unique tmp name: under speculative execution or a stage
@@ -302,21 +271,6 @@ object UrlSeen {
     done.getFileSystem(conf).create(done, true).close()
   }
 
-  /** Whether `dir` holds at least one committed bloom shard
-    * (`bloom-<bucket>.bin` behind a `_DONE` marker). A sharded resume
-    * with URLs seen requires it: empty shards over a non-empty seen set
-    * would turn historical URLs into bloom false NEGATIVES and silently
-    * re-admit them.
-    */
-  def bloomShardsPresent(dir: String, conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val done = new Path(s"$dir/_DONE")
-    val fs = done.getFileSystem(conf)
-    // globStatus returns null (not empty) when the parent dir is absent
-    fs.exists(done) &&
-      Option(fs.globStatus(new Path(s"$dir/bloom-*.bin"))).exists(_.nonEmpty)
-  }
-
   /** Whether [[finishCuckooDir]] marked `dir` complete; probed with the
     * active session's store conf, the one its writer used.
     */
@@ -334,19 +288,8 @@ object UrlSeen {
   final case class CandFlag(url_canon: String, url_hash: Long,
       priority: Double, seq: Long, sketch_new: Boolean)
 
-  /** First seen layer, two deployments: the north rule's BROADCAST
-    * bloom (default), or per-bucket bloom shard files for crawls whose
-    * running bloom no longer fits a per-round broadcast (10¹⁰ items at
-    * fpp 0.01 ≈ 12 GB — see BASELINE.md's sizing table).
-    */
-  sealed trait BloomLayer
-  final case class BroadcastBloom(bc: Broadcast[BloomFilter]) extends BloomLayer
-  /** `bloom-<bucket>.bin` shards beside the cuckoo blobs in `dir`. */
-  final case class ShardedBloom(dir: String) extends BloomLayer
-  /** No bloom information yet (sharded cold start): everything is
-    * maybe-seen and the cuckoo/exact layers decide.
-    */
-  case object NoBloom extends BloomLayer
+  /** First seen layer: the running bloom, broadcast (the north rule). */
+  final case class BroadcastBloom(bc: Broadcast[BloomFilter])
 
   /** Filter `candidates` down to never-seen rows.
     *
@@ -356,44 +299,29 @@ object UrlSeen {
     * [[finishCuckooDir]] marked done (None or not-ready ⇒ the exact join
     * decides everything the bloom flags).
     *
-    * The cuckoo check (and the bloom check, in sharded mode) is
-    * MAP-SIDE: each executor lazily reads the bucket blobs it needs
-    * straight from storage (once per executor per round, via
-    * [[CuckooFileCache]]/[[BloomShardCache]]) — no shuffle of the
-    * dup-heavy bloom residue, no driver bytes. A bucket-cogroup
-    * lookup was measured first and rejected: at steady state most of
-    * the residue is TRUE duplicates, and shuffling them to meet the
-    * blobs cost more than the anti-join it was saving.
+    * The cuckoo check is MAP-SIDE: each executor lazily reads the
+    * bucket blobs it needs straight from storage (once per executor per
+    * round, via [[CuckooFileCache]]) — no shuffle of the dup-heavy
+    * bloom residue, no driver bytes. A bucket-cogroup lookup was
+    * measured first and rejected: at steady state most of the residue
+    * is TRUE duplicates, and shuffling them to meet the blobs cost more
+    * than the anti-join it was saving.
     */
   def filterNew(
       spark: SparkSession,
       candidates: DataFrame,
       seen: DataFrame,
-      bloom: BloomLayer,
+      bloom: BroadcastBloom,
       cuckooDir: Option[String],
       buckets: Int = CuckooBuckets
   ): DataFrame = {
-    lazy val hconf = broadcastHadoopConf(spark)
-    val mightContain: Column => Column = bloom match {
-      case BroadcastBloom(bc) =>
-        val f = udf { (h: Long) => bc.value.mightContainLong(h) }
-        c => f(c)
-      case ShardedBloom(dir) =>
-        val conf = hconf
-        val f = udf { (h: Long) =>
-          BloomShardCache.get(dir, cuckooBucket(h, buckets), conf.value.value) match {
-            case Some(bf) => bf.mightContainLong(h)
-            case None => true // missing shard → downstream layers decide
-          }
-        }
-        c => f(c)
-      case NoBloom => _ => lit(true)
-    }
+    val bc = bloom.bc
+    val mightContain = udf { (h: Long) => bc.value.mightContainLong(h) }
 
     // no blob dir yet (cold start) → every row stays maybe-seen. Still
     // the same UDF: a constant would give the cold-start round a plan
     // (and generated classes) of its own.
-    val blobs = cuckooDir.filter(cuckooFilesReady).map(dir => (dir, hconf))
+    val blobs = cuckooDir.filter(cuckooFilesReady).map(dir => (dir, broadcastHadoopConf(spark)))
     val cuckooMaybe = udf { (h: Long) =>
       blobs.forall { case (dir, conf) =>
         CuckooFileCache.get(dir, cuckooBucket(h, buckets), conf.value.value) match {
@@ -470,35 +398,6 @@ object CuckooFileCache {
           Some(CuckooFilter.fromBytes(bytes))
         } finally in.close()
       }
-    })
-  }
-  def clear(): Unit = { cache.clear(); recentDirs.clear() }
-}
-
-/** Executor-local bloom-SHARD cache — same lifecycle as
-  * [[CuckooFileCache]] (immutable once `_DONE`, current+previous dir
-  * retention) for the `bloom-<bucket>.bin` files of the sharded layer.
-  */
-object BloomShardCache {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Option[org.apache.spark.util.sketch.BloomFilter]]()
-  private val recentDirs = new java.util.concurrent.ConcurrentLinkedDeque[String]()
-
-  private def touch(dir: String): Unit = {
-    if (!recentDirs.contains(dir)) {
-      recentDirs.addFirst(dir)
-      while (recentDirs.size > 2) {
-        val evicted = recentDirs.pollLast()
-        if (evicted != null) cache.keySet.removeIf(_._1 == evicted)
-      }
-    }
-  }
-
-  def get(dir: String, bucket: Int, conf: org.apache.hadoop.conf.Configuration)
-      : Option[org.apache.spark.util.sketch.BloomFilter] = {
-    touch(dir)
-    cache.computeIfAbsent((dir, bucket), { case (d, b) =>
-      UrlSeen.readBloomFile(s"$d/bloom-$b.bin", conf)
     })
   }
   def clear(): Unit = { cache.clear(); recentDirs.clear() }

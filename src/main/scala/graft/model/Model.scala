@@ -107,18 +107,12 @@ final case class CrawlConfig(
     maxQueuePerPartition: Int = 1 << 20,
     bloomExpectedItems: Long = 1L << 20, // sized ONCE for the crawl's expected total
     bloomFpp: Double = 0.01,
-    // deltas at or below this size update the driver bloom by a direct
-    // collect+insert (O(delta·8B) driver bytes); larger deltas use the
-    // distributed delta-bloom OR-merge (parallel inserts, fixed-size
-    // driver transfer)
+    // deltas at or below this size reach the driver bloom as the
+    // url_hashes the admission already gathered in an accumulator
+    // (Politeness.HashCollector, O(delta·8B) driver bytes, no job of
+    // their own); larger deltas overflow it and take the distributed
+    // delta-bloom OR-merge (one job, fixed-size driver transfer)
     bloomCollectThreshold: Long = 1L << 19,
-    // sharded bloom (10^10 escape hatch): per-cuckoo-bucket bloom shard
-    // files maintained executor-side beside the cuckoo blobs instead of
-    // ONE driver-held broadcast filter. Default false — the north rule
-    // mandates the broadcast bloom, which wins while the filter fits a
-    // per-round broadcast (see BASELINE.md's sizing table for the
-    // crossover)
-    bloomSharded: Boolean = false,
     cuckooBuckets: Int = 64, // fixed sketch partitioning (↑ on big clusters)
     // per-row fetch deadline: soft timeout + the 5 s grace the reference
     // grants before the hard kill (`api/api.go:511`,

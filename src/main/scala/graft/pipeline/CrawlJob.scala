@@ -203,7 +203,7 @@ object CrawlJob {
 
   /** The manifest keys every committed round writes and a resume needs. */
   private val CheckpointKeys =
-    Seq("cuckoo_buckets", "bloom_capacity", "bloom_fpp", "bloom_sharded", "seen_total")
+    Seq("cuckoo_buckets", "bloom_capacity", "bloom_fpp", "seen_total")
 
   def run(
       spark: SparkSession,
@@ -228,8 +228,7 @@ object CrawlJob {
 
     // ---- resume from the last committed snapshot (north rule) ----
     // A checkpoint is exactly what a round commits: the seen deltas, the
-    // `cuckoo` table and its blob dir, the bloom (`bloom.bin`, or
-    // `bloom-<bucket>.bin` shards beside the cuckoo blobs) and the
+    // `cuckoo` table and its blob dir, the bloom (`bloom.bin`) and the
     // manifest's [[CheckpointKeys]]. Resume reads that and nothing else.
     // A missing sketch fails fast: rebuilt from nothing (or from one
     // round's delta) it would answer "definitely new" for historical
@@ -253,23 +252,16 @@ object CrawlJob {
       CheckpointKeys.foreach(k => need(resumeMeta.contains(k), s"manifest key $k"))
       if (resumeMeta("seen_total").toLong > 0) {
         need(store.hasTable(c, "cuckoo"), "cuckoo table")
-        val dir = store.snapshotDir(c)
-        if (resumeMeta("bloom_sharded").toBoolean)
-          need(UrlSeen.bloomShardsPresent(s"$dir/cuckoo_bin", hadoopConf), "bloom-*.bin shards")
-        else {
-          val bloomBin = new org.apache.hadoop.fs.Path(s"$dir/bloom.bin")
-          need(bloomBin.getFileSystem(hadoopConf).exists(bloomBin), "bloom.bin")
-        }
+        val bloomBin = new org.apache.hadoop.fs.Path(s"${store.snapshotDir(c)}/bloom.bin")
+        need(bloomBin.getFileSystem(hadoopConf).exists(bloomBin), "bloom.bin")
       }
     }
-    // Sketch geometry and mode are properties of the CHECKPOINT, not the
+    // Sketch geometry is a property of the CHECKPOINT, not the
     // caller: resuming with a different cfg.cuckooBuckets would hash
     // url_hash to the wrong bucket-N.bin, turn cuckoo "no"s into lies
     // and re-admit seen URLs — so the committed values always win.
     val cuckooBuckets: Int =
       resumeMeta.get("cuckoo_buckets").map(_.toInt).getOrElse(cfg.cuckooBuckets)
-    val bloomSharded: Boolean =
-      resumeMeta.get("bloom_sharded").map(_.toBoolean).getOrElse(cfg.bloomSharded)
     val bloomCapacity: Long =
       resumeMeta.get("bloom_capacity").map(_.toLong).getOrElse(cfg.bloomExpectedItems)
     val bloomFpp: Double = resumeMeta.get("bloom_fpp").map(_.toDouble).getOrElse(cfg.bloomFpp)
@@ -303,18 +295,15 @@ object CrawlJob {
     // bytes into a task closure (the "task of very large size" warning)
     // and pay a Spark job for what is a single driver-side stream copy.
     // An absent bloom.bin passed the guard above only with nothing seen.
-    val bloomOpt: Option[org.apache.spark.util.sketch.BloomFilter] =
-      if (bloomSharded) None // shards live beside the cuckoo blobs, executor-maintained
-      else Some(store.currentSnapshot
-        .flatMap(c => UrlSeen.readBloomFile(s"${store.snapshotDir(c)}/bloom.bin", hadoopConf))
-        .getOrElse(UrlSeen.emptyBloom(bloomCapacity, bloomFpp)))
-    var bloomBcOpt = bloomOpt.map(spark.sparkContext.broadcast(_))
+    val bloom = store.currentSnapshot
+      .flatMap(c => UrlSeen.readBloomFile(s"${store.snapshotDir(c)}/bloom.bin", hadoopConf))
+      .getOrElse(UrlSeen.emptyBloom(bloomCapacity, bloomFpp))
+    var bloomBc = spark.sparkContext.broadcast(bloom)
 
     // cuckoo: persisted (bucket, filter_bytes) parquet table (canonical,
     // resume source) + per-bucket raw blob FILES under
     // <snapshot>/cuckoo_bin (the lookup path: executors read their
-    // bucket straight from storage — puffin-style sketch files). In
-    // sharded mode the bloom shards live in the same dir.
+    // bucket straight from storage — puffin-style sketch files).
     val perBucketCapacity = math.max(1024L, bloomCapacity / cuckooBuckets)
     var cuckoo: DataFrame = store.currentSnapshot.filter(store.hasTable(_, "cuckoo"))
       .map(c => store.read(spark, c, "cuckoo")).getOrElse(UrlSeen.emptyCuckooState(spark))
@@ -399,11 +388,8 @@ object CrawlJob {
       // 4. URL-seen layer (running bloom → persisted cuckoo → exact
       //    anti-join); both sketches were maintained incrementally at the
       //    end of the previous round — nothing is rebuilt here
-      val bloomLayer: UrlSeen.BloomLayer = bloomBcOpt match {
-        case Some(bc) => UrlSeen.BroadcastBloom(bc)
-        case None => cuckooDir.map(UrlSeen.ShardedBloom.apply).getOrElse(UrlSeen.NoBloom)
-      }
-      val newUrls = UrlSeen.filterNew(spark, dedup, seen, bloomLayer, cuckooDir, cuckooBuckets)
+      val newUrls = UrlSeen.filterNew(spark, dedup, seen, UrlSeen.BroadcastBloom(bloomBc),
+        cuckooDir, cuckooBuckets)
 
       // 5. frontier entries with salted host hash (codegen Column twin).
       // `url` always equals `url_canon` at this point, so it rides the
@@ -477,33 +463,24 @@ object CrawlJob {
       val seenFut = job("seen-write")(store.write(
         newSeen.coalesce(writeTasks(admittedCount, cfg)), round, "url_seen_delta"))
 
-      val bloomFut: scala.concurrent.Future[Any] =
-        if (bloomSharded) scala.concurrent.Future.successful(()) // shards ride the cuckoo job
-        else job("bloom-update") {
-          val bloom = bloomOpt.get
-          if (admittedCount > 0) {
-            admittedHashes match {
-              case Some(hashes) => hashes.foreach(bloom.putLong)
-              case None =>
-                bloom.mergeInPlace(UrlSeen.bloomOfDelta(newSeen, bloomCapacity, bloomFpp))
-            }
-            // unpersist (not destroy): cached lineage from this round may
-            // still reference the old broadcast; a re-fetch would resend
-            // the mutated bloom, which only ADDS keys — extra maybe-seen
-            // rows are re-confirmed by the exact layer, never dropped
-            val oldBc = bloomBcOpt.get
-            bloomBcOpt = Some(spark.sparkContext.broadcast(bloom))
-            oldBc.unpersist(blocking = false)
+      val bloomFut = job("bloom-update") {
+        if (admittedCount > 0) {
+          admittedHashes match {
+            case Some(hashes) => hashes.foreach(bloom.putLong)
+            case None =>
+              bloom.mergeInPlace(UrlSeen.bloomOfDelta(newSeen, bloomCapacity, bloomFpp))
           }
-          UrlSeen.writeBloomFile(bloom, s"${store.snapshotDir(round)}/bloom.bin", hadoopConf)
+          // unpersist (not destroy): cached lineage from this round may
+          // still reference the old broadcast; a re-fetch would resend
+          // the mutated bloom, which only ADDS keys — extra maybe-seen
+          // rows are re-confirmed by the exact layer, never dropped
+          val oldBc = bloomBc
+          bloomBc = spark.sparkContext.broadcast(bloom)
+          oldBc.unpersist(blocking = false)
         }
+        UrlSeen.writeBloomFile(bloom, s"${store.snapshotDir(round)}/bloom.bin", hadoopConf)
+      }
 
-      // sharded mode: the bloom shards fold the SAME delta inside the
-      // cuckoo cogroup, reading each bucket's previous shard from the
-      // previous round's dir — no driver bytes, no broadcast
-      val shardSpec =
-        if (bloomSharded) Some(UrlSeen.BloomShardSpec(cuckooDir, perBucketCapacity, bloomFpp))
-        else None
       val cuckooFut = job("cuckoo-write") {
         // ONE job feeds both layouts: the fused cogroup writes each
         // bucket's blob file as it computes the bytes, and the action
@@ -512,7 +489,7 @@ object CrawlJob {
         val binDir = s"${store.snapshotDir(round)}/cuckoo_bin"
         store.write(UrlSeen.updateCuckoo(spark, cuckoo,
           newSeen.select("url_hash"), perBucketCapacity, cuckooBuckets,
-          blobDir = Some(binDir), bloomShards = shardSpec), round, "cuckoo")
+          blobDir = Some(binDir)), round, "cuckoo")
         UrlSeen.finishCuckooDir(binDir, hadoopConf)
       }
 
@@ -686,8 +663,7 @@ object CrawlJob {
         "seen_total" -> (seenCount + admittedCount).toString,
         "cuckoo_buckets" -> cuckooBuckets.toString,
         "bloom_capacity" -> bloomCapacity.toString,
-        "bloom_fpp" -> bloomFpp.toString,
-        "bloom_sharded" -> bloomSharded.toString) ++
+        "bloom_fpp" -> bloomFpp.toString) ++
         (if (cfg.dedupDocs) Map(
           "dedup_k" -> dedupShingleK.toString,
           "dedup_threshold" -> dedupThreshold.toString) else Map.empty)

@@ -48,26 +48,16 @@ object Health {
           case Some(id) =>
             val manifest = scala.util.Try(store.readManifest(id))
             val seen = scala.util.Try(store.readSeen(spark, id).limit(1).count())
-            // the bloom is a driver-written blob file (bloom.bin), or
-            // per-bucket shard files beside the cuckoo blobs in sharded
-            // mode. The blob probes go through the Hadoop FS API with the
-            // store's conf, the one the writers use (the parquet tables
-            // and the sketch blobs are written via that API; the
-            // SnapshotStore's own manifest/CURRENT/_SCHEMA metadata is
-            // java.nio local-path-only in this miniature, so a non-local
-            // root needs the real Iceberg-runtime swap the store
-            // documents).
-            val hconf = InProcessLocalFs.hadoopConf(spark)
+            // the bloom is a driver-written blob file (bloom.bin). The
+            // blob probe goes through the Hadoop FS API with the store's
+            // conf, the one the writers use (the parquet tables and the
+            // sketch blobs are written via that API; the SnapshotStore's
+            // own manifest/CURRENT/_SCHEMA metadata is java.nio
+            // local-path-only in this miniature, so a non-local root
+            // needs the real Iceberg-runtime swap the store documents).
             val bloomOk = {
               val p = new org.apache.hadoop.fs.Path(s"${store.snapshotDir(id)}/bloom.bin")
-              p.getFileSystem(hconf).exists(p)
-            } || {
-              // sharded mode: the flag alone isn't health — the shard
-              // FILES must be committed beside the cuckoo blobs (a
-              // flagged checkpoint with no shards cannot be resumed)
-              store.manifestMeta(id).get("bloom_sharded").contains("true") &&
-                graft.frontier.UrlSeen.bloomShardsPresent(
-                  s"${store.snapshotDir(id)}/cuckoo_bin", hconf)
+              p.getFileSystem(InProcessLocalFs.hadoopConf(spark)).exists(p)
             }
             val sketches =
               if (store.hasTable(id, "cuckoo") && bloomOk) "up"

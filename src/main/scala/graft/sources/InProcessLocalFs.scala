@@ -43,7 +43,7 @@ object InProcessLocalFs {
     *
     * Every store write task deserializes this conf twice (in
     * `FileFormatWriter`'s job description and in its stats tracker), and
-    * each cuckoo-blob and bloom-shard task once more, from a broadcast.
+    * each cuckoo-blob task once more, from a broadcast.
     * The full conf holds ~1,100 properties, about 113 KB serialized and
     * ~3 ms to parse back in each task; almost all of them restate a
     * default. What survives here is what a default does not give:

@@ -100,67 +100,15 @@ class CrawlJobSpec extends SparkSpec {
     assert(more.rounds.nonEmpty)
   }
 
-  test("bloomSharded crawl matches the reference model (10^10 escape-hatch path)") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-sharded").toString
-    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-      cfg.copy(bloomSharded = true), root)
-    val store = new SnapshotStore(root)
-    val last = store.currentSnapshot.get
-    assert(store.manifestMeta(last)("bloom_sharded") === "true")
-    // no driver bloom file is written; shards live beside the cuckoo blobs
-    assert(!Files.exists(java.nio.file.Paths.get(store.snapshotDir(last), "bloom.bin")))
-    val binFiles = new java.io.File(store.snapshotDir(last), "cuckoo_bin").list()
-    assert(binFiles.exists(_.startsWith("bloom-")), binFiles.mkString(","))
-    val engineSeen = store.readSeen(spark, last)
-      .select("url_canon", "round_first_seen")
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    assert(engineSeen === model.seen)
-  }
-
-  test("sharded resume of a pre-sharded checkpoint fails fast instead of seeding shards") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-shard-seed").toString
-    // rounds 0-1 in broadcast-bloom mode
-    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-      cfg.copy(maxRounds = 2, bloomSharded = false), root)
-    val store = new SnapshotStore(root)
-    val ckpt = store.currentSnapshot.get
-    // simulate a checkpoint that PREDATES sharded mode: its manifest has
-    // no bloom_sharded key
-    val mf = java.nio.file.Paths.get(store.snapshotDir(ckpt), "MANIFEST.json")
-    Files.writeString(mf,
-      Files.readString(mf).replace("\"bloom_sharded\"", "\"legacy_stripped\""))
-    assert(!store.manifestMeta(ckpt).contains("bloom_sharded"))
-    // resume WITH bloomSharded=true: no shards exist, and shards built
-    // from the round delta only would answer "definitely new" for
-    // historical URLs (bloom false NEGATIVE, skipping cuckoo AND the
-    // exact anti-join) and re-admit them — the resume refuses instead
-    val ex = intercept[IllegalArgumentException] {
-      CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-        cfg.copy(maxRounds = 2, bloomSharded = true), root)
-    }
-    assert(ex.getMessage.contains(s"snapshot v$ckpt"), ex.getMessage)
-    assert(ex.getMessage.contains("bloom_sharded"), ex.getMessage)
-    assert(store.currentSnapshot === Some(ckpt))
-    assert(!Files.exists(java.nio.file.Paths.get(store.snapshotDir(ckpt), "bloom_seed_bin")))
-    assert(!Files.exists(java.nio.file.Paths.get(store.snapshotDir(ckpt + 1))))
-  }
-
   test("resume fails fast on a checkpoint missing any piece the crawl writes") {
     import spark.implicits._
-    def crawl2(sharded: Boolean): String = {
-      val root = Files.createTempDirectory("crawl-pieces").toString
-      CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-        cfg.copy(maxRounds = 2, bloomSharded = sharded), root)
-      root
-    }
-    val broadcastRoot = crawl2(sharded = false)
-    val shardedRoot = crawl2(sharded = true)
+    val root = Files.createTempDirectory("crawl-pieces").toString
+    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+      cfg.copy(maxRounds = 2), root)
+    val store = new SnapshotStore(root)
     // `break` takes one piece away from the checkpoint's dir and returns
     // what puts it back
-    def failsFast(root: String, piece: String)(break: Path => () => Unit): Unit = {
-      val store = new SnapshotStore(root)
+    def failsFast(piece: String)(break: Path => () => Unit): Unit = {
       val ckpt = store.currentSnapshot.get
       val committed = store.committedSnapshots
       val restore = break(Paths.get(store.snapshotDir(ckpt)))
@@ -182,25 +130,37 @@ class CrawlJobSpec extends SparkSpec {
       val moved = paths.map(p => p -> Files.move(p, aside.resolve(p.getFileName)))
       () => moved.foreach { case (p, a) => Files.move(a, p) }
     }
-    failsFast(broadcastRoot, "bloom.bin")(d => moveAside(Seq(d.resolve("bloom.bin"))))
-    failsFast(broadcastRoot, "cuckoo table")(d => moveAside(Seq(d.resolve("cuckoo"))))
-    failsFast(shardedRoot, "bloom-*.bin shards")(d => moveAside(d.resolve("cuckoo_bin")
-      .toFile.listFiles().toSeq.filter(_.getName.startsWith("bloom-")).map(_.toPath)))
-    Seq("cuckoo_buckets", "bloom_capacity", "bloom_fpp", "bloom_sharded", "seen_total")
+    // adds a manifest key the crawl no longer writes nor reads
+    def withMetaKey(mf: Path, key: String, value: String): () => Unit = {
+      val manifest = Files.readString(mf)
+      Files.writeString(mf, manifest.replace("\"meta\": {", s"\"meta\": {\"$key\": \"$value\", "))
+      assert(Files.readString(mf).contains(s"\"$key\": \"$value\""), mf)
+      () => Files.writeString(mf, manifest)
+    }
+    failsFast("bloom.bin")(d => moveAside(Seq(d.resolve("bloom.bin"))))
+    // a checkpoint of the removed sharded-bloom mode: flagged, no
+    // bloom.bin. The flag changes nothing; the missing bloom fails it.
+    failsFast("bloom.bin") { d =>
+      val unflag = withMetaKey(d.resolve("MANIFEST.json"), "bloom_sharded", "true")
+      val putBack = moveAside(Seq(d.resolve("bloom.bin")))
+      () => { putBack(); unflag() }
+    }
+    failsFast("cuckoo table")(d => moveAside(Seq(d.resolve("cuckoo"))))
+    Seq("cuckoo_buckets", "bloom_capacity", "bloom_fpp", "seen_total")
       .foreach { key =>
-        failsFast(broadcastRoot, s"manifest key $key") { d =>
+        failsFast(s"manifest key $key") { d =>
           val mf = d.resolve("MANIFEST.json")
           val manifest = Files.readString(mf)
           Files.writeString(mf, manifest.replace(s"\"$key\"", s"\"${key}_removed\""))
           () => Files.writeString(mf, manifest)
         }
       }
-    // restored, both checkpoints resume
-    Seq(broadcastRoot, shardedRoot).foreach { root =>
-      CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
-        cfg.copy(maxRounds = 1), root)
-      assert(new SnapshotStore(root).currentSnapshot === Some(2))
-    }
+    // restored, the checkpoint resumes, with the broadcast-mode flag
+    // older checkpoints carry too
+    withMetaKey(Paths.get(store.snapshotDir(1), "MANIFEST.json"), "bloom_sharded", "false")
+    CrawlJob.run(spark, seeds.toDS(), robots, hostMap.toDS(), universe,
+      cfg.copy(maxRounds = 1), root)
+    assert(store.currentSnapshot === Some(2))
   }
 
   test("resume reads its state without a Spark job (seen_total comes from the manifest)") {

@@ -25,29 +25,14 @@ class HealthSpec extends SparkSpec {
     assert(rows("seen-sketches") === "up", "bloom+cuckoo must persist per round")
     assert(rows("engines") === "up" && rows("spark") === "up")
     assert(rows("*") === "up")
-  }
-
-  test("health: sharded store is up only when its shard files are committed") {
-    import spark.implicits._
-    val universe = SyntheticWeb.Universe(numHosts = 5, pagesPerHost = 10, seed = 2L)
-    val cfg = CrawlConfig(numPartitions = 2, saltsPerHost = 1,
-      hostBudgetPerRound = 4, maxRounds = 1, bloomExpectedItems = 1 << 10,
-      bloomSharded = true)
-    val root = Files.createTempDirectory("health-sharded").toString
-    CrawlJob.run(spark, universe.seedUrls(20).toDS(), SyntheticWeb.defaultRobots,
-      SyntheticWeb.hostMap(universe.numHosts).toDS(), universe, cfg, root)
-    val rows = Health.health(spark, Some(root)).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows("seen-sketches") === "up", "committed shards = healthy sketches")
-    // a sharded-flagged snapshot WITHOUT shard files (a checkpoint the
-    // crawl refuses to resume) must report degraded, not up
+    // without its bloom the snapshot cannot be resumed: the sketches
+    // report degraded, and one check down turns the aggregate down
     val store = new graft.sources.SnapshotStore(root)
-    val last = store.currentSnapshot.get
-    new java.io.File(store.snapshotDir(last), "cuckoo_bin").listFiles()
-      .filter(_.getName.startsWith("bloom-")).foreach(_.delete())
+    Files.delete(java.nio.file.Paths.get(store.snapshotDir(store.currentSnapshot.get), "bloom.bin"))
     val rows2 = Health.health(spark, Some(root)).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows2("seen-sketches") === "degraded")
+    assert(rows2("*") === "down")
   }
 
   test("health: missing store turns the aggregate down (one failing check suffices)") {
@@ -73,7 +58,7 @@ class HealthSpec extends SparkSpec {
   }
 
   test("debug echoes every CrawlConfig field, the checkpoint-shaping flags too") {
-    val cfg = CrawlConfig(bloomSharded = true, outlinksPerDoc = 7, dedupDocs = true,
+    val cfg = CrawlConfig(cuckooBuckets = 16, outlinksPerDoc = 7, dedupDocs = true,
       dedupThreshold = 0.75, dedupShingleK = 5, compactEvery = 3, wapAudit = true)
     val flags = Health.debug(spark, cfg).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -83,7 +68,7 @@ class HealthSpec extends SparkSpec {
     cfg.productElementNames.zip(cfg.productIterator).foreach { case (k, v) =>
       assert(flags(k) === v.toString, k)
     }
-    assert(flags("bloomSharded") === "true" && flags("outlinksPerDoc") === "7" &&
+    assert(flags("cuckooBuckets") === "16" && flags("outlinksPerDoc") === "7" &&
       flags("dedupDocs") === "true" && flags("dedupThreshold") === "0.75" &&
       flags("dedupShingleK") === "5" && flags("compactEvery") === "3" &&
       flags("wapAudit") === "true")

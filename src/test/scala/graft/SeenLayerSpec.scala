@@ -107,39 +107,6 @@ class SeenLayerSpec extends SparkSpec {
     assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"), plan)
   }
 
-  test("sharded bloom layer: same survivors as the broadcast path, no driver bloom") {
-    import spark.implicits._
-    val seen = (0 until 500).map(i => SeenUrl(s"https://h/$i",
-      graft.functions.UrlFunctions.urlHash(s"https://h/$i"), 0)).toDF()
-    val candidates = (250 until 900).map { i =>
-      val u = s"https://h/$i"
-      (u, graft.functions.UrlFunctions.urlHash(u), 1.0, i.toLong)
-    }.toDF("url_canon", "url_hash", "priority", "seq")
-    val expected = (500 until 900).map(i => s"https://h/$i").toSet
-    val dir = java.nio.file.Files.createTempDirectory("sketch-sharded").toString
-    // ONE fused pass writes both sketch families' blob files
-    UrlSeen.updateCuckoo(spark, UrlSeen.emptyCuckooState(spark),
-      seen.select("url_hash"), 1024, blobDir = Some(dir),
-      bloomShards = Some(UrlSeen.BloomShardSpec(None, 1024, 0.01))).count()
-    UrlSeen.finishCuckooDir(dir, spark.sessionState.newHadoopConf())
-    val shardFiles = new java.io.File(dir).listFiles().map(_.getName)
-    assert(shardFiles.exists(_.startsWith("bloom-")), shardFiles.mkString(","))
-    assert(shardFiles.exists(_.startsWith("bucket-")), shardFiles.mkString(","))
-    graft.frontier.BloomShardCache.clear()
-    val sharded = UrlSeen.filterNew(spark, candidates, seen,
-        UrlSeen.ShardedBloom(dir), Some(dir))
-      .select("url_canon").as[String].collect().toSet
-    assert(sharded === expected)
-    // broadcast path agrees (the sketch deployment must never change answers)
-    val broadcasted = UrlSeen.filterNew(spark, candidates, seen, broadcastBloom(seen, 10000), Some(dir))
-      .select("url_canon").as[String].collect().toSet
-    assert(broadcasted === expected)
-    // NoBloom (sharded cold start): exact join decides everything, same set
-    val cold = UrlSeen.filterNew(spark, candidates, seen, UrlSeen.NoBloom, None)
-      .select("url_canon").as[String].collect().toSet
-    assert(cold === expected)
-  }
-
   test("bloomOfDelta builds at most MaxDeltaPartials full-capacity partials") {
     // each partial is a FULL-capacity filter (merge geometry), so the
     // upstream partition count multiplies the treeReduce traffic: a
