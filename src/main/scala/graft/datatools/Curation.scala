@@ -1137,7 +1137,7 @@ object Curation {
       "budgetPerMille must be in (0, 1000]")
     require(bucketWidth > 0)
     val scored = docs.select(col(idCol),
-        TextAnalysis.qualityScore(col(textCol)).as("quality"),
+        TextAnalysis.qualityScoreFused(col(textCol)).as("quality"),
         TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .withColumn("bucket", expr(s"$idCol DIV ${bucketWidth}L"))
       .persist()

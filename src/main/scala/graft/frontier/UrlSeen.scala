@@ -280,14 +280,6 @@ object UrlSeen {
     p.getFileSystem(InProcessLocalFs.hadoopConf(SparkSession.active)).exists(p)
   }
 
-  /** Candidate row shape inside [[filterNew]] (what CrawlJob's in-batch
-    * dedup emits).
-    */
-  final case class Cand(url_canon: String, url_hash: Long, priority: Double, seq: Long)
-  // public: generated code (SerializeFromObject) must reach the accessors
-  final case class CandFlag(url_canon: String, url_hash: Long,
-      priority: Double, seq: Long, sketch_new: Boolean)
-
   /** First seen layer: the running bloom, broadcast (the north rule). */
   final case class BroadcastBloom(bc: Broadcast[BloomFilter])
 

@@ -78,23 +78,6 @@ final case class FetchResult(
     final_url: String = ""    // terminal URL of the redirect chain ("" = no redirect)
 )
 
-/** Per-partition lineage + fetch/convert metrics (FIXTURES.md §1
-  * `fetch_log`; analog of `chromium/network_aggregate.go:17-121` and the
-  * supervisor counters `gotenberg/supervisor.go:620-637`).
-  */
-final case class PartitionMetrics(
-    partition_id: Int,
-    round: Int,
-    urls_admitted: Long,
-    urls_deferred: Long,
-    urls_fetched: Long,
-    urls_converted: Long,
-    bytes_total: Long,
-    failed_count: Long,
-    wall_ms: Long,
-    tokens_spent: Long
-)
-
 /** Politeness + scheduling configuration — ports the supervisor envelope:
   * per-host concurrency ≤ 6 (`chromium/chromium.go:454,668`), queue cap
   * (`supervisor.go:302-317`), budget reset per round (restart-after
@@ -139,14 +122,15 @@ final case class CrawlConfig(
     // OPT-IN snapshot maintenance: every `compactEvery` committed
     // rounds, fold the cross-round delta tables into the just-committed
     // snapshot and EXPIRE the subsumed ones — Iceberg's
-    // rewrite_data_files + expire_snapshots. Small metadata deltas
-    // (url_seen_delta, minhash_index) are rewrite-compacted; the heavy
-    // history tables (output_spans, fetch_log, doc_dup_pairs, metrics)
-    // are folded by RENAME-only relocation, so expiry never deletes
-    // live rows and never rewrites the corpus. What expiry does drop is
-    // superseded per-round STATE (old frontier/pending/sketch
-    // snapshots — exactly what Iceberg expiry drops). Keeps the
-    // delta-union read O(rounds-since-compaction); 0 = off by default.
+    // rewrite_data_files + expire_snapshots. Every delta table
+    // (url_seen_delta, minhash_index, output_spans, fetch_log,
+    // doc_dup_pairs, metrics) is folded by RENAME-only relocation
+    // (SnapshotStore.relocateDeltas, no Spark job), so expiry never
+    // deletes live rows and maintenance never rewrites a table. What
+    // expiry does drop is superseded per-round STATE (old
+    // frontier/pending/sketch snapshots — exactly what Iceberg expiry
+    // drops). Keeps the delta-union read O(rounds-since-maintenance);
+    // 0 = off by default.
     compactEvery: Int = 0,
     // OPT-IN write-audit-publish: each round's snapshot is STAGED
     // (manifest flagged, CURRENT untouched), a structural audit runs

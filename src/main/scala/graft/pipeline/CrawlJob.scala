@@ -48,8 +48,9 @@ import scala.jdk.CollectionConverters._
   *     pending writes start when the spans write has materialized the
   *     fetch. A round is CPU-bound, so overlapping jobs fill the cores.
   *   - As few write tasks as a table's rows need. `url_seen_delta`,
-  *     `fetch_log`, `pending` and `metrics` are written from cached
-  *     frames, `coalesce`d (narrow, no recomputation) to
+  *     `fetch_log`, `pending`, `metrics` and (under `dedupDocs`)
+  *     `minhash_index` are written from cached frames, `coalesce`d
+  *     (narrow, no recomputation) to
   *     ceil(rows / [[RowsPerWriteTask]]) tasks, at most numPartitions:
   *     each write task pays a fixed cost (~17 ms of task time measured
   *     at 4 threads) however few rows it writes. The
@@ -576,6 +577,7 @@ object CrawlJob {
           metrics.result.iterator
         }.collect().toSeq)
       val fetchedCount = metricRows.map(_.urls_fetched).sum
+      val convertedCount = metricRows.map(_.urls_converted).sum
       val failedCount = metricRows.map(_.failed_count).sum
       val outlinkCount = metricRows.map(_.outlinks_total).sum
       val metricsFut = job("metrics")(store.write(metricRows.toDF().drop("outlinks_total")
@@ -619,9 +621,11 @@ object CrawlJob {
             docsRound, corpus, index,
             k = dedupShingleK, threshold = dedupThreshold, seed = cfg.seed)
           store.write(pairs.withColumn("round", roundValue(round)), round, "doc_dup_pairs")
-          // `round` makes the index compactable (hidden-partitioned by
-          // round) under cfg.compactEvery maintenance
-          store.write(deltaIndex.withColumn("round", roundValue(round)), round, "minhash_index")
+          // `round` is the column cfg.compactEvery maintenance partitions
+          // the index by; at most one row per converted doc, so the
+          // index writes as few files as the other small tables
+          store.write(deltaIndex.withColumn("round", roundValue(round))
+            .coalesce(writeTasks(convertedCount, cfg)), round, "minhash_index")
           // release the stage's caches — a long crawl must not
           // accumulate per-round cached frames (the admissions/fetched
           // discipline of the main loop)
@@ -702,24 +706,20 @@ object CrawlJob {
       // AFTER the commit (the checkpoint is durable either way) and
       // BEFORE the state reload below, so the reloaded frames plan over
       // the post-maintenance file set — never over paths expiry removed.
+      // Every fold is a RENAME-only relocation and runs no Spark job:
+      // maintenance never rewrites a table, and expiry never deletes
+      // live rows.
       if (cfg.compactEvery > 0 && (round + 1) % cfg.compactEvery == 0) {
-        labelled("snapshot-maintenance") {
-          // a table may exist only in EARLIER snapshots (an empty round,
-          // or dedupDocs toggled off after indexed rounds) — the guard
-          // must scan the whole history or expiry would strand live rows
-          def anywhere(t: String) = (0 to round).exists(store.hasTable(_, t))
-          // small metadata tables: REWRITE-compact (packs 10⁴ rounds of
-          // tiny delta files into one fat file per round-partition)
-          store.compactDeltas(spark, round, "url_seen_delta")
-          if (anywhere("minhash_index"))
-            store.compactDeltas(spark, round, "minhash_index", roundCol = "round")
-          // heavy history tables (the corpus + lineage): RENAME-only
-          // relocation — maintenance must never rewrite the 100-TB
-          // payload, and expiry must never delete live rows of it
-          Seq("output_spans", "fetch_log", "doc_dup_pairs", "metrics")
-            .filter(anywhere).foreach(t => store.relocateDeltas(round, t))
-          store.expireSnapshots()
-        }
+        // a table may exist only in EARLIER snapshots (an empty round,
+        // or dedupDocs toggled off after indexed rounds) — the guard
+        // must scan the whole history or expiry would strand live rows
+        def anywhere(t: String) = (0 to round).exists(store.hasTable(_, t))
+        Seq("url_seen_delta" -> "round_first_seen", "minhash_index" -> "round",
+          "output_spans" -> "round", "fetch_log" -> "round",
+          "doc_dup_pairs" -> "round", "metrics" -> "round")
+          .filter(t => anywhere(t._1))
+          .foreach { case (t, roundCol) => store.relocateDeltas(round, t, roundCol) }
+        store.expireSnapshots()
       }
 
       // reload state from the committed snapshot (truncates lineage —

@@ -26,8 +26,7 @@ import scala.jdk.CollectionConverters._
   * last committed round (north rule: resumable from checkpoint with
   * per-partition lineage).
   *
-  * Write path: every parquet table (a staged table, a hidden-partitioned
-  * one, a compaction's rewrite) is one `FileFormatWriter.write` call
+  * Write path: every parquet table is one `FileFormatWriter.write` call
   * ([[GraftBridge.writeParquet]]) with [[InProcessLocalFs.hadoopConf]],
   * replacing the target dir as `SaveMode.Overwrite` does; `_SUCCESS`
   * comes from the commit protocol and `_SCHEMA` from the store. That FS
@@ -35,6 +34,11 @@ import scala.jdk.CollectionConverters._
   * holds only what Hadoop's defaults do not give: each write task
   * deserializes it twice, ~25 properties instead of the session's
   * ~1,100.
+  *
+  * Maintenance (Iceberg `rewrite_data_files` + `expire_snapshots`) is
+  * one fold, [[relocateDeltas]]: it moves a delta table's files into
+  * hidden `_part=<round>` dirs of a later snapshot and runs no Spark
+  * job. Relocation is the only producer of that layout.
   */
 final class SnapshotStore(val root: String) {
 
@@ -51,9 +55,9 @@ final class SnapshotStore(val root: String) {
   def hasTable(id: Int, table: String): Boolean =
     Files.exists(Paths.get(tablePath(id, table), "_SUCCESS"))
 
-  /** Hidden-partition layout column — written as a partition directory,
-    * NEVER visible to readers (Iceberg's hidden partitioning: layout is
-    * table metadata, not schema).
+  /** Hidden-partition layout column — a relocated base's
+    * `_part=<round>` directories, NEVER visible to readers (Iceberg's
+    * hidden partitioning: layout is table metadata, not schema).
     */
   private val HiddenPartCol = "_part"
   private def transformMarker(id: Int, table: String): Path =
@@ -89,10 +93,10 @@ final class SnapshotStore(val root: String) {
     }
 
   def read(spark: SparkSession, id: Int, table: String): DataFrame = {
-    // a maintained base can hold files of MIXED schemas in one dir (the
-    // incremental carry renames pre-evolution partitions in beside the
-    // rewritten tail): the recorded schema is their evolution, and the
-    // scan projects null for columns a file lacks
+    // a maintained base can hold files of MIXED schemas in one dir
+    // (relocation moves in every round's files as they were written):
+    // the recorded schema is their evolution, and the scan projects
+    // null for columns a file lacks
     val df = spark.read.schema(schema(id, table)).parquet(tablePath(id, table))
     if (df.columns.contains(HiddenPartCol)) df.drop(HiddenPartCol) else df
   }
@@ -116,8 +120,8 @@ final class SnapshotStore(val root: String) {
   }
 
   /** Every parquet write of the store (see the write path above). */
-  private def writeParquet(df: DataFrame, dir: String, partitionBy: Seq[String] = Nil): Unit =
-    GraftBridge.writeParquet(df, dir, partitionBy, InProcessLocalFs.hadoopConf(df.sparkSession))
+  private def writeParquet(df: DataFrame, dir: String): Unit =
+    GraftBridge.writeParquet(df, dir, InProcessLocalFs.hadoopConf(df.sparkSession))
 
   /** Stage a table into the (uncommitted) snapshot `id`. */
   def write(df: DataFrame, id: Int, table: String,
@@ -130,24 +134,7 @@ final class SnapshotStore(val root: String) {
     recordSchema(Paths.get(tablePath(id, table)), df.schema)
   }
 
-  /** Stage a table with a HIDDEN partition: rows are laid out under
-    * `_part=<value>` directories computed by `transform`, the transform
-    * column never appears to readers (every read path drops it), and a
-    * `_PARTITION_TRANSFORM` marker records the transform name (and
-    * `_SCHEMA` the schema readers see, without the column) — the
-    * Iceberg hidden-partitioning contract (partitioning is table
-    * metadata; predicates on partition VALUES prune files without the
-    * schema ever carrying the derived column). Opt-in per table.
-    */
-  def writeHiddenPartitioned(df: DataFrame, id: Int, table: String,
-                             transformName: String,
-                             transform: org.apache.spark.sql.Column): Unit = {
-    writeParquet(df.withColumn(HiddenPartCol, transform), tablePath(id, table), Seq(HiddenPartCol))
-    recordSchema(Paths.get(tablePath(id, table)), df.schema)
-    Files.writeString(transformMarker(id, table), transformName)
-  }
-
-  /** The recorded hidden-partition transform of a staged table. */
+  /** The hidden-partition transform a relocation recorded for a table. */
   def partitionTransform(id: Int, table: String): Option[String] =
     if (Files.exists(transformMarker(id, table)))
       Some(Files.readString(transformMarker(id, table)).trim)
@@ -173,7 +160,6 @@ final class SnapshotStore(val root: String) {
       .parquet(dirs: _*).drop(HiddenPartCol)
   }
 
-  /** Atomically commit snapshot `id` with manifest metadata. */
   /** Files.list/walk hold an open directory handle until closed — a
     * long-lived driver calling metadata paths repeatedly would leak fds
     * toward ulimit without the explicit close.
@@ -187,7 +173,7 @@ final class SnapshotStore(val root: String) {
     try f(s.iterator().asScala) finally s.close()
   }
 
-  /** Table dirs of a snapshot — dot-dirs (crashed compaction staging)
+  /** Table dirs of a snapshot — dot-dirs (crashed maintenance staging)
     * never reach a manifest.
     */
   private def listedTables(id: Int): Seq[String] =
@@ -212,6 +198,7 @@ final class SnapshotStore(val root: String) {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Atomically commit snapshot `id` with manifest metadata. */
   def commit(id: Int, round: Int, meta: Map[String, String] = Map.empty): Unit = {
     writeManifestFile(id, round, meta)
     advanceCurrent(id)
@@ -285,107 +272,13 @@ final class SnapshotStore(val root: String) {
     else manifestMeta(id).get("compacted_tables")
       .map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
 
-  /** Rewrite snapshot `id`'s manifest in place with extra meta, WITHOUT
-    * touching CURRENT — maintenance operations (compaction) re-describe
-    * an already-committed snapshot; only `commit` moves the pointer.
-    */
-  private def rewriteManifest(id: Int, extraMeta: Map[String, String]): Unit = {
-    val round = snapshotRound(id)
-    val tables = listedTables(id)
-    val meta = manifestMeta(id) ++ extraMeta + ("round" -> round.toString)
-    val metaJson = meta.map { case (k, v) => s""""$k": "$v"""" }.mkString(", ")
-    val manifest =
-      s"""{"snapshot_id": $id, "round": $round, "tables": [${tables.map(t => s""""$t"""").mkString(", ")}], "meta": {$metaJson}}"""
-    Files.writeString(Paths.get(snapshotDir(id), "MANIFEST.json"), manifest)
-  }
-
-  /** Iceberg `rewrite_data_files` + manifest rewrite for the delta
-    * tables: fold every delta of `table` in snapshots 0..baseId into
-    * `v<baseId>/<table>` itself, hidden-partitioned by `roundCol` so
-    * round-range reads keep file-level pruning INSIDE the compacted
-    * table (the per-snapshot manifest prune those rounds used to get).
-    * After compaction, snapshots below `baseId` hold no live data for
-    * `table` and [[expireSnapshots]] may delete them.
-    *
-    * At 10⁴ crawl rounds this is the maintenance pass that keeps the
-    * union read O(#snapshots-since-compaction) instead of O(#rounds
-    * ever), and replaces 10⁴ small per-round files with
-    * one-file-per-round partitions of a single table.
-    */
-  def compactDeltas(spark: SparkSession, baseId: Int, table: String,
-                    roundCol: String = "round_first_seen"): Unit = {
-    // the base need not carry its own delta (a round can legitimately
-    // append nothing — e.g. zero converted docs → an empty index
-    // delta): compaction folds every EARLIER delta into the base
-    // regardless, so expiry below the base never strands live rows
-    val all = (0 to baseId).filter(hasTable(_, table))
-    require(all.nonEmpty, s"no $table in snapshots 0..$baseId to compact")
-    // INCREMENTAL: a previous maintenance base already holds rounds
-    // 0..prev as packed `_part=` dirs — those fold into the new base by
-    // pure RENAME below; only the uncompacted tail (rounds since the
-    // last maintenance) pays the rewrite. Per-pass cost is O(delta
-    // since last maintenance), not O(table) — on a 10⁴-round crawl the
-    // difference between flat and quadratic total maintenance cost.
-    // NOT re-run-safe after a crash: the Overwrite tail write would
-    // clobber staging that may hold the only copy of already-carried
-    // prev-base partitions, and a fresh swap would destroy the backup.
-    // Fail fast instead — the dot-dirs preserve every byte for manual
-    // repair. (relocateDeltas' assembly, by contrast, is merge-
-    // idempotent and adopts its own staging.)
-    val debris = maintenanceDebris(baseId).filter(_.endsWith(s"_$table"))
-    require(debris.isEmpty,
-      s"interrupted-maintenance debris for $table in v$baseId (${debris.mkString(", ")}): " +
-        "repair manually before compacting — a re-run would clobber parked rows")
-    val prevBase = all.filter(id =>
-      compactedTables(id).contains(table) && partitionTransform(id, table).isDefined)
-      .lastOption.filter(_ < baseId)
-    val tailIds = prevBase.map(b => all.filter(_ > b)).getOrElse(all)
-    val tmp = Paths.get(snapshotDir(baseId), s".compact_$table")
-    if (tailIds.nonEmpty) {
-      val tail = tailIds.map(read(spark, _, table))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      require(tail.columns.contains(roundCol), s"$table lacks round column $roundCol")
-      // one shuffle by round → each `_part=<round>` dir gets its rows
-      // from few tasks (fat files), instead of every task spraying
-      // every round. Staged beside, then swapped: the rewrite must not
-      // destroy its inputs (v<baseId>'s own delta) before the new
-      // files exist.
-      writeParquet(tail.repartition(org.apache.spark.sql.functions.col(roundCol))
-        .withColumn(HiddenPartCol, org.apache.spark.sql.functions.col(roundCol)),
-        tmp.toString, Seq(HiddenPartCol))
-    } else Files.createDirectories(tmp)
-    // previous base's packed partitions ride in by rename, never rewrite
-    prevBase.foreach { b =>
-      val src = Paths.get(tablePath(b, table))
-      listed(src)(_.filter(p =>
-        p.getFileName.toString.startsWith(s"$HiddenPartCol=")).toSeq)
-        .foreach(d => mergeMove(d, tmp.resolve(d.getFileName.toString)))
-    }
-    // the base's schema: the carried rounds' evolved by the tail's
-    recordSchema(tmp, evolve((prevBase.toSeq ++ tailIds).map(schema(_, table))))
-    // intent file: spans the swap → manifest window, during which the
-    // pass leaves no staging/backup debris but is not yet recorded —
-    // without it, a crash there would pass the resume fail-fast and
-    // readDeltas would double-count every carried round
-    val intent = Paths.get(snapshotDir(baseId), s".maint_$table")
-    Files.writeString(intent, table)
-    swapStaged(baseId, table, tmp)
-    Files.writeString(transformMarker(baseId, table), s"identity($roundCol)")
-    rewriteManifest(baseId, Map(
-      "compacted_tables" -> (compactedTables(baseId) + table).toSeq.sorted.mkString(","),
-      "compacted_through" -> baseId.toString))
-    prevBase.foreach(b => deleteRecursively(Paths.get(tablePath(b, table))))
-    Files.delete(intent)
-  }
-
   /** Swap a fully-staged maintenance layout in for the live table: the
     * old table moves aside with ONE rename (not a slow recursive delete
     * while the table is already gone), the staging dir renames in, and
-    * `_SUCCESS` is (re)written so `hasTable` holds even when the staged
-    * layout came from renames alone (empty-tail compaction / relocation
-    * never ran a Spark write). The unreadable window is two renames
-    * wide; the old layout survives intact in the `.old_` dir until the
-    * swap completes.
+    * `_SUCCESS` is (re)written so `hasTable` holds: the staged layout
+    * came from renames alone, never from a Spark write. The unreadable
+    * window is two renames wide; the old layout survives intact in the
+    * `.old_` dir until the swap completes.
     */
   private def swapStaged(baseId: Int, table: String, staged: Path): Unit = {
     val dst = Paths.get(tablePath(baseId, table))
@@ -408,8 +301,8 @@ final class SnapshotStore(val root: String) {
       _.exists(_.getFileName.toString.startsWith(s"$HiddenPartCol=")))
 
   /** Dot-dirs a crashed maintenance pass may have left in a snapshot —
-    * `.compact_*` / `.reloc_*` staging and `.old_*` swap backups. They
-    * preserve every byte of an interrupted pass, but rows parked there
+    * `.reloc_*` staging, `.old_*` swap backups and `.maint_*` intents.
+    * They preserve every byte of an interrupted pass, but rows parked there
     * are invisible to readers, so resume paths must refuse to crawl
     * over them ([[graft.pipeline.CrawlJob]] fails fast; the real
     * Iceberg metadata swap is the component that makes maintenance
@@ -419,12 +312,11 @@ final class SnapshotStore(val root: String) {
     if (!Files.isDirectory(Paths.get(snapshotDir(id)))) Nil
     else listed(Paths.get(snapshotDir(id)))(
       _.map(_.getFileName.toString)
-        .filter(n => n.startsWith(".compact_") || n.startsWith(".reloc_") ||
-          n.startsWith(".old_") || n.startsWith(".maint_")).toSeq).sorted
+        .filter(n => n.startsWith(".reloc_") || n.startsWith(".old_") ||
+          n.startsWith(".maint_")).toSeq).sorted
 
   /** Move every entry of `from` into `into` (created if absent) —
-    * idempotent per-file renames, the primitive both maintenance folds
-    * (compaction's prev-base carry and relocation) are built from.
+    * idempotent per-file renames, the primitive relocation is built from.
     */
   private def mergeMove(from: Path, into: Path): Unit = {
     Files.createDirectories(into)
@@ -434,34 +326,38 @@ final class SnapshotStore(val root: String) {
     }
   }
 
-  /** Rename-only sibling of [[compactDeltas]] for the HEAVY history
-    * tables (output spans, fetch log, dup pairs, metrics): fold every
-    * snapshot ≤ `baseId`'s delta of `table` into `v<baseId>/<table>` as
-    * hidden `_part=<round>` partition directories by pure file MOVE —
-    * zero data rewrite. The result is layout-identical to what
-    * [[compactDeltas]] produces (`identity(roundCol)` hidden
-    * partitioning, round-range reads prune `_part=` dirs), but costs
-    * O(#files) renames instead of an O(table) Spark job — at 100 TB a
-    * maintenance pass must not rewrite the corpus it maintains, which
-    * is exactly Iceberg's `expire_snapshots` contract: expiry drops
-    * unreferenced metadata, never live data files.
+  /** Iceberg `rewrite_data_files` + manifest rewrite for a delta table:
+    * fold every snapshot ≤ `baseId`'s delta of `table` into
+    * `v<baseId>/<table>` as hidden `_part=<round>` partition directories
+    * by pure file MOVE — zero data rewrite, no Spark job. Round-range
+    * reads prune the `_part=` dirs INSIDE the base (the per-snapshot
+    * manifest prune those rounds used to get), and after the fold the
+    * snapshots below `baseId` hold no live data for `table`, so
+    * [[expireSnapshots]] may delete them. A pass costs O(#files)
+    * renames, never an O(table) rewrite — at 100 TB a maintenance pass
+    * must not rewrite the corpus it maintains, which is exactly
+    * Iceberg's `expire_snapshots` contract: expiry drops unreferenced
+    * metadata, never live data files. The writers size each round's
+    * files (the crawl writes its small tables with as few tasks as
+    * their rows need), so there is nothing left to pack.
     *
     * Each delta's files keep their `roundCol` column; the partition dir
-    * merely mirrors it (identity transform), so readers see the same
-    * rows either way. Sources already hidden-partitioned (an earlier
-    * relocation base) contribute their `_part=` dirs verbatim.
+    * merely mirrors it (identity transform: rows of snapshot N carry
+    * round N), so readers see the same rows either way. Sources already
+    * hidden-partitioned (an earlier base) contribute their `_part=` dirs
+    * verbatim.
     *
     * Crash safety: every byte is always on disk — moves stage into a
     * dot-dir (invisible to manifests), the live table moves aside with
     * one rename during the swap ([[swapStaged]]) and is deleted only
     * after the staged layout is in place, and the manifest is rewritten
     * BEFORE drained source dirs are deleted (so readers never union a
-    * drained source). A crash mid-pass can leave rows parked in the
-    * dot-dirs until a re-run of the pass at the SAME base completes the
-    * idempotent merge-moves; this miniature does not self-heal across a
-    * crash followed by maintenance at a LATER base — that last gap is
-    * what the real Iceberg metadata swap (the documented drop-in
-    * replacement for this store) closes.
+    * drained source). A crash during assembly leaves rows parked in the
+    * dot-dir; a re-run of the pass at the SAME base adopts it and
+    * completes the idempotent merge-moves. This miniature does not
+    * self-heal across a crash followed by maintenance at a LATER base —
+    * that last gap is what the real Iceberg metadata swap (the
+    * documented drop-in replacement for this store) closes.
     */
   def relocateDeltas(baseId: Int, table: String, roundCol: String = "round"): Unit = {
     val sources = (0 to baseId).filter(hasTable(_, table))
@@ -518,7 +414,8 @@ final class SnapshotStore(val root: String) {
     Files.writeString(intent, table)
     swapStaged(baseId, table, staging)
     Files.writeString(transformMarker(baseId, table), s"identity($roundCol)")
-    rewriteManifest(baseId, Map(
+    // the manifest is re-described in place; CURRENT does not move
+    writeManifestFile(baseId, snapshotRound(baseId), manifestMeta(baseId) ++ Map(
       "compacted_tables" -> (compactedTables(baseId) + table).toSeq.sorted.mkString(","),
       "compacted_through" -> baseId.toString))
     sources.filter(_ != baseId)
@@ -545,18 +442,15 @@ final class SnapshotStore(val root: String) {
     val bases = later.filter(l => compactedTables(l).nonEmpty)
     require(bases.isEmpty,
       s"cannot roll back to $id across maintenance base(s) v${bases.mkString(", v")}: " +
-        "they hold the only copy of earlier rounds' compacted/relocated tables")
-    val tmp = rootPath.resolve("CURRENT.tmp")
-    Files.writeString(tmp, id.toString)
-    Files.move(tmp, currentFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+        "they hold the only copy of earlier rounds' relocated tables")
+    advanceCurrent(id)
     later.foreach(l => deleteRecursively(Paths.get(snapshotDir(l))))
   }
 
   /** Iceberg `expire_snapshots`: delete every snapshot dir strictly
     * below the newest compacted base (their rows live on inside it).
-    * No-op without a compaction; never touches the base, anything after
-    * it, or CURRENT. Returns the expired ids.
+    * No-op without a maintained base; never touches the base, anything
+    * after it, or CURRENT. Returns the expired ids.
     */
   def expireSnapshots(): Seq[Int] = {
     // bounded by CURRENT: a dangling future dir (crash between

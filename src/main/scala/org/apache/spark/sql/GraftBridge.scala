@@ -22,16 +22,14 @@ object GraftBridge {
   def asNullable(s: types.StructType): types.StructType = s.asNullable
 
   /** Write `df` as parquet into `path` with `hadoopConf`, replacing what
-    * is there (`SaveMode.Overwrite`), optionally partitioned by the
-    * `partitionBy` columns: `FileFormatWriter.write`, called the way
+    * is there (`SaveMode.Overwrite`): `FileFormatWriter.write`, called the way
     * `InsertIntoHadoopFsRelationCommand` calls it, but with the caller's
     * conf, which its write and stats-tracker tasks deserialize. The files
     * (`_SUCCESS` included) are the ones `df.write.parquet` writes with
     * that conf. Unlike `DataFrameWriter`, it refreshes no cached plan that
     * reads `path`.
     */
-  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String],
-                   hadoopConf: Configuration): Unit = {
+  def writeParquet(df: DataFrame, path: String, hadoopConf: Configuration): Unit = {
     val qe = df.queryExecution
     val out = new Path(path)
     val fs = out.getFileSystem(hadoopConf)
@@ -47,7 +45,7 @@ object GraftBridge {
         new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics)
       FileFormatWriter.write(qe.sparkSession, plan, new ParquetFileFormat, committer,
         FileFormatWriter.OutputSpec(dir, Map.empty, plan.output), hadoopConf,
-        partitionBy.map(c => plan.output.find(_.name == c).get), None, Seq(tracker), Map.empty)
+        Nil, None, Seq(tracker), Map.empty)
     }
   }
 }

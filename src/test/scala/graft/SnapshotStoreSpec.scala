@@ -113,40 +113,40 @@ class SnapshotStoreSpec extends SparkSpec {
   test("hidden partitioning: layout prunes by partition value, readers never see the column") {
     import spark.implicits._
     val store = freshStore()
-    val log = (0 until 60).map { i =>
-      (s"https://h/$i", 200 + (i % 3) * 100, i.toLong) // statuses 200/300/400
-    }.toDF("url_canon", "status", "bytes")
-    // layout by status CENTURY — a derived value, not a column readers see
-    store.writeHiddenPartitioned(log, 0, "fetch_log_hp", "status_century",
-      (col("status") / 100).cast("int") * 100)
-    store.commit(0, 0)
-    assert(store.partitionTransform(0, "fetch_log_hp") === Some("status_century"))
+    // three rounds of 20 rows each, statuses 200/300/400 by round,
+    // folded into v2's `_part=<round>` dirs by relocation
+    (0 to 2).foreach { r =>
+      store.write((0 until 20).map(i => (s"https://h/$r/$i", 200 + r * 100, i.toLong, r))
+        .toDF("url_canon", "status", "bytes", "round"), r, "fetch_log")
+      store.commit(r, r)
+    }
+    store.relocateDeltas(baseId = 2, table = "fetch_log")
+    assert(store.partitionTransform(2, "fetch_log") === Some("identity(round)"))
     // plain read: full rows, NO _part column (hidden = not schema)
-    val all = store.read(spark, 0, "fetch_log_hp")
-    assert(all.columns.toSet === Set("url_canon", "status", "bytes"))
+    val all = store.read(spark, 2, "fetch_log")
+    assert(all.columns.toSet === Set("url_canon", "status", "bytes", "round"))
     assert(all.count() === 60)
-    // partition-value read: only the 2xx directory's files enter the plan
-    val only200 = store.readPartitions(spark, 0, "fetch_log_hp", Seq("200"))
-    assert(only200.columns.toSet === Set("url_canon", "status", "bytes"))
-    assert(only200.count() === 20)
-    assert(only200.select("status").distinct().collect().map(_.getInt(0)).toSeq === Seq(200))
-    // pruning is a SCAN property: the partition predicate lands in
-    // PartitionFilters (inputFiles reflects the pre-pruning index, so
-    // it can't witness this)
-    val planStr = only200.queryExecution.executedPlan.toString()
+    // partition-value read: only round 1's directory enters the plan
+    val only1 = store.readPartitions(spark, 2, "fetch_log", Seq("1"))
+    assert(only1.columns.toSet === Set("url_canon", "status", "bytes", "round"))
+    assert(only1.count() === 20)
+    assert(only1.select("status").distinct().collect().map(_.getInt(0)).toSeq === Seq(300))
+    val planned = only1.inputFiles
+    assert(planned.nonEmpty && planned.forall(_.contains("_part=1")), planned.mkString("\n"))
+    val planStr = only1.queryExecution.executedPlan.toString()
     assert(planStr.contains("PartitionFilters") && planStr.contains("_part"), planStr)
-    // and the layout itself: the 2xx rows live alone in their directory
-    assert(spark.read.parquet(s"${store.tablePath(0, "fetch_log_hp")}/_part=200")
+    // and the layout itself: round 1's rows live alone in their directory
+    assert(spark.read.parquet(s"${store.tablePath(2, "fetch_log")}/_part=1")
       .count() === 20)
     // delta-union read across a hidden-partitioned and a plain snapshot
-    store.write(Seq(("https://h/x", 500, 1L)).toDF("url_canon", "status", "bytes"),
-      1, "fetch_log_hp")
-    store.commit(1, 1)
-    val union = store.readDeltas(spark, 1, "fetch_log_hp")
-    assert(union.columns.toSet === Set("url_canon", "status", "bytes"))
+    store.write(Seq(("https://h/x", 500, 1L, 3)).toDF("url_canon", "status", "bytes", "round"),
+      3, "fetch_log")
+    store.commit(3, 3)
+    val union = store.readDeltas(spark, 3, "fetch_log")
+    assert(union.columns.toSet === Set("url_canon", "status", "bytes", "round"))
     assert(union.count() === 61)
     // metadata files table walks into the partition directories
-    val metaFiles = store.filesTable(spark).filter(col("table") === "fetch_log_hp")
+    val metaFiles = store.filesTable(spark).filter(col("table") === "fetch_log")
       .collect().map(_.getString(2))
     assert(metaFiles.exists(_.contains("_part=")), metaFiles.mkString("\n"))
   }
@@ -183,8 +183,8 @@ class SnapshotStoreSpec extends SparkSpec {
     import spark.implicits._
     val store = freshStore()
     // 6 rounds of deltas, several files each (repartition(3)); rounds
-    // 4-5 carry an ADDED column (src_tag) so the incremental second
-    // compaction below mixes pre- and post-evolution files in one base
+    // 4-5 carry an ADDED column (src_tag) so the second pass below
+    // mixes pre- and post-evolution files in one base
     (0 to 5).foreach { r =>
       val base = (0 until 10).map(i => (s"https://h/$r/$i", (r * 100 + i).toLong, r))
         .toDF("url_canon", "url_hash", "round_first_seen")
@@ -193,11 +193,12 @@ class SnapshotStoreSpec extends SparkSpec {
       store.commit(r, r)
     }
     val before = store.readSeen(spark, 5).collect().map(_.getString(0)).toSet
-    val filesBefore = store.filesTable(spark)
-      .filter(col("snapshot_id") <= 3 && col("table") === "url_seen_delta").count()
+    def fileNames = store.filesTable(spark).filter(col("table") === "url_seen_delta")
+      .collect().map(_.getString(2).split("/").last).toSet
+    val filesBefore = fileNames
 
-    // compact rounds 0..3 into v3; v0..v2 become expirable
-    store.compactDeltas(spark, baseId = 3, table = "url_seen_delta")
+    // fold rounds 0..3 into v3; v0..v2 become expirable
+    store.relocateDeltas(baseId = 3, table = "url_seen_delta", roundCol = "round_first_seen")
     assert(store.compactedTables(3) === Set("url_seen_delta"))
     // rollback across a maintenance base would delete the only copy of
     // the rounds folded into it — refused
@@ -213,11 +214,6 @@ class SnapshotStoreSpec extends SparkSpec {
     // full read AFTER expiry: still the identical 60-row set
     val after = store.readSeen(spark, 5).collect().map(_.getString(0)).toSet
     assert(after === before)
-    // fewer files for the compacted range: one partition dir per round
-    // inside v3 instead of 4 snapshots x 3 files
-    val filesAfter = store.filesTable(spark)
-      .filter(col("snapshot_id") === 3 && col("table") === "url_seen_delta").count()
-    assert(filesAfter < filesBefore, s"$filesAfter !< $filesBefore")
 
     // round-range pruning INSIDE the compacted base: only its matching
     // `_part=` dirs are planned, plus nothing from v4/v5
@@ -235,27 +231,20 @@ class SnapshotStoreSpec extends SparkSpec {
     // the seen read of the CURRENT snapshot feeds resume — unchanged
     assert(store.readSeen(spark, 5).count() === 60)
 
-    // INCREMENTAL second pass: compacting into v5 rewrites only the
-    // v4/v5 tail; v3's already-packed `_part=` dirs are carried by
-    // RENAME — same file names, no rewrite — so per-pass maintenance
-    // cost is O(delta since last pass), not O(table)
-    val packedBefore = store.filesTable(spark)
-      .filter(col("snapshot_id") === 3 && col("table") === "url_seen_delta")
-      .collect().map(_.getString(2).split("/").last).toSet
-    store.compactDeltas(spark, baseId = 5, table = "url_seen_delta")
+    // CHAINED second pass into v5: v3's `_part=` dirs and the v4/v5
+    // deltas all move by RENAME — every file the rounds wrote, by name,
+    // no rewrite — so a pass costs O(files since the last pass)
+    store.relocateDeltas(baseId = 5, table = "url_seen_delta", roundCol = "round_first_seen")
     assert(store.expireSnapshots() === Seq(3, 4))
     assert(store.readSeen(spark, 5).collect().map(_.getString(0)).toSet === before)
-    val carried = store.filesTable(spark)
-      .filter(col("table") === "url_seen_delta")
-      .collect().map(_.getString(2).split("/").last).toSet
-    assert(packedBefore.subsetOf(carried), "prev-base partitions must carry by rename")
+    assert(fileNames === filesBefore, "relocation must move, never rewrite")
     assert(store.readSeen(spark, 5, rounds = Some((1, 2)))
       .collect().map(_.getString(0)).toSet ===
       before.filter(u => u.contains("/1/") || u.contains("/2/")))
 
     // ADD-COLUMN EVOLUTION ACROSS THE CARRY: v5 now mixes carried
-    // pre-evolution files (rounds 0-3) with the rewritten post-
-    // evolution tail (4-5) in one dir — footer merging must surface
+    // pre-evolution files (rounds 0-3) with the post-evolution files
+    // of rounds 4-5 in one dir — footer merging must surface
     // src_tag, null for the old rounds, instead of letting one
     // arbitrary footer silently drop the column
     val evolved = store.readSeen(spark, 5)
@@ -266,13 +255,10 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.readSeen(spark, 5, rounds = Some((3, 4)))
       .filter(col("src_tag").isNotNull).count() === 10)
 
-    // interrupted-maintenance debris blocks BOTH maintenance verbs
+    // interrupted-swap debris blocks a re-run of the pass
     val debris = java.nio.file.Paths.get(store.snapshotDir(5), ".maint_url_seen_delta")
     Files.writeString(debris, "url_seen_delta")
     try {
-      val c = intercept[IllegalArgumentException](
-        store.compactDeltas(spark, baseId = 5, table = "url_seen_delta"))
-      assert(c.getMessage.contains("debris"))
       val r = intercept[IllegalArgumentException](
         store.relocateDeltas(baseId = 5, table = "url_seen_delta",
           roundCol = "round_first_seen"))
@@ -308,7 +294,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(!store.hasTable(0, "output_spans") && !store.hasTable(1, "output_spans"))
     assert(store.expireSnapshots() === Seq(0, 1))
 
-    // round-range pruning inside the relocated base, like compaction
+    // round-range pruning inside the relocated base
     val pruned = store.readDeltas(spark, 3, "output_spans", rounds = Some((1, 1)))
     assert(pruned.collect().map(_.getString(0)).toSet === before.filter(_.startsWith("d1-")))
     assert(pruned.inputFiles.forall(f => f.contains("/v2/") && f.contains("_part=1")))
@@ -323,6 +309,77 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(store.readDeltas(spark, 3, "output_spans", rounds = Some((0, 1)))
       .collect().map(_.getString(0)).toSet ===
       before.filter(d => d.startsWith("d0-") || d.startsWith("d1-")))
+  }
+
+  test("relocation interrupted after assembly: a re-run at the same base gives the same seen set") {
+    import spark.implicits._
+    val store = freshStore()
+    (0 to 2).foreach { r =>
+      store.write((0 until 6).map(i => (s"https://c/$r/$i", (r * 10 + i).toLong, r))
+        .toDF("url_canon", "url_hash", "round_first_seen").repartition(2), r, "url_seen_delta")
+      store.commit(r, r)
+    }
+    def seenSet = store.readSeen(spark, 2).collect().map(_.toString).toSet
+    val before = seenSet
+    // the crash: every round's data files already moved into the
+    // staging dir, nothing swapped in, no manifest rewritten
+    val staging = Paths.get(store.snapshotDir(2), ".reloc_url_seen_delta")
+    (0 to 2).foreach { r =>
+      val part = Files.createDirectories(staging.resolve(s"_part=$r"))
+      val src = Paths.get(store.tablePath(r, "url_seen_delta"))
+      Files.list(src).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach(f => Files.move(f, part.resolve(f.getFileName.toString)))
+    }
+    assert(store.maintenanceDebris(2) === Seq(".reloc_url_seen_delta"))
+    assert(store.compactedTables(2).isEmpty)
+    // the re-run adopts the staged files and finishes the pass
+    store.relocateDeltas(baseId = 2, table = "url_seen_delta", roundCol = "round_first_seen")
+    assert(store.maintenanceDebris(2).isEmpty)
+    assert(store.compactedTables(2) === Set("url_seen_delta"))
+    assert(seenSet === before)
+    assert(store.expireSnapshots() === Seq(0, 1))
+    assert(seenSet === before)
+    assert(store.readSeen(spark, 2, rounds = Some((1, 1))).count() === 6)
+  }
+
+  test("crawl maintenance keeps the files the rounds wrote for the seen table and the doc index") {
+    import spark.implicits._
+    val universe = SyntheticWeb.Universe(numHosts = 11, pagesPerHost = 20,
+      seed = 3L, outlinksPerDoc = 3, spansPerDoc = 4)
+    // one round per call: each round's files are listed before a pass
+    // (after rounds 1 and 3) can move them
+    val cfg = CrawlConfig(numPartitions = 4, saltsPerHost = 2, hostBudgetPerRound = 4,
+      maxRounds = 1, bloomExpectedItems = 1 << 12, dedupDocs = true, compactEvery = 2)
+    val store = freshStore()
+    val tables = Seq("url_seen_delta", "minhash_index")
+    def names(dir: Path): Set[String] =
+      if (!Files.isDirectory(dir)) Set.empty
+      else Files.list(dir).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSet
+    def partNames(base: Int, t: String, round: Int): Set[String] =
+      names(Paths.get(store.tablePath(base, t), s"_part=$round"))
+    val written = scala.collection.mutable.Map.empty[(String, Int), Set[String]]
+    (0 to 3).foreach { r =>
+      CrawlJob.run(spark, universe.seedUrls(30).toDS(), SyntheticWeb.defaultRobots,
+        SyntheticWeb.hostMap(universe.numHosts).toDS(), universe, cfg, store.root)
+      assert(store.currentSnapshot === Some(r))
+      if (r % 2 == 0) tables.foreach { t =>
+        written((t, r)) = names(Paths.get(store.tablePath(r, t)))
+        assert(written((t, r)).nonEmpty, s"v$r/$t")
+      } else tables.foreach { t =>
+        assert(store.compactedTables(r).contains(t), s"v$r/$t")
+        // every earlier round's files sit, by name, in the base's
+        // `_part=<round>` dir: moved, never rewritten
+        written.collect { case ((`t`, q), files) => q -> files }.foreach { case (q, files) =>
+          assert(partNames(r, t, q) === files, s"v$r/$t/_part=$q")
+        }
+        (0 to r).foreach(q => written((t, q)) = partNames(r, t, q))
+        assert(written((t, r)).nonEmpty, s"v$r/$t/_part=$r")
+      }
+    }
+    assert(store.committedSnapshots === Seq(3))
+    assert(store.readSeen(spark, 3).count() === store.manifestMeta(3)("seen_total").toLong)
   }
 
   test("WAP: staged snapshot is invisible until publish; audit reads see it by id") {
@@ -401,15 +458,15 @@ class SnapshotStoreSpec extends SparkSpec {
     // url_seen_delta, cuckoo, pending, doc_dup_pairs, minhash_index
     val plain = crawl(cfg)
     assert(assertRecordedSchemas(plain) >= 4 * 9)
-    // in-crawl maintenance: rewrite-compacted and rename-relocated
-    // hidden-partitioned bases keep a recorded schema of their own
+    // in-crawl maintenance: relocated hidden-partitioned bases keep a
+    // recorded schema of their own
     val maintained = crawl(cfg.copy(compactEvery = 2))
     assert(maintained.compactedTables(3).contains("url_seen_delta"))
     assert(maintained.compactedTables(3).contains("output_spans"))
     assertRecordedSchemas(maintained)
   }
 
-  test("recorded schemas: add-column evolution across compaction and relocation") {
+  test("recorded schemas: add-column evolution across chained relocations") {
     import spark.implicits._
     val store = freshStore()
     (0 to 3).foreach { r =>
@@ -421,10 +478,10 @@ class SnapshotStoreSpec extends SparkSpec {
     }
     assert(store.schema(1, "url_seen_delta").fieldNames.toSeq ===
       Seq("url_canon", "url_hash", "round_first_seen"))
-    // compact 0..1, then 2..3 on top: the second base carries the
-    // pre-evolution partitions beside the evolved tail
-    store.compactDeltas(spark, baseId = 1, table = "url_seen_delta")
-    store.compactDeltas(spark, baseId = 3, table = "url_seen_delta")
+    // fold 0..1, then 2..3 on top: the second base carries the
+    // pre-evolution partitions beside the evolved rounds
+    store.relocateDeltas(baseId = 1, table = "url_seen_delta", roundCol = "round_first_seen")
+    store.relocateDeltas(baseId = 3, table = "url_seen_delta", roundCol = "round_first_seen")
     store.relocateDeltas(baseId = 3, table = "output_spans")
     assert(store.schema(3, "url_seen_delta").fieldNames.toSeq ===
       Seq("url_canon", "url_hash", "round_first_seen", "src_tag"))
@@ -432,10 +489,6 @@ class SnapshotStoreSpec extends SparkSpec {
     val seen = store.readSeen(spark, 3)
     assert(seen.filter(col("src_tag").isNull).count() === 2)
     assert(store.readDeltas(spark, 3, "output_spans").count() === 4)
-    // hidden-partitioned write: the schema readers see, without `_part`
-    store.writeHiddenPartitioned(Seq(("u", 200)).toDF("url_canon", "status"), 4, "fetch_log_hp",
-      "status", col("status"))
-    assert(store.schema(4, "fetch_log_hp") === inferred(store, 4, "fetch_log_hp"))
   }
 
   /** Every file and directory under `dir` → (mode, sha-256 of a file's
@@ -467,7 +520,7 @@ class SnapshotStoreSpec extends SparkSpec {
     writeReference(reference.toString)
     val mine = Paths.get(store.tablePath(0, table))
     assert(Files.exists(mine.resolve("_SUCCESS")) && Files.exists(mine.resolve("_SCHEMA")), table)
-    val got = layout(mine) -- Seq("_SCHEMA", "_PARTITION_TRANSFORM")
+    val got = layout(mine) - "_SCHEMA"
     val want = layout(reference)
     assert(got.keys.exists(_.endsWith(".parquet")) && got.keys.exists(_.endsWith(".parquet.crc")))
     assert(got === want, table)
@@ -505,20 +558,11 @@ class SnapshotStoreSpec extends SparkSpec {
       writer(fetchLog.sortWithinPartitions("url_canon")).parquet)
     assertSameFiles(store, "pending", refs.resolve("pending"),
       _.write(pending.coalesce(1), 0, "pending"), writer(pending.coalesce(1)).parquet)
-    val century = (col("status") / 100).cast("int") * 100
-    assertSameFiles(store, "fetch_log_hp", refs.resolve("fetch_log_hp"),
-      _.writeHiddenPartitioned(fetchLog, 0, "fetch_log_hp", "status_century", century),
-      writer(fetchLog.withColumn("_part", century)).partitionBy("_part").parquet)
-    assert(Files.isDirectory(Paths.get(store.tablePath(0, "fetch_log_hp"), "_part=400")))
 
     // Overwrite: the same (id, table) again keeps only the second write
     store.write(pending.limit(5).coalesce(1), 0, "pending")
     assert(store.read(spark, 0, "pending").count() === 5)
     assert(layout(Paths.get(store.tablePath(0, "pending"))).keys.count(_.endsWith(".parquet")) === 1)
-    store.writeHiddenPartitioned(fetchLog.filter(col("status") === 200), 0, "fetch_log_hp",
-      "status_century", century)
-    assert(!Files.exists(Paths.get(store.tablePath(0, "fetch_log_hp"), "_part=400")))
-    assert(store.read(spark, 0, "fetch_log_hp").count() === fetchLog.filter(col("status") === 200).count())
     Seq(frontier.toDF(), fetchLog, pending).foreach(_.unpersist())
   }
 
