@@ -1,6 +1,6 @@
 package graft.datatools
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -112,12 +112,12 @@ object GraphOps {
     // caches rows but keeps the nested plan). On a real cluster swap in
     // a reliable checkpoint dir if executor loss mid-loop matters; the
     // loop is restartable from any round's labels either way.
-    // EAGER, deliberately: the lazy-init fold (see [[linkAuthority]]'s
-    // nodes) was A/B-measured here and showed NO benefit within host
-    // noise — round 1 references labels THREE times (neighbor join,
-    // cand, jump), so concurrent stages contend on the lazily
-    // materializing seed shuffle; the single-reference loops keep the
-    // fold, this one pays the init job for a deterministic round 1.
+    // EAGER, deliberately: the lazy-init fold (see [[fixedRounds]]) was
+    // A/B-measured here and showed NO benefit within host noise — round
+    // 1 references labels THREE times (neighbor join, cand, jump), so
+    // concurrent stages contend on the lazily materializing seed
+    // shuffle; the single-reference loops keep the fold, this one pays
+    // the init job for a deterministic round 1.
     var labels = edges.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint(true)
@@ -242,45 +242,68 @@ object GraphOps {
     * d = 85 that is |V| < 10¹¹ nodes: safe past the 10¹⁰-frontier
     * target with a 10× margin.
     *
-    * Scale design: outdeg is joined onto the edge list ONCE (persisted,
-    * partitioned by src — the same key every iteration's rank join
-    * reuses); each iteration is one edges⋈ranks join + one dst-keyed
-    * partial-agg sum + one left join back to the node set, with eager
-    * localCheckpoint truncating lineage per iteration (see
-    * [[connectedComponents]]).
+    * Runs [[authority]] with w = 1 on every edge row: parallel edges
+    * and self-loops stay separate rows, and (rank·1) div out_w is
+    * rank div outdeg bit for bit.
     */
   def linkAuthority(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
                     scale: Long = 1000000L,
-                    srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+                    srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    authority(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), lit(1L).as("w")),
+      seeds = None, iters, dampingPct, scale)
+
+  /** The fixed-point power iteration behind [[linkAuthority]],
+    * [[weightedAuthority]] and [[trustRank]] over weighted edge rows
+    * `we` = (src, dst, w): share = (rank·w) div out_w(src). The teleport
+    * (rank₀ = scale, then `base` each round) covers every node, or only
+    * the `seeds` (distinct `id`s). Plan: out_w is joined onto `we` ONCE
+    * (persisted, keyed by src, the key every round's rank join reuses);
+    * each [[fixedRounds]] round is one edges⋈ranks join + one dst-keyed
+    * partial-agg sum + one left join back to the node set.
+    */
+  private def authority(we: DataFrame, seeds: Option[DataFrame], iters: Int,
+                        dampingPct: Int, scale: Long): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // LAZY: the node set materializes inside round 1's checkpoint job
-    // (the rank₀ fold), later rounds read its cache
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
+    val ids = we.select(col("src").as("id"))
+      .unionByName(we.select(col("dst").as("id"))).distinct()
+    val nodes = seeds.fold(ids)(s =>
+        ids.join(s.withColumn("is_seed", lit(true)), Seq("id"), "left")
+          .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed")))
       .localCheckpoint(false)
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val eDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    def teleport(v: Long): Column =
+      if (seeds.isEmpty) lit(v) else when(col("is_seed"), v).otherwise(0L)
+    val outw = we.groupBy(col("src")).agg(sum(col("w")).as("outw"))
+    val eW = we.join(outw, "src").persist(StorageLevel.MEMORY_AND_DISK)
     val base = scale * (100 - dampingPct) / 100
-    // rank₀ is a pure projection over the checkpointed node set — it
-    // folds into round 1's job instead of paying its own checkpoint job
-    var ranks = nodes.select(col("id"), lit(scale).as("rank"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { _ =>
-      val contrib = eDeg.join(ranks, eDeg("src") === ranks("id"))
-        .select(col("dst"), expr("rank DIV outdeg").as("share"))
+    val rank0 = nodes.select(col("id"), teleport(scale).as("rank"))
+    val ranks = fixedRounds(nodes, rank0, iters) { ranks =>
+      val contrib = eW.join(ranks, eW("src") === ranks("id"))
+        .select(col("dst"), expr("(rank * w) DIV outw").as("share"))
         .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+      nodes.join(contrib, nodes("id") === contrib("dst"), "left")
         .select(col("id"),
-          (lit(base) + expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
+          (teleport(base) + expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
             .as("rank"))
-      ranks = ranks.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt) // superseded round
-      prevCkpt = ranks
     }
-    eDeg.unpersist()
-    Checkpoints.release(nodes) // final ranks is checkpointed; nodes is dead
+    eW.unpersist()
     ranks
+  }
+
+  /** `iters` rounds of `step` from `init`. Each round is checkpointed
+    * EAGERLY, which truncates its lineage (see [[connectedComponents]]);
+    * the superseded round is released once the next is materialized,
+    * and `nodes` after the last. The lazily checkpointed `nodes` and
+    * `init` over it materialize inside round 1's job.
+    */
+  private def fixedRounds(nodes: DataFrame, init: DataFrame, iters: Int)
+                         (step: DataFrame => DataFrame): DataFrame = {
+    val out = (1 to iters).foldLeft(init) { (prev, i) =>
+      val next = step(prev).localCheckpoint(true)
+      if (i > 1) Checkpoints.release(prev) // round 1's input is init, not a checkpoint
+      next
+    }
+    Checkpoints.release(nodes)
+    out
   }
 
   /** WEIGHTED authority over a COARSENED graph — the host-level (or
@@ -289,8 +312,7 @@ object GraphOps {
     * to groups; parallel edges become ONE weighted edge, self-loops —
     * intra-host links — drop), then rank flows along edges
     * PROPORTIONALLY to weight: share(e) = (rank·w_e) div out_w(src).
-    * Same fixed-point integer discipline as [[linkAuthority]] (ppm
-    * scale, floor division, eager per-round checkpoint release).
+    * Runs [[authority]] on the collapsed (src, dst, w = count) rows.
     *
     * Scale shape (100 TB): the collapse is the whole point — a 10¹¹-
     * edge page graph quotients to a ~10⁷-host graph in ONE (src,dst)
@@ -303,35 +325,10 @@ object GraphOps {
   def weightedAuthority(edges: DataFrame, iters: Int = 3, dampingPct: Int = 85,
                         scale: Long = 1000000L,
                         srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val we = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-    val nodes = we.select(col("src").as("id"))
-      .unionByName(we.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(false) // lazy: materializes in round 1's job
-    val outw = we.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val eW = we.join(outw, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val base = scale * (100 - dampingPct) / 100
-    // rank₀ lazy + optional lazy final round — the [[linkAuthority]]
-    // job-count discipline
-    var ranks = nodes.select(col("id"), lit(scale).as("rank"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contrib = eW.join(ranks, eW("src") === ranks("id"))
-        .select(col("dst"), expr("(rank * w) DIV outw").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit(base) + expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
-            .as("rank"))
-      ranks = ranks.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt)
-      prevCkpt = ranks
-    }
-    eW.unpersist()
-    Checkpoints.release(nodes)
-    ranks
+    authority(we, seeds = None, iters, dampingPct, scale)
   }
 
   /** Largest-remainder (Hamilton) apportionment of an integer crawl
@@ -385,14 +382,10 @@ object GraphOps {
     * PageRank among themselves (no seed in-path) decay to zero. The
     * spam-demotion half of a production frontier's priority score.
     *
-    * Same fixed-point integer discipline as [[linkAuthority]] (ppm
-    * scale, floor division, eager checkpoint per round, identical
-    * overflow bound): r₀ = scale on seeds / 0 elsewhere;
+    * Runs [[authority]] with w = 1 on every edge row and the teleport
+    * on the seeds (the [[linkAuthority]] overflow bound holds):
+    * r₀ = scale on seeds / 0 elsewhere;
     * rᵢ = (seed ? base : 0) + d·Σ_inlinks(rᵢ₋₁ div outdeg) div 100.
-    * Plan per round: one edges⋈ranks equi-join + one dst-keyed
-    * partial-agg sum + the node-set left join — no new shapes; the
-    * seed flag is a boolean column on the checkpointed node set, paid
-    * once.
     *
     * @param seeds one column of trusted node ids (whitelist); rows not
     *              in the graph are ignored
@@ -402,38 +395,9 @@ object GraphOps {
                 dampingPct: Int = 85, scale: Long = 1000000L,
                 srcCol: String = "src", dstCol: String = "dst",
                 seedCol: String = "id"): DataFrame = {
-    require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val we = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"), lit(1L).as("w"))
     val s = seeds.select(col(seedCol).as("id")).distinct()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .join(s.withColumn("is_seed", lit(true)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .localCheckpoint(false) // lazy: materializes in round 1's job
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val eDeg = e.join(outdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val base = scale * (100 - dampingPct) / 100
-    // rank₀ lazy + optional lazy final round — the [[linkAuthority]]
-    // job-count discipline
-    var ranks = nodes
-      .select(col("id"), when(col("is_seed"), scale).otherwise(0L).as("rank"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
-      val contrib = eDeg.join(ranks, eDeg("src") === ranks("id"))
-        .select(col("dst"), expr("rank DIV outdeg").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("m"))
-      ranks = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (when(col("is_seed"), base).otherwise(0L) +
-            expr(s"(bigint($dampingPct) * coalesce(m, bigint(0))) DIV 100"))
-            .as("rank"))
-      ranks = ranks.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt)
-      prevCkpt = ranks
-    }
-    eDeg.unpersist()
-    Checkpoints.release(nodes)
-    ranks.select(col("id"), col("rank").as("trust"))
+    authority(we, Some(s), iters, dampingPct, scale).select(col("id"), col("rank").as("trust"))
   }
 
   /** Minimum seed-distance (bounded BFS) over a directed link graph:
@@ -807,13 +771,11 @@ object GraphOps {
     * LPA answers "densely linked together" — the mirror-site /
     * link-farm / topic-community detector a crawl's host graph feeds.
     *
-    * Scale shape (per round, the [[trustRank]] discipline): ONE
-    * equi-join of the undirected edge list against the label frame +
-    * ONE (node, label) partial-agg count + the struct-min argmax re-agg
-    * — no windows, no sorts; eager localCheckpoint truncates the
-    * iterative lineage and releases the superseded round. The
-    * undirected edge list is built once (distinct, self-loops dropped)
-    * and persisted across rounds. Rounds are fixed (`iters`), not
+    * Scale shape (per round, run by [[fixedRounds]]): ONE equi-join of
+    * the undirected edge list against the label frame + ONE
+    * (node, label) partial-agg count + the struct-min argmax re-agg —
+    * no windows, no sorts. The undirected edge list is built once
+    * (distinct, self-loops dropped) and persisted across rounds. Rounds are fixed (`iters`), not
     * run-to-convergence: synchronous LPA can 2-cycle, and a fixed
     * round count is what an engine-independent oracle can replay.
     *
@@ -824,20 +786,16 @@ object GraphOps {
     require(iters >= 1)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // undirected neighbor list: both directions, self-loops dropped
-    val nbrs = e.filter(col("src") =!= col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(e.filter(col("src") =!= col("dst"))
-        .select(col("dst").as("a"), col("src").as("b")))
+    val ne = e.filter(col("src") =!= col("dst"))
+    val nbrs = ne.select(col("src").as("a"), col("dst").as("b"))
+      .unionByName(ne.select(col("dst").as("a"), col("src").as("b")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(false) // lazy: materializes in round 1's job
-    // label₀ lazy + optional lazy final round — the [[linkAuthority]]
-    // job-count discipline
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    var prevCkpt: DataFrame = null
-    (1 to iters).foreach { i =>
+      .localCheckpoint(false)
+    val label0 = nodes.select(col("id"), col("id").as("label"))
+    val labels = fixedRounds(nodes, label0, iters) { labels =>
       val counted = nbrs.join(labels, nbrs("b") === labels("id"))
         .groupBy(col("a"), col("label")).agg(count(lit(1)).as("cnt"))
       // argmax by (cnt desc, label asc) as a struct-min partial agg —
@@ -845,14 +803,10 @@ object GraphOps {
       val won = counted.groupBy(col("a"))
         .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
           .getField("l").as("new_label"))
-      labels = nodes.join(won, nodes("id") === won("a"), "left")
+      nodes.join(won, nodes("id") === won("a"), "left")
         .select(col("id"), coalesce(col("new_label"), col("id")).as("label"))
-      labels = labels.localCheckpoint(true)
-      if (prevCkpt != null) Checkpoints.release(prevCkpt)
-      prevCkpt = labels
     }
     nbrs.unpersist()
-    Checkpoints.release(nodes)
     labels
   }
 

@@ -55,9 +55,13 @@ final class FormData(values: Map[String, String]) {
   def float64(key: String, default: Double): Double = bind(key, default, _.toDoubleOption)
   def mandatoryFloat64(key: String): Double = mandatory(key, _.toDoubleOption, 0.0)
 
-  /** Go `time.ParseDuration` subset: `300ms`, `1.5s`, `2m`, `1h`, `1m30s`. */
-  def duration(key: String, default: Duration): Duration = bind(key, default, parseDuration)
-  def mandatoryDuration(key: String): Duration = mandatory(key, parseDuration, 0L.millis)
+  /** Go `time.ParseDuration`, in whole milliseconds
+    * ([[TextFunctions.parseGoDuration]]): `300ms`, `1.5s`, `1m30s`, `-2s`, `0`.
+    */
+  def duration(key: String, default: Duration): Duration =
+    bind(key, default, TextFunctions.parseGoDuration(_).map(_.millis))
+  def mandatoryDuration(key: String): Duration =
+    mandatory(key, TextFunctions.parseGoDuration(_).map(_.millis), 0L.millis)
 
   def inches(key: String, default: Double): Double =
     bind(key, default, TextFunctions.toInches)
@@ -85,25 +89,6 @@ final class FormData(values: Map[String, String]) {
     val parts = s.stripPrefix("[").stripSuffix("]").split(",").map(_.trim).filter(_.nonEmpty)
     val parsed = parts.flatMap(_.toIntOption)
     if (parsed.length == parts.length) Some(parsed.toSeq) else None
-  }
-
-  private val durRe = """(\d+(?:\.\d+)?)(ns|us|µs|ms|s|m|h)""".r
-
-  def parseDuration(s: String): Option[Duration] = {
-    val ms = durRe.findAllMatchIn(s).map { m =>
-      val v = m.group(1).toDouble
-      m.group(2) match {
-        case "ns" => v / 1e6
-        case "us" | "µs" => v / 1e3
-        case "ms" => v
-        case "s" => v * 1e3
-        case "m" => v * 60e3
-        case "h" => v * 3600e3
-      }
-    }.toSeq
-    val consumed = durRe.findAllMatchIn(s).map(_.matched.length).sum
-    if (ms.isEmpty || consumed != s.length) None
-    else Some(ms.sum.toLong.millis)
   }
 }
 

@@ -124,13 +124,8 @@ final class SnapshotStore(val root: String) {
     GraftBridge.writeParquet(df, dir, InProcessLocalFs.hadoopConf(df.sparkSession))
 
   /** Stage a table into the (uncommitted) snapshot `id`. */
-  def write(df: DataFrame, id: Int, table: String,
-            sortWithinPartitionsBy: Seq[String] = Nil): Unit = {
-    val out =
-      if (sortWithinPartitionsBy.nonEmpty)
-        df.sortWithinPartitions(sortWithinPartitionsBy.map(org.apache.spark.sql.functions.col): _*)
-      else df
-    writeParquet(out, tablePath(id, table))
+  def write(df: DataFrame, id: Int, table: String): Unit = {
+    writeParquet(df, tablePath(id, table))
     recordSchema(Paths.get(tablePath(id, table)), df.schema)
   }
 

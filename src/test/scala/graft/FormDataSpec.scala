@@ -30,13 +30,21 @@ class FormDataSpec extends AnyFunSuite {
   }
 
   test("duration parse: Go time.ParseDuration subset") {
-    val f = FormData(Map.empty)
-    assert(f.parseDuration("300ms") === Some(300.millis))
-    assert(f.parseDuration("1.5s") === Some(1500.millis))
-    assert(f.parseDuration("1m30s") === Some(90000.millis))
-    assert(f.parseDuration("2h") === Some(2.hours: Duration))
-    assert(f.parseDuration("10") === None)
-    assert(f.parseDuration("5 seconds") === None)
+    val dflt = 7.millis
+    def parsed(v: String): Option[Duration] = {
+      val f = FormData(Map("d" -> v))
+      val d = f.duration("d", dflt)
+      if (f.errors.isEmpty) Some(d) else { assert(d === dflt); None }
+    }
+    assert(parsed("300ms") === Some(300.millis))
+    assert(parsed("1.5s") === Some(1500.millis))
+    assert(parsed("1m30s") === Some(90000.millis))
+    assert(parsed("2h") === Some(2.hours: Duration))
+    assert(parsed("-2s") === Some(-2.seconds: Duration))
+    assert(parsed("0") === Some(Duration.Zero))
+    assert(parsed("3\u03bcs") === Some(Duration.Zero)) // Greek mu, truncated to ms
+    assert(parsed("10") === None)
+    assert(parsed("5 seconds") === None)
   }
 
   test("int list accepts JSON-ish and bare comma forms") {

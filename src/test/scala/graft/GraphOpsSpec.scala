@@ -456,9 +456,17 @@ class GraphOpsSpec extends SparkSpec {
       components(chain, bound).collect()
       assert(live() - before <= 1, s"connectedComponents leaked checkpoints at bound $bound")
     }
-    val b2 = live()
-    GraphOps.linkAuthority(chain.toDF("src", "dst"), iters = 4).collect()
-    assert(live() - b2 <= 1, "linkAuthority leaked checkpoints")
+    val links = chain.toDF("src", "dst")
+    Seq[(String, () => DataFrame)](
+      "linkAuthority" -> (() => GraphOps.linkAuthority(links, iters = 4)),
+      "weightedAuthority" -> (() => GraphOps.weightedAuthority(links, iters = 4)),
+      "trustRank" -> (() => GraphOps.trustRank(links, Seq(1L).toDF("id"), iters = 4)),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(links, iters = 4))
+    ).foreach { case (name, run) =>
+      val before = live()
+      run().collect()
+      assert(live() - before <= 1, s"$name leaked checkpoints")
+    }
     val b3 = live()
     GraphOps.bfsDepths(chain.toDF("src", "dst"), Seq(1L).toDF("id"), maxDepth = 8).collect()
     assert(live() - b3 <= 1, "bfsDepths leaked checkpoints")

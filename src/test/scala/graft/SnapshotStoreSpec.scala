@@ -553,9 +553,9 @@ class SnapshotStoreSpec extends SparkSpec {
     val sortedFrontier = frontier.toDF().sortWithinPartitions(col("priority").desc, col("seq"))
     assertSameFiles(store, "frontier", refs.resolve("frontier"),
       _.write(sortedFrontier, 0, "frontier"), writer(sortedFrontier).parquet)
+    val sortedFetchLog = fetchLog.sortWithinPartitions("url_canon")
     assertSameFiles(store, "fetch_log", refs.resolve("fetch_log"),
-      _.write(fetchLog, 0, "fetch_log", sortWithinPartitionsBy = Seq("url_canon")),
-      writer(fetchLog.sortWithinPartitions("url_canon")).parquet)
+      _.write(sortedFetchLog, 0, "fetch_log"), writer(sortedFetchLog).parquet)
     assertSameFiles(store, "pending", refs.resolve("pending"),
       _.write(pending.coalesce(1), 0, "pending"), writer(pending.coalesce(1)).parquet)
 
